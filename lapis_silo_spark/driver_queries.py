@@ -5026,36 +5026,6 @@ def q_pipeline_curation_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "dedup_embedding_pivot_pairs",
-    # the oracle is the PLAIN cosine join — pivots prune candidates but
-    # never appear in the (exact) output
-    """SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-              round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) AS cos
-       FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-       WHERE list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) >= 0.4""",
-)
-def q_dedup_embedding_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact embedding-cosine pairs via angular-pivot bucketing
-    (functions.dedup.embedding_near_dup_pairs_pivot): the exact form whose
-    candidate set SHRINKS with the threshold — θ = arccos(cos) is a metric,
-    so a qualifying pair's bucket ids differ by ≤1 on every pivot and only
-    adjacent-bucket tasks are scheduled (O(#buckets), vs the blocked form's
-    all-block-pairs grid). block_rows is forced small so the sf0.01 gate
-    exercises the hash sub-blocking inside buckets, and max_sub_blocks is
-    raised accordingly — at the oracle-friendly threshold 0.4 the bucket
-    width is hemisphere-scale by design (pruning engages at 0.9+; the gate
-    checks EXACTNESS across every task shape, the regime story is the
-    library contract)."""
-    from lapis_silo_spark.functions import dedup as fdedup
-
-    db = db_for(spark, sf_dir)
-    return fdedup.embedding_near_dup_pairs_pivot(
-        db.table("embeddings"), "vec_id", "embedding", threshold=0.4,
-        block_rows=256, max_sub_blocks=4096,
-    )
-
-
 # ---------------------------------------------------------------------------
 # Registry gate order
 # ---------------------------------------------------------------------------
@@ -5115,11 +5085,9 @@ _GATE_ORDER = [
     # representative relational core (21)
     "filter_equals_groupby_count",
     "filter_between_date",
-    # round-11 rotation (VERDICT r10 #4): filter_in_set / filter_like_regex
-    # ceded their slots to the pivot pair path and BPE encode — FilterNode
-    # keeps three reps in the window (equals/between/negation, the subtle
-    # semantics) and the rotated-out rows stay green in the full local gate
-    "dedup_embedding_pivot_pairs",
+    "filter_in_set",
+    # round-11 rotation (VERDICT r10 #4): filter_like_regex ceded its slot
+    # to BPE encode — the rotated-out row stays green in the full local gate
     "tokenizer_bpe_encode",
     "filter_negation_keeps_nulls",
     "filter_nof_exactly",

@@ -19,6 +19,8 @@ Design for 100 TB:
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame, Window
@@ -867,6 +869,44 @@ def cosine(a: Column, b: Column) -> Column:
 EXACT_EMBEDDING_MAX_ROWS = 1_000_000
 
 
+def _pairable() -> Column:
+    """The embedding pair family's degenerate-input policy over ``(id,
+    vec)``: a row can pair only if its id is not null and its vector's norm
+    is nonzero and not NaN. A null or zero vector has no cosine with
+    anything, and a null id cannot be named in a pair. A null element makes
+    the squared norm null (filtered out); a NaN element makes it NaN, which
+    must be tested EXPLICITLY — Spark sorts NaN above every number, so
+    ``NaN > 0`` is true."""
+    sq = F.aggregate("vec", F.lit(0.0), lambda a, x: a + x * x)
+    return F.col("id").isNotNull() & (sq > 0) & ~F.isnan(sq)
+
+
+def _pair_schema(id_type):
+    """``(id_a, id_b, cos)``, the output of every embedding pair form."""
+    from pyspark.sql import types as T
+
+    return T.StructType(
+        [
+            T.StructField("id_a", id_type),
+            T.StructField("id_b", id_type),
+            T.StructField("cos", T.DoubleType()),
+        ]
+    )
+
+
+def _id_dtype(id_type):
+    """numpy dtype for a pair id column, chosen from its SPARK type, not by
+    try/except: ``np.array([1.9], dtype=np.int64)`` does not raise — it
+    silently truncates to 1, which would emit wrong pair ids for
+    float-typed id columns."""
+    import numpy as np
+
+    from pyspark.sql import types as T
+
+    integral = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+    return np.int64 if isinstance(id_type, integral) else object
+
+
 def embedding_near_dup_pairs(
     df: DataFrame,
     id_col: str,
@@ -893,12 +933,11 @@ def embedding_near_dup_pairs(
     with no driver collect (hash-blocked block-pair matmuls, per-task
     memory independent of corpus size); when approximate recall suffices,
     :func:`lapis_silo_spark.functions.similarity.lsh_candidate_pairs`
-    avoids the n² compare entirely.
+    avoids the n² compare entirely. Degenerate rows are dropped by the
+    same policy as both (:func:`_pairable`).
     """
     import numpy as np
     import pandas as pd
-
-    from pyspark.sql import types as T
 
     id_type = df.schema[id_col].dataType
     n = df.count()
@@ -909,33 +948,25 @@ def embedding_near_dup_pairs(
             f"{n} rows (max_rows={max_rows}). Use "
             f"similarity.lsh_candidate_pairs for the scale path."
         )
+    out_schema = _pair_schema(id_type)
     rows = (
         df.select(F.col(id_col).alias("id"),
                   F.col(vec_col).cast("array<double>").alias("vec"))
+        .filter(_pairable())
         .collect()
     )
-    ids_list = [r["id"] for r in rows]
-    try:
-        all_ids = np.array(ids_list, dtype=np.int64)
-    except (TypeError, ValueError, OverflowError):
-        all_ids = np.array(ids_list, dtype=object)
+    if not rows:
+        return local_relation(df.sparkSession, [], out_schema)
+    all_ids = np.array([r["id"] for r in rows], dtype=_id_dtype(id_type))
     all_mat = np.array([r["vec"] for r in rows], dtype=np.float64)
     all_nrm = np.sqrt((all_mat * all_mat).sum(axis=1))
     bc = df.sparkSession.sparkContext.broadcast((all_ids, all_mat, all_nrm))
-
-    out_schema = T.StructType(
-        [
-            T.StructField("id_a", id_type),
-            T.StructField("id_b", id_type),
-            T.StructField("cos", T.DoubleType()),
-        ]
-    )
 
     stream = _spread(
         df,
         F.col(id_col).alias("id"),
         F.col(vec_col).cast("array<double>").alias("vec"),
-    )
+    ).filter(_pairable())
 
     def pair_batches(batches):
         b_ids, b_mat, b_nrm = bc.value
@@ -963,6 +994,98 @@ def embedding_near_dup_pairs(
     return stream.mapInPandas(pair_batches, schema=out_schema)
 
 
+def _block_pair_cosines(
+    rows: DataFrame,
+    threshold: float,
+    tag: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """Exact cosine pairs within groups of hash blocks — the one block-pair
+    stage behind :func:`embedding_near_dup_pairs_blocked` (one group) and
+    :func:`lapis_silo_spark.functions.similarity.lsh_candidate_pairs` (one
+    group per LSH bucket). Returns ``(id_a, id_b, cos)`` with ``id_a <
+    id_b``, an unrounded ``cos >= threshold`` test and ``round(cos, 6)``
+    — the contract of :func:`embedding_near_dup_pairs`.
+
+    ``rows`` is a projected ``(id, vec array<double>)`` frame. Degenerate
+    rows are dropped first (:func:`_pairable`); ``tag`` then maps the clean
+    rows to ``(grp, id, vec, nb)`` — a group key and that group's block
+    count — and each row lands in block ``pmod(xxhash64(id), nb)`` of its
+    group. A row in block ``blk`` is replicated into block pair ``(blk,
+    o)`` as side 0 for every ``o >= blk`` and into ``(o, blk)`` as side 1
+    for every ``o < blk``, by one ``transform(sequence(0, nb - 1))``; one
+    ``applyInPandas`` task per ``(grp, bi <= bj)`` then runs a single BLAS
+    (|A| × dim) · (dim × |B|) matmul. Every unordered pair of a group lands
+    in exactly ONE task, so a group's output is duplicate-free and does not
+    depend on ``nb``; the diagonal task keeps its own upper triangle by id.
+
+    Cost model (the blocked all-pairs trade of bandwidth for task memory):
+    - shuffle volume: each row is replicated ``nb`` times → O(rows · nb ·
+      dim) bytes, paid per group, so only large groups pay it;
+    - per-task memory: two blocks. Blocks come from a hash, so with ``nb =
+      ceil(|group| / block_rows)`` the bound ``2 · block_rows · dim · 8``
+      bytes holds in EXPECTATION, not as a hard cap; a hot group becomes
+      more tasks, not a bigger task;
+    - parallelism: ``nb · (nb + 1) / 2`` independent tasks per group.
+    """
+    import numpy as np
+
+    id_type = rows.schema["id"].dataType
+    id_dtype = _id_dtype(id_type)
+    tagged = tag(rows.filter(_pairable())).withColumn(
+        "blk", F.pmod(F.xxhash64(F.col("id")), F.col("nb")).cast("int")
+    )
+    grid = F.transform(
+        F.sequence(F.lit(0), F.col("nb") - 1),
+        lambda o: F.struct(
+            F.least(F.col("blk"), o).alias("bi"),
+            F.greatest(F.col("blk"), o).alias("bj"),
+            F.when(o >= F.col("blk"), F.lit(0)).otherwise(F.lit(1))
+            .alias("side"),
+        ),
+    )
+    replicated = tagged.select(
+        "grp", "id", "vec", F.explode(grid).alias("g")
+    ).select("grp", "g.bi", "g.bj", "g.side", "id", "vec")
+
+    def unpack(sub):
+        ids = np.array(list(sub["id"]), dtype=id_dtype)
+        mat = np.array(sub["vec"].tolist(), dtype=np.float64)
+        return ids, mat, np.sqrt((mat * mat).sum(axis=1))
+
+    def block_pair(key, pdf):
+        diagonal = key[1] == key[2]
+        a_pdf = pdf if diagonal else pdf[pdf["side"] == 0]
+        b_pdf = pdf if diagonal else pdf[pdf["side"] == 1]
+        if a_pdf.empty or b_pdf.empty:
+            return pd.DataFrame({"id_a": [], "id_b": [], "cos": []})
+        a_ids, a_mat, a_nrm = unpack(a_pdf)
+        b_ids, b_mat, b_nrm = (
+            (a_ids, a_mat, a_nrm) if diagonal else unpack(b_pdf)
+        )
+        with np.errstate(invalid="ignore"):  # inf elements → NaN cosine
+            cos = (a_mat @ b_mat.T) / np.outer(a_nrm, b_nrm)
+        hit = cos >= threshold
+        ia, ib = np.nonzero(hit & (b_ids[None, :] > a_ids[:, None]))
+        if diagonal:
+            ra = rb = np.array([], dtype=np.int64)
+        else:
+            # cross-block pairs where the side-1 member has the SMALLER id
+            ra, rb = np.nonzero(hit & (a_ids[:, None] > b_ids[None, :]))
+        return pd.DataFrame(
+            {
+                "id_a": np.concatenate([a_ids[ia], b_ids[rb]]),
+                "id_b": np.concatenate([b_ids[ib], a_ids[ra]]),
+                "cos": np.round(
+                    np.concatenate([cos[ia, ib], cos[ra, rb]]), 6
+                ),
+            }
+        )
+
+    return replicated.groupBy("grp", "bi", "bj").applyInPandas(
+        block_pair, schema=_pair_schema(id_type)
+    )
+
+
 def embedding_near_dup_pairs_blocked(
     df: DataFrame,
     id_col: str,
@@ -975,33 +1098,15 @@ def embedding_near_dup_pairs_blocked(
 ) -> DataFrame:
     """All pairs with cosine >= threshold — the DISTRIBUTED exact form.
 
-    Same contract as :func:`embedding_near_dup_pairs` (canonical
-    ``id_a < id_b`` pairs, unrounded threshold test, cosine rounded to 6 dp)
-    but nothing is ever collected to the driver: rows are hash-assigned to
-    ``n_blocks`` blocks (``pmod(xxhash64(id), n_blocks)`` — uniform by
-    construction, so block-pair tasks are balanced with no skew handling
-    needed), a tiny broadcast map replicates each row into every block pair
-    it participates in, and one ``applyInPandas`` task per ordered block
-    pair ``(bi <= bj)`` runs a single BLAS (|A| × dim) · (dim × |B|) matmul.
-
-    Cost model (the reason this is the cluster form of an inherently O(n²)
-    computation):
-    - shuffle volume: each row is replicated ``n_blocks`` times →
-      O(n · n_blocks · dim) bytes, the classic blocked all-pairs trade of
-      bandwidth for bounded task memory;
-    - per-task memory: 2 blocks ≈ ``2 · block_rows · dim · 8`` bytes,
-      independent of corpus size;
-    - parallelism: n_blocks · (n_blocks + 1) / 2 independent tasks.
-
-    Every unordered pair lands in exactly ONE block-pair task (the ordered
-    pair of its members' block ids), so no dropDuplicates pass is needed.
-    The diagonal task (bi == bj) keeps only the upper triangle by id.
+    Same contract as :func:`embedding_near_dup_pairs`, but nothing is ever
+    collected to the driver: the whole corpus is ONE group of
+    :func:`_block_pair_cosines` with ``nb = n_blocks`` hash blocks (its
+    docstring holds the cost model).
 
     ``n_blocks`` defaults to the stricter of ``ceil(count / block_rows)``
     (the per-task memory bound) and a parallelism target of ~2× the
     cluster's cores worth of block-pair tasks, floored at ~128 rows per
-    block (one count job; blocking never changes the output — every
-    unordered pair is computed in exactly one task under any blocking).
+    block (one count job; blocking never changes the output).
     Pass ``n_blocks`` explicitly to skip the count, e.g. from a known
     corpus size.
     At true 100 TB scale prefer :func:`lapis_silo_spark.functions.
@@ -1015,16 +1120,6 @@ def embedding_near_dup_pairs_blocked(
     """
     import math
 
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import types as T
-
-    spark = df.sparkSession
-    id_type = df.schema[id_col].dataType
-    id_integral = isinstance(
-        id_type, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-    )
     n = df.count() if n_blocks is None else None
     if not allow_quadratic:
         # when the exact count is already needed, reuse it; otherwise a
@@ -1058,350 +1153,16 @@ def embedding_near_dup_pairs_blocked(
         nb_floor = max(1, n // 128)
         n_blocks = max(nb_mem, min(nb_par, nb_floor), 1)
 
-    base = _spread(
+    rows = _spread(
         df,
         F.col(id_col).alias("id"),
         F.col(vec_col).cast("array<double>").alias("vec"),
-    ).withColumn(
-        "blk", F.pmod(F.xxhash64(F.col("id")), F.lit(n_blocks)).cast("int")
     )
-
-    # Replication map: block b → every ordered block pair it belongs to.
-    # side 0 = the bi member, side 1 = the bj member; the diagonal pair is
-    # emitted once (side 0) and handles its own upper triangle.
-    # Built DISTRIBUTIVELY (spark.range + explode(sequence) — the upper
-    # triangle as one generator row per bi), never as a driver-side
-    # Python list: at the default n_blocks = ceil(n / 8192) a ~1e8-row
-    # corpus would otherwise materialize ~75M tuples through
-    # createDataFrame on the driver.
-    tri = spark.range(n_blocks).select(
-        F.col("id").cast("int").alias("bi"),
-        F.explode(
-            F.sequence(F.col("id").cast("int"), F.lit(n_blocks - 1))
-        ).alias("bj"),
-    )
-    assign = tri.select(
-        F.col("bi").alias("blk"), "bi", "bj", F.lit(0).alias("side")
-    ).unionAll(
-        tri.filter(F.col("bi") != F.col("bj")).select(
-            F.col("bj").alias("blk"), "bi", "bj", F.lit(1).alias("side")
-        )
-    )
-
-    replicated = base.join(F.broadcast(assign), on="blk").select(
-        "bi", "bj", "side", "id", "vec"
-    )
-
-    out_schema = T.StructType(
-        [
-            T.StructField("id_a", id_type),
-            T.StructField("id_b", id_type),
-            T.StructField("cos", T.DoubleType()),
-        ]
-    )
-
-    def block_pairs(key, pdf):
-        bi, bj = key
-
-        def unpack(sub):
-            ids_list = list(sub["id"])
-            if not ids_list:
-                empty = np.empty((0, 0), dtype=np.float64)
-                return np.array([], dtype=np.int64), empty, np.array([])
-            # Branch on the id column's SPARK type, not try/except:
-            # np.array([1.9], dtype=np.int64) does not raise — it silently
-            # truncates to 1, which would emit wrong pair ids for
-            # float-typed id columns.
-            if id_integral:
-                ids = np.array(ids_list, dtype=np.int64)
-            else:
-                ids = np.array(ids_list, dtype=object)
-            mat = np.array(sub["vec"].tolist(), dtype=np.float64)
-            nrm = np.sqrt((mat * mat).sum(axis=1))
-            return ids, mat, nrm
-
-        if bi == bj:
-            a_ids, a_mat, a_nrm = unpack(pdf)
-            b_ids, b_mat, b_nrm = a_ids, a_mat, a_nrm
-        else:
-            a_ids, a_mat, a_nrm = unpack(pdf[pdf["side"] == 0])
-            b_ids, b_mat, b_nrm = unpack(pdf[pdf["side"] == 1])
-        if len(a_ids) == 0 or len(b_ids) == 0:
-            return pd.DataFrame({"id_a": [], "id_b": [], "cos": []})
-        with np.errstate(invalid="ignore", divide="ignore"):
-            cos = (a_mat @ b_mat.T) / np.outer(a_nrm, b_nrm)
-        keep = (b_ids[None, :] > a_ids[:, None]) & (cos >= threshold)
-        ia, ib = np.nonzero(keep)
-        if bi != bj:
-            # cross-block pairs where the bj member has the SMALLER id
-            keep_r = (a_ids[:, None] > b_ids[None, :]) & (cos >= threshold)
-            ra, rb = np.nonzero(keep_r)
-        else:
-            ra = rb = np.array([], dtype=np.int64)
-        return pd.DataFrame(
-            {
-                "id_a": np.concatenate([a_ids[ia], b_ids[rb]]),
-                "id_b": np.concatenate([b_ids[ib], a_ids[ra]]),
-                "cos": np.round(
-                    np.concatenate([cos[ia, ib], cos[ra, rb]]), 6
-                ),
-            }
-        )
-
-    return replicated.groupBy("bi", "bj").applyInPandas(
-        block_pairs, schema=out_schema
-    )
-
-
-def embedding_near_dup_pairs_pivot(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    threshold: float = 0.95,
-    n_pivots: int = 4,
-    block_rows: int = 8192,
-    max_sub_blocks: int = 64,
-    seed: int = 7,
-) -> DataFrame:
-    """All pairs with cosine >= threshold — the exact form whose CANDIDATE
-    SET shrinks with the threshold (the missing scale path for the exact
-    embedding-pair family, round-9 VERDICT "what's wrong" #1: the blocked
-    form bounds per-task memory but still evaluates every block pair).
-
-    Pruning is metric, not probabilistic, so the result is EXACT (same
-    contract as :func:`embedding_near_dup_pairs_blocked`: canonical
-    ``id_a < id_b``, unrounded threshold test, cosine rounded to 6 dp —
-    the DuckDB oracle is the plain cosine-join SQL, pivots never appear in
-    the output): angular distance ``θ(a,b) = arccos(cos(a,b))`` is a
-    metric on the unit sphere, so for any pivot ``p`` the triangle
-    inequality gives ``|θ(a,p) − θ(b,p)| ≤ θ(a,b)``. A qualifying pair has
-    ``θ(a,b) ≤ w = arccos(threshold)``; bucketing every row by
-    ``floor(θ(row, p) / w)`` therefore confines its matches to the SAME or
-    ADJACENT bucket — only consecutive-bucket tasks exist, O(#buckets)
-    of them instead of the blocked form's O(n_blocks²). Additional pivots
-    don't change the task graph; their bucket ids ride along and mask
-    candidates inside each task (``|b_i(a) − b_i(b)| ≤ 1`` for every i),
-    multiplicatively cutting the matmul's survivor set.
-
-    Within each bucket pair, rows are further hash-split into
-    ``ceil(max_bucket_rows / block_rows)`` sub-blocks (the blocked form's
-    memory contract: per-task memory ~ 2·block_rows·dim doubles regardless
-    of corpus size; replication ~ 3·n_sub per row).
-
-    Regime contract: pruning power is ``w``-driven — at verification-grade
-    thresholds (0.9+, w ≤ 26°) a pivot splits the sphere into many buckets
-    and candidates collapse toward true pairs; at low thresholds
-    (0.4 → w = 66°) buckets are hemisphere-sized and this degrades
-    gracefully to the blocked form's cost. Zero-norm/null vectors have no
-    angle and can never clear a positive threshold; they are excluded up
-    front (output-identical to the blocked form's NaN-fails-threshold).
-    Intended for ``0 < threshold < 1``: at ``threshold >= 1.0`` the bucket
-    width collapses to zero, the angular-bucket count is no longer bounded
-    by ``π/w`` (one bucket per DISTINCT angle — potentially the row count),
-    and the call is rejected with guidance (round-10 ADVICE) — exact
-    duplicates want :func:`embedding_near_dup_pairs_blocked` or a
-    direction-keyed groupBy, not a degenerate pivot grid. The regime limit
-    is MACHINE-ENFORCED (the family's guard contract): when the densest
-    angular bucket needs more than ``max_sub_blocks`` hash sub-blocks,
-    replication (~3·n_sub per row) and the task grid are degenerating
-    toward all-pairs, and the call raises with guidance instead of
-    submitting it.
-    """
-    import math
-
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import types as T
-
-    if threshold >= 1.0:
-        raise ValueError(
-            f"embedding_near_dup_pairs_pivot: threshold={threshold} >= 1.0 "
-            f"collapses the angular bucket width to zero (one bucket per "
-            f"distinct angle — the O(pi/w) driver-side bucket list would "
-            f"be unbounded). For exact duplicates use "
-            f"embedding_near_dup_pairs_blocked at threshold just under 1, "
-            f"or group by the normalized direction vector."
-        )
-
-    spark = df.sparkSession
-    id_type = df.schema[id_col].dataType
-    id_integral = isinstance(
-        id_type, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-    )
-    w = math.acos(max(-1.0, min(1.0, threshold)))
-
-    base = _spread(
-        df,
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("vec"),
-    ).filter(
-        F.col("vec").isNotNull()
-        & (F.aggregate(F.transform(F.col("vec"), lambda x: x * x),
-                       F.lit(0.0), lambda s, v: s + v) > 0)
-    )
-
-    # deterministic pivots; the FIRST drives the task graph, the rest mask
-    dim = None
-    probe = base.select(F.size("vec").alias("d")).first()
-    if probe is None:
-        return local_relation(
-            spark, [],
-            T.StructType([
-                T.StructField("id_a", id_type),
-                T.StructField("id_b", id_type),
-                T.StructField("cos", T.DoubleType()),
-            ]),
-        )
-    dim = probe["d"]
-    rng = np.random.default_rng(seed)
-    pivots = rng.standard_normal((n_pivots, dim))
-    pivots /= np.sqrt((pivots * pivots).sum(axis=1, keepdims=True))
-    bc_piv = spark.sparkContext.broadcast(pivots)
-
-    @F.pandas_udf("array<int>")
-    def bucket_ids(vecs: pd.Series) -> pd.Series:
-        piv = bc_piv.value
-        mat = np.array(vecs.tolist(), dtype=np.float64)
-        nrm = np.sqrt((mat * mat).sum(axis=1, keepdims=True))
-        cos = np.clip((mat @ piv.T) / nrm, -1.0, 1.0)
-        b = np.floor(np.arccos(cos) / w).astype(np.int32)
-        return pd.Series(list(b))
-
-    marked = base.withColumn("bk", bucket_ids("vec")).withColumn(
-        "b1", F.element_at("bk", 1)
-    )
-
-    # size the hash sub-blocking from the LARGEST pivot-1 bucket (one small
-    # aggregation job — the exact family's standing count-job contract)
-    stats = (
-        marked.groupBy("b1").count()
-        .agg(F.max("count").alias("mx"), F.collect_set("b1").alias("bs"))
-        .first()
-    )
-    n_sub = max(1, math.ceil((stats["mx"] or 0) / block_rows))
-    buckets = sorted(stats["bs"] or [])
-    bset = set(buckets)
-    if n_sub > max_sub_blocks:
-        raise ValueError(
-            f"embedding_near_dup_pairs_pivot: the densest angular bucket "
-            f"holds {stats['mx']} rows -> {n_sub} sub-blocks "
-            f"(max_sub_blocks={max_sub_blocks}); at threshold={threshold} "
-            f"(bucket width {math.degrees(w):.1f} deg) pivot pruning has "
-            f"degenerated toward all-pairs. Raise the threshold, raise "
-            f"max_sub_blocks for a controlled run, or use "
-            f"embedding_near_dup_pairs_blocked / "
-            f"similarity.lsh_candidate_pairs."
-        )
-
-    marked = marked.withColumn(
-        "sub", F.pmod(F.xxhash64(F.col("id")), F.lit(n_sub)).cast("int")
-    )
-
-    # task table: same-bucket ordered sub-pairs + adjacent-bucket full
-    # sub-grid. Only the O(π/w) bucket/adjacency lists are driver-side
-    # (bounded by construction now threshold >= 1.0 is rejected); the
-    # O(buckets · n_sub²) grid itself is built DISTRIBUTIVELY from
-    # spark.range cross-joins — with the registered max_sub_blocks=4096
-    # the grid can reach tens of millions of rows, which must never be a
-    # driver-built Python list (round-10 ADVICE).
-    adj_pairs = [(b, b + 1) for b in buckets if (b + 1) in bset]
-    bdf = local_relation(spark, [(b,) for b in buckets], "tb int")
-    adjdf = local_relation(spark, adj_pairs, "tb int, tb2 int")
-    grid = spark.range(n_sub).select(
-        F.col("id").cast("int").alias("si")
-    ).crossJoin(
-        spark.range(n_sub).select(F.col("id").cast("int").alias("sj"))
-    )
-
-    def task_rows(pref, b_col, sub_col, ti_col, tj_col, side):
-        return pref.select(
-            F.col(b_col).alias("b1"), F.col(sub_col).alias("sub"),
-            F.col(ti_col).alias("ti"), F.col(tj_col).alias("tj"),
-            "si", "sj", F.lit(side).alias("side"),
-        )
-
-    same = bdf.crossJoin(grid.filter(F.col("si") <= F.col("sj")))
-    adjx = adjdf.crossJoin(grid)
-    assign = (
-        task_rows(same, "tb", "si", "tb", "tb", 0)
-        .unionAll(task_rows(same.filter(F.col("si") != F.col("sj")),
-                            "tb", "sj", "tb", "tb", 1))
-        .unionAll(task_rows(adjx, "tb", "si", "tb", "tb2", 0))
-        .unionAll(task_rows(adjx, "tb2", "sj", "tb", "tb2", 1))
-    )
-
-    # broadcast only when the grid is provably small (its exact row count
-    # is computable from the stats job); a huge grid joins by shuffle,
-    # where AQE's skew handling applies
-    n_assign = (len(buckets) + 2 * len(adj_pairs)) * n_sub * n_sub
-    if n_assign <= 2_000_000:
-        assign = F.broadcast(assign)
-    replicated = marked.join(
-        assign, on=["b1", "sub"]
-    ).select("ti", "tj", "si", "sj", "side", "id", "vec", "bk")
-
-    out_schema = T.StructType(
-        [
-            T.StructField("id_a", id_type),
-            T.StructField("id_b", id_type),
-            T.StructField("cos", T.DoubleType()),
-        ]
-    )
-
-    def bucket_pairs(key, pdf):
-        ti, tj, si, sj = key
-        diagonal = (ti == tj) and (si == sj)
-
-        def unpack(sub):
-            ids_list = list(sub["id"])
-            if not ids_list:
-                empty = np.empty((0, 0), dtype=np.float64)
-                return (np.array([], dtype=np.int64), empty,
-                        np.array([]), empty)
-            if id_integral:
-                ids = np.array(ids_list, dtype=np.int64)
-            else:
-                ids = np.array(ids_list, dtype=object)
-            mat = np.array(sub["vec"].tolist(), dtype=np.float64)
-            nrm = np.sqrt((mat * mat).sum(axis=1))
-            bks = np.array(sub["bk"].tolist(), dtype=np.int64)
-            return ids, mat, nrm, bks
-
-        if diagonal:
-            a_ids, a_mat, a_nrm, a_bk = unpack(pdf)
-            b_ids, b_mat, b_nrm, b_bk = a_ids, a_mat, a_nrm, a_bk
-        else:
-            a_ids, a_mat, a_nrm, a_bk = unpack(pdf[pdf["side"] == 0])
-            b_ids, b_mat, b_nrm, b_bk = unpack(pdf[pdf["side"] == 1])
-        if len(a_ids) == 0 or len(b_ids) == 0:
-            return pd.DataFrame({"id_a": [], "id_b": [], "cos": []})
-        # secondary-pivot mask: every pivot's buckets must be adjacent
-        mask = np.ones((len(a_ids), len(b_ids)), dtype=bool)
-        for p in range(1, a_bk.shape[1]):
-            mask &= np.abs(a_bk[:, p][:, None] - b_bk[:, p][None, :]) <= 1
-        cos = (a_mat @ b_mat.T) / np.outer(a_nrm, b_nrm)
-        keep = mask & (b_ids[None, :] > a_ids[:, None]) & (cos >= threshold)
-        ia, ib = np.nonzero(keep)
-        if not diagonal:
-            keep_r = (
-                mask & (a_ids[:, None] > b_ids[None, :]) & (cos >= threshold)
-            )
-            ra, rb = np.nonzero(keep_r)
-        else:
-            ra = rb = np.array([], dtype=np.int64)
-        return pd.DataFrame(
-            {
-                "id_a": np.concatenate([a_ids[ia], b_ids[rb]]),
-                "id_b": np.concatenate([b_ids[ib], a_ids[ra]]),
-                "cos": np.round(
-                    np.concatenate([cos[ia, ib], cos[ra, rb]]), 6
-                ),
-            }
-        )
-
-    return replicated.groupBy("ti", "tj", "si", "sj").applyInPandas(
-        bucket_pairs, schema=out_schema
+    return _block_pair_cosines(
+        rows, threshold,
+        lambda clean: clean.select(
+            F.lit(0).alias("grp"), "id", "vec", F.lit(n_blocks).alias("nb")
+        ),
     )
 
 
@@ -2083,10 +1844,11 @@ def embedding_dedup_clusters(
        itself (an equality key, so no float-digest tricks); only each
        group's minimum id proceeds. Exact-duplicate embeddings (re-crawled
        or re-encoded docs) never reach pair generation — the embedding
-       analog of the minhash digest stage. Zero-norm vectors are excluded
-       from grouping (cosine with them is NaN, so the pair stage would
-       never merge them; grouping them would over-merge vs the pair
-       semantics) and pass through as their own representatives.
+       analog of the minhash digest stage. Null, zero-norm and NaN
+       vectors are excluded from grouping (the pair stage would never
+       merge them; grouping them would over-merge vs the pair semantics)
+       and pass through as their own representatives. Rows with a null id
+       are dropped, as in every pair form.
     2. **Distributed pair generation over representatives only** —
        ``method="blocked"`` (:func:`embedding_near_dup_pairs_blocked`,
        exact, one BLAS matmul per block pair) or ``method="lsh"``
@@ -2113,21 +1875,15 @@ def embedding_dedup_clusters(
         df,
         F.col(id_col).alias("id"),
         F.col(vec_col).cast("array<double>").alias("vec"),
-    )
-    # coalesce: a null vector (or one containing a null element) aggregates
-    # to a null sum — treat it like zero-norm so the row passes through as
-    # its own singleton representative instead of silently vanishing from
-    # both filter branches (the contract is one output row per input row).
-    # NaN sums are degenerate too, and must be excluded EXPLICITLY: Spark
-    # sorts NaN above every double, so `NaN > 0` is TRUE — without the
-    # isnan() a NaN-element vector would enter the groupBy('vec')
-    # short-circuit (Spark treats NaN = NaN as equal) and the LSH pair
-    # stage, whose NaN cosine passes `>= threshold` and over-merges.
-    sq = F.aggregate("vec", F.lit(0.0), lambda a, x: a + x * x)
-    with_nz = base.withColumn(
-        "_nz",
-        F.coalesce((sq > F.lit(0.0)) & ~F.isnan(sq), F.lit(False)),
-    )
+    ).filter(F.col("id").isNotNull())
+    # Rows the pair policy rejects (:func:`_pairable` — null, zero-norm or
+    # NaN vectors) pass through as their own singleton representatives:
+    # the contract is one output row per input row with a non-null id.
+    # coalesce: a null vector's policy verdict is null, which would drop
+    # the row from both filter branches. The NaN test matters here too:
+    # Spark treats NaN = NaN as equal, so a NaN vector must not enter the
+    # groupBy('vec') short-circuit.
+    with_nz = base.withColumn("_nz", F.coalesce(_pairable(), F.lit(False)))
     nz = with_nz.filter(F.col("_nz"))
     reps_nz = nz.groupBy("vec").agg(F.min("id").alias("rep_id"))
     rep_map = (
@@ -2139,11 +1895,9 @@ def embedding_dedup_clusters(
             )
         )
     )
-    rep_ids = rep_map.select(F.col("rep_id").alias("id")).distinct()
-    # pair generation sees NON-degenerate representatives only: a zero-norm
-    # or null vector can never clear a cosine threshold, and the numpy pair
-    # paths assume dense float arrays — degenerate ids still join the
-    # propagation universe (rep_ids) and come out as singleton clusters
+    # pair generation sees NON-degenerate representatives only — degenerate
+    # ids still join the propagation universe (rep_map) and come out as
+    # singleton clusters
     rep_docs = base.join(
         reps_nz.select(F.col("rep_id").alias("id")), on="id", how="left_semi"
     )

@@ -15,7 +15,12 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from lapis_silo_spark.functions.dedup import cosine, dot, norm
+from lapis_silo_spark.functions.dedup import (
+    _block_pair_cosines,
+    cosine,
+    dot,
+    norm,
+)
 from lapis_silo_spark.session import local_relation
 
 
@@ -536,180 +541,57 @@ def lsh_candidate_pairs(
     Plane coefficients are md5-derived (``_hyperplane_component``) so an
     external SQL engine can reproduce the candidate set exactly.
 
-    Execution shape (round 12): candidates are verified INSIDE per-bucket
-    chunked numpy matmuls — the quadratic candidate row set never
-    materializes. The previous shape (bucket self-join → dropDuplicates →
-    two id-keyed vector joins) shuffled O(Σ_b |b|²) candidate ROWS; on an
-    LLM-scale run (sf10, fixed 2^6 buckets per table) the candidate
-    sort-merge spilled until the disk filled. Here each bucket's rows are
-    hash-split into ``ceil(|bucket| / block_rows)`` blocks and one
-    ``applyInPandas`` task per (bucket, bi ≤ bj) block pair runs a single
-    BLAS (|A| × dim) · (dim × |B|) matmul (the
-    ``embedding_near_dup_pairs_blocked`` kernel, per bucket) — per-task
-    memory is bounded by ``2 · block_rows · dim · 8`` bytes regardless of
-    bucket skew (guide §2.5: a hot bucket becomes more tasks, not a bigger
-    task), shuffle volume is O(n_tables · rows · ceil(|bucket| /
-    block_rows) · dim) — the blocked all-pairs bandwidth-for-memory trade,
-    paid only inside hot buckets — and only verified survivors (cos ≥
-    threshold) reach the cross-table ``dropDuplicates``. Buckets holding a
-    single row are dropped before any replication (they cannot produce a
-    pair; on a spread-out corpus most buckets are singletons).
-
-    Every unordered in-bucket pair lands in exactly ONE (bi, bj) task of
-    that bucket, so per-bucket output is duplicate-free by construction;
-    a pair surviving in several tables is collapsed by the final
-    ``dropDuplicates`` over the (small) verified set. The cosine is
-    computed in float64 numpy exactly as the blocked/exact paths do
-    (unrounded threshold test, then ``round(cos, 6)``) — value-parity with
-    the previous expression form is pinned by the oracle gate and
+    Candidates are verified INSIDE per-bucket blocked matmuls — the
+    quadratic candidate row set never materializes: every bucket is one
+    group of :func:`lapis_silo_spark.functions.dedup._block_pair_cosines`
+    with ``nb = ceil(|bucket| / block_rows)`` (its docstring holds the cost
+    model and the degenerate-input policy). Buckets holding a single row
+    are dropped before any replication (they cannot produce a pair; on a
+    spread-out corpus most buckets are singletons). A pair surviving in
+    several tables is collapsed by the final ``dropDuplicates`` over the
+    (small) verified set. Value-parity with the earlier bucket-self-join
+    form is pinned by the oracle gate and
     ``test_lsh_candidate_pairs_value_identical_to_join_form``.
     """
-    import numpy as np
-    import pandas as pd
 
-    id_type = df.schema[id_col].dataType
-    id_integral = isinstance(
-        id_type, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-    )
-
-    vecs = (
-        df.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).cast("array<double>").alias("vec"),
-        )
-        .withColumn("nrm", norm(F.col("vec")))
-        # zero-norm vectors have no cosine with anything (the exact
-        # baseline's NaN never passes the threshold) and would
-        # divide-by-zero under ANSI mode — drop them before bucketing.
-        # NaN norms must be dropped EXPLICITLY: Spark orders NaN above
-        # every number, so `NaN > 0` is TRUE and `NaN >= threshold` later
-        # would accept the bogus cosine (numpy's comparisons are false for
-        # NaN — the blocked/exact paths already reject these rows)
-        .filter((F.col("nrm") > 0) & ~F.isnan("nrm"))
-        .select("id", "vec")
-    )
-
-    # vecs feeds two plan branches (bucket occupancy + the replicated pair
-    # stage, each re-running the hyperplane matmul) — persist once; storage
-    # memory is LRU-evictable so repeated calls stay bounded.
-    vecs = vecs.persist()
-
-    # Bucket occupancy: ONLY the bucket label crosses this exchange (guide
-    # §2.3 — project before the shuffle); nb = per-bucket block count.
-    sizes = (
-        vecs.select(
-            F.explode(
-                lsh_table_buckets("vec", n_planes, n_tables, dim)
-            ).alias("bucket")
-        )
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") >= 2)
-        .select(
-            "bucket",
-            F.ceil(F.col("_n") / F.lit(block_rows)).cast("int").alias("nb"),
-        )
-    )
-
-    bw = (
-        vecs.select(
-            "id", "vec",
-            F.explode(
-                lsh_table_buckets("vec", n_planes, n_tables, dim)
-            ).alias("bucket"),
+    def tag(clean: DataFrame) -> DataFrame:
+        # clean feeds two plan branches (bucket occupancy + the replicated
+        # pair stage, each re-running the hyperplane matmul) — persist once;
+        # storage memory is LRU-evictable so repeated calls stay bounded.
+        clean = clean.persist()
+        # Bucket occupancy: ONLY the bucket label crosses this exchange
+        # (guide §2.3 — project before the shuffle).
+        sizes = (
+            clean.select(
+                F.explode(
+                    lsh_table_buckets("vec", n_planes, n_tables, dim)
+                ).alias("grp")
+            )
+            .groupBy("grp")
+            .agg(F.count(F.lit(1)).alias("_n"))
+            .filter(F.col("_n") >= 2)
+            .select(
+                "grp",
+                F.ceil(F.col("_n") / F.lit(block_rows)).cast("int").alias("nb"),
+            )
         )
         # inner join == semi-join + nb attach (sizes is a distinct-key
         # aggregate); broadcast-vs-shuffle left to the planner — at the
         # declared 6-plane/4-table settings sizes has ≤ 256 rows
-        .join(sizes, "bucket")
-        .withColumn(
-            "blk", F.pmod(F.xxhash64(F.col("id")), F.col("nb")).cast("int")
-        )
+        return clean.select(
+            "id", "vec",
+            F.explode(
+                lsh_table_buckets("vec", n_planes, n_tables, dim)
+            ).alias("grp"),
+        ).join(sizes, "grp")
+
+    rows = df.select(
+        F.col(id_col).alias("id"),
+        F.col(vec_col).cast("array<double>").alias("vec"),
     )
-
-    # Replication map, built per row (nb is a column, so the blocked path's
-    # broadcast triangle table does not apply): row in block `blk` joins
-    # block-pair (blk, o) as side 0 for o ≥ blk and (o, blk) as side 1 for
-    # o < blk; the diagonal (o == blk) is emitted once and keeps its own
-    # upper triangle by id. One expression over sequence(0, nb-1) — no
-    # descending-sequence edge case at blk = 0.
-    grid = F.transform(
-        F.sequence(F.lit(0), F.col("nb") - 1),
-        lambda o: F.struct(
-            F.least(F.col("blk"), o).alias("bi"),
-            F.greatest(F.col("blk"), o).alias("bj"),
-            F.when(o >= F.col("blk"), F.lit(0)).otherwise(F.lit(1))
-            .alias("side"),
-        ),
+    return _block_pair_cosines(rows, threshold, tag).dropDuplicates(
+        ["id_a", "id_b"]
     )
-    replicated = (
-        bw.select("bucket", "id", "vec", F.explode(grid).alias("g"))
-        .select(
-            "bucket", F.col("g.bi").alias("bi"), F.col("g.bj").alias("bj"),
-            F.col("g.side").alias("side"), "id", "vec",
-        )
-    )
-
-    out_schema = T.StructType(
-        [
-            T.StructField("id_a", id_type),
-            T.StructField("id_b", id_type),
-            T.StructField("cos", T.DoubleType()),
-        ]
-    )
-
-    def bucket_block_pairs(key, pdf):
-        bi, bj = key[1], key[2]
-
-        def unpack(sub):
-            ids_list = list(sub["id"])
-            if not ids_list:
-                empty = np.empty((0, 0), dtype=np.float64)
-                return np.array([], dtype=np.int64), empty, np.array([])
-            # branch on the Spark id type, not try/except — np.int64 of a
-            # float id silently truncates instead of raising
-            if id_integral:
-                ids = np.array(ids_list, dtype=np.int64)
-            else:
-                ids = np.array(ids_list, dtype=object)
-            mat = np.array(sub["vec"].tolist(), dtype=np.float64)
-            nrm = np.sqrt((mat * mat).sum(axis=1))
-            return ids, mat, nrm
-
-        if bi == bj:
-            a_ids, a_mat, a_nrm = unpack(pdf)
-            b_ids, b_mat, b_nrm = a_ids, a_mat, a_nrm
-        else:
-            a_ids, a_mat, a_nrm = unpack(pdf[pdf["side"] == 0])
-            b_ids, b_mat, b_nrm = unpack(pdf[pdf["side"] == 1])
-        if len(a_ids) == 0 or len(b_ids) == 0:
-            return pd.DataFrame({"id_a": [], "id_b": [], "cos": []})
-        with np.errstate(invalid="ignore", divide="ignore"):
-            cos = (a_mat @ b_mat.T) / np.outer(a_nrm, b_nrm)
-        # unrounded threshold test, then round — matches the SQL form
-        # WHERE cos >= t ... SELECT round(cos, 6)
-        keep = (b_ids[None, :] > a_ids[:, None]) & (cos >= threshold)
-        ia, ib = np.nonzero(keep)
-        if bi != bj:
-            # cross-block pairs where the bj member has the SMALLER id
-            keep_r = (a_ids[:, None] > b_ids[None, :]) & (cos >= threshold)
-            ra, rb = np.nonzero(keep_r)
-        else:
-            ra = rb = np.array([], dtype=np.int64)
-        return pd.DataFrame(
-            {
-                "id_a": np.concatenate([a_ids[ia], b_ids[rb]]),
-                "id_b": np.concatenate([b_ids[ib], a_ids[ra]]),
-                "cos": np.round(
-                    np.concatenate([cos[ia, ib], cos[ra, rb]]), 6
-                ),
-            }
-        )
-
-    verified = replicated.groupBy("bucket", "bi", "bj").applyInPandas(
-        bucket_block_pairs, schema=out_schema
-    )
-    return verified.dropDuplicates(["id_a", "id_b"])
 
 
 # -- product quantization ----------------------------------------------------

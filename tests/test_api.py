@@ -161,11 +161,6 @@ _BNLJ_WHITELIST = {
     "text_tfidf_top_terms",
     # ONE-row corpus-token-total broadcast — same device
     "text_unigram_perplexity",
-    # task-grid build: spark.range(n_sub)^2 crossed with the O(pi/w)
-    # bucket/adjacency lists — bounded by the max_sub_blocks guard and the
-    # threshold<1.0 rejection, never data-sized; the data-side join onto
-    # the embeddings is an equi-join on (b1, sub)
-    "dedup_embedding_pivot_pairs",
 }
 
 

@@ -257,136 +257,6 @@ def test_blocked_pairs_quadratic_guard(vectors):
     assert {(r["id_a"], r["id_b"]) for r in pairs.collect()} == {(1, 2)}
 
 
-def test_embedding_near_dup_pivot_matches_exact(spark):
-    """The pivot-bucketed exact form (angular triangle-inequality pruning)
-    must equal the collect+broadcast baseline bit-for-bit at every
-    threshold regime — pruning is metric, never lossy."""
-    import numpy as np
-
-    rng = np.random.default_rng(11)
-    mat = rng.normal(size=(80, 8))
-    mat[10] = mat[3] + 0.01 * rng.normal(size=8)
-    mat[41] = mat[20] + 0.01 * rng.normal(size=8)
-    mat[77] = mat[41] + 0.01 * rng.normal(size=8)
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in mat[i]]) for i in range(80)],
-        schema="vec_id long, embedding array<double>",
-    )
-    for t in (0.3, 0.6, 0.95):
-        exact = {
-            (r["id_a"], r["id_b"]): r["cos"]
-            for r in dedup.embedding_near_dup_pairs(
-                df, "vec_id", "embedding", threshold=t
-            ).collect()
-        }
-        pivot = {
-            (r["id_a"], r["id_b"]): r["cos"]
-            for r in dedup.embedding_near_dup_pairs_pivot(
-                df, "vec_id", "embedding", threshold=t
-            ).collect()
-        }
-        assert pivot == exact, t
-    # multi-sub-block path: force tiny blocks so bucket-internal hash
-    # splitting and every task shape (diagonal, cross-sub, cross-bucket)
-    # is exercised
-    pivot_small = {
-        (r["id_a"], r["id_b"]): r["cos"]
-        for r in dedup.embedding_near_dup_pairs_pivot(
-            df, "vec_id", "embedding", threshold=0.6, block_rows=16
-        ).collect()
-    }
-    exact6 = {
-        (r["id_a"], r["id_b"]): r["cos"]
-        for r in dedup.embedding_near_dup_pairs(
-            df, "vec_id", "embedding", threshold=0.6
-        ).collect()
-    }
-    assert exact6 and pivot_small == exact6
-
-
-def test_embedding_near_dup_pivot_prunes_at_high_threshold(spark):
-    """At verification-grade thresholds the adjacent-bucket task graph must
-    be strictly smaller than the blocked form's all-block-pairs grid:
-    vectors along well-separated directions land in non-adjacent angular
-    buckets and never meet in any task."""
-    import math
-
-    import numpy as np
-
-    # three tight direction-clusters, far apart on the sphere
-    dirs = np.array([[1.0, 0, 0, 0], [0, 1.0, 0, 0], [-1.0, 0, 0, 0]])
-    rows = []
-    rng = np.random.default_rng(5)
-    for c, d in enumerate(dirs):
-        for i in range(12):
-            v = d + 0.01 * rng.normal(size=4)
-            rows.append((c * 100 + i, [float(x) for x in v]))
-    df = spark.createDataFrame(
-        rows, schema="vec_id long, embedding array<double>"
-    )
-    t = 0.95
-    pairs = dedup.embedding_near_dup_pairs_pivot(
-        df, "vec_id", "embedding", threshold=t
-    )
-    got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
-    want = {
-        (r["id_a"], r["id_b"])
-        for r in dedup.embedding_near_dup_pairs(
-            df, "vec_id", "embedding", threshold=t
-        ).collect()
-    }
-    assert got == want and len(got) == 3 * (12 * 11) // 2
-    # structural pruning claim: every emitted pair sits within one angular
-    # bucket width of its partner on EVERY pivot, so cross-cluster work
-    # was never scheduled. Verify via the bucket ids themselves.
-    w = math.acos(t)
-    piv = np.random.default_rng(7).standard_normal((4, 4))
-    piv /= np.sqrt((piv * piv).sum(axis=1, keepdims=True))
-    vecs = {i: np.array(v) for i, v in rows}
-
-    def buckets(v):
-        n = v / np.sqrt((v * v).sum())
-        return np.floor(np.arccos(np.clip(piv @ n, -1, 1)) / w)
-
-    b0 = buckets(vecs[0])
-    b100 = buckets(vecs[100])
-    assert (np.abs(b0 - b100) > 1).any()  # clusters 0/1 provably pruned
-
-
-def test_embedding_near_dup_pivot_guard_and_edges(spark, vectors):
-    """Regime guard (densest bucket > max_sub_blocks sub-blocks refuses
-    with guidance) + zero-norm/null/empty-input edge cases."""
-    import pytest
-
-    with pytest.raises(ValueError, match="max_sub_blocks"):
-        dedup.embedding_near_dup_pairs_pivot(
-            vectors, "vec_id", "embedding", threshold=0.95,
-            block_rows=1, max_sub_blocks=1,
-        )
-    # threshold >= 1.0 collapses the bucket width to zero: the O(pi/w)
-    # bucket-list bound no longer holds, so the call must refuse with
-    # guidance instead of collecting an unbounded bucket set (r10 ADVICE)
-    with pytest.raises(ValueError, match="threshold"):
-        dedup.embedding_near_dup_pairs_pivot(
-            vectors, "vec_id", "embedding", threshold=1.0
-        )
-    degen = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [1.0, 0.01]), (3, [0.0, 0.0]), (4, None)],
-        schema="vec_id long, embedding array<double>",
-    )
-    got = {
-        (r["id_a"], r["id_b"])
-        for r in dedup.embedding_near_dup_pairs_pivot(
-            degen, "vec_id", "embedding", threshold=0.95
-        ).collect()
-    }
-    assert got == {(1, 2)}
-    empty = degen.filter("vec_id > 99")
-    assert dedup.embedding_near_dup_pairs_pivot(
-        empty, "vec_id", "embedding", threshold=0.95
-    ).collect() == []
-
-
 def test_embedding_dedup_clusters_matches_pairwise(spark):
     """The fused O(docs) form must reproduce dedup_cluster_assignment over
     the exact pair set — for BOTH pair methods on a corpus with planted
@@ -512,6 +382,83 @@ def test_embedding_dedup_clusters_null_and_zero_vectors(spark):
     for i in (3, 4, 5):
         assert out[i]["cluster_id"] == i
         assert out[i]["cluster_size"] == 1 and out[i]["is_canonical"]
+
+
+def _edge_frame(spark, case):
+    """Three tight direction clusters (five near-duplicates each along
+    orthogonal axes, so every true pair clears 0.9 by a wide margin and
+    every cross-cluster pair is near 0) plus the edge rows of ``case``."""
+    import numpy as np
+
+    rng = np.random.default_rng(3)
+    rows = []
+    for c in range(3):
+        axis = np.eye(4)[c]
+        for i in range(5):
+            v = axis + 1e-3 * rng.normal(size=4)
+            rows.append((c * 10 + i, [float(x) for x in v]))
+    near0 = [float(x) for x in np.eye(4)[0] + 1e-3]
+    rows += {
+        "null_ids": [(None, near0), (None, [0.0, 0.0, 0.0, 1.0])],
+        "null_vectors": [(100, None), (101, [1.0, None, 0.0, 0.0])],
+        "nan_elements": [(100, [float("nan"), 1.0, 0.0, 0.0]),
+                         (101, [1.0, float("nan"), 0.0, 0.0])],
+        "zero_norm": [(100, [0.0] * 4), (101, [0.0] * 4)],
+        "empty": [],
+        "string_ids": [],
+    }[case]
+    id_type = "long"
+    if case == "empty":
+        rows = []
+    elif case == "string_ids":
+        id_type = "string"
+        rows = [(f"d{i:03d}", v) for i, v in rows]
+    return spark.createDataFrame(
+        rows, schema=f"vec_id {id_type}, embedding array<double>"
+    )
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["null_ids", "null_vectors", "nan_elements", "zero_norm", "empty",
+     "string_ids"],
+)
+def test_embedding_pair_forms_agree_on_edge_inputs(spark, case):
+    """One degenerate-input policy for every embedding pair and cluster
+    form: null ids, null vectors and vectors whose norm is zero or NaN
+    never pair, an empty frame gives no rows, and string ids come back
+    exact. Every form must equal the driver all-pairs reference."""
+    df = _edge_frame(spark, case)
+    t = 0.9
+
+    def pairs(frame):
+        return {(r["id_a"], r["id_b"]): r["cos"] for r in frame.collect()}
+
+    want = pairs(dedup.embedding_near_dup_pairs(df, "vec_id", "embedding", t))
+    if case != "empty":
+        assert len(want) == 3 * 10  # C(5, 2) per cluster
+    for nb in (1, 3):
+        got = pairs(dedup.embedding_near_dup_pairs_blocked(
+            df, "vec_id", "embedding", t, n_blocks=nb
+        ))
+        assert got == want, ("blocked", nb)
+    got = pairs(similarity.lsh_candidate_pairs(
+        df, "vec_id", "embedding", t, n_planes=2, n_tables=8, dim=4,
+        block_rows=3,
+    ))
+    assert got == want, "lsh"
+
+    want_clusters = sorted(map(tuple, dedup.dedup_cluster_assignment(
+        df.filter(F.col("vec_id").isNotNull()),
+        dedup.embedding_near_dup_pairs(df, "vec_id", "embedding", t),
+        "vec_id",
+    ).collect()))
+    for method in ("blocked", "lsh"):
+        got = sorted(map(tuple, dedup.embedding_dedup_clusters(
+            df, "vec_id", "embedding", t, method=method, n_blocks=3,
+            n_planes=2, n_tables=8, dim=4,
+        ).collect()))
+        assert got == want_clusters, method
 
 
 def test_remove_duplicate_char_spans_null_text(spark):

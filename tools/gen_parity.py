@@ -5,8 +5,9 @@ source / ingestion step) to its engine implementation, its oracle-gated
 registry rows, and its test anchors. The generator RESOLVES each anchor
 instead of trusting prose:
 
-- implementation symbols are imported and located via ``inspect`` (file and
-  line regenerate themselves when code moves);
+- implementation symbols are imported and located via ``inspect`` and
+  written as ``path::qualname`` (no line number, so code moving inside a
+  file never makes the table stale);
 - registry rows are checked against the live ``__spark_entry__.queries()``
   registry, and marked with whether they sit inside the driver's 50-slot
   gate window;
@@ -221,6 +222,9 @@ SECTIONS: list[tuple[str, list[tuple]]] = [
 
 
 def resolve_symbol(spec: str) -> str:
+    """``path::qualname`` of the symbol's definition. No line number, so an
+    unrelated edit above the symbol cannot make the table stale; an import
+    or attribute that no longer resolves still fails generation."""
     mod_name, attr_path = spec.split(":")
     obj = importlib.import_module(mod_name)
     for part in attr_path.split("."):
@@ -229,13 +233,13 @@ def resolve_symbol(spec: str) -> str:
     if isinstance(target, (staticmethod, classmethod)):
         target = target.__func__
     try:
-        _, line = inspect.getsourcelines(target)
         fn = inspect.getsourcefile(target)
-    except TypeError:  # plain attribute — anchor the module
+        qualname = target.__qualname__
+    except (TypeError, AttributeError):  # plain attribute — its module
         fn = inspect.getsourcefile(importlib.import_module(mod_name))
-        line = 1
+        qualname = attr_path
     rel = os.path.relpath(fn, REPO)
-    return f"`{rel}:{line}`"
+    return f"`{rel}::{qualname}`"
 
 
 def generate() -> str:
