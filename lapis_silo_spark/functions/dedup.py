@@ -1382,91 +1382,14 @@ def _driver_union_find(us, vs):
     return {x: find(x) for x in nodes}
 
 
-def _cc_label_map(
-    pairs: DataFrame,
-    pair_a: str,
-    pair_b: str,
-    driver_edge_limit: int | None = None,
-) -> dict | None:
-    """Bounded-probe connected components on the driver (round 11).
-
-    One ``limit(N+1).toPandas()`` job doubles as the size probe and the
-    edge fetch (same discipline as the former in-loop fast path): when the
-    RAW pair list is at most ``driver_edge_limit`` rows (default
-    :data:`CC_DRIVER_EDGE_LIMIT`), union-find runs driver-side and the
-    NON-IDENTITY ``{node: component_min_id}`` entries return as a plain
-    dict — identity entries are dropped because every consumer attaches
-    labels with ``coalesce(map[node], node)``, which makes the untouched /
-    self-labeled cases free (no ids-universe distinct, no anti-join, no
-    union — the stages the old DataFrame-shaped fast path still paid).
-    Returns ``None`` when the edge list exceeds the bound (caller falls
-    back to :func:`_min_label_propagation` with the probe disabled).
-    """
-    limit = (
-        CC_DRIVER_EDGE_LIMIT if driver_edge_limit is None else driver_edge_limit
-    )
-    if not limit:
-        return None
-    raw = pairs.select(F.col(pair_a).alias("u"), F.col(pair_b).alias("v"))
-    # Drop null endpoints BEFORE the fetch (round-11 ADVICE): the equi-join
-    # semantics of the distributed path never match them anyway, and a
-    # single null in either column makes pandas coerce the whole int64
-    # column to float64 — _driver_union_find's `is None` guard never fires
-    # on NaN, and the float keys/labels would mismatch the LongType schema
-    # handed to local_relation.
-    raw = raw.filter(F.col("u").isNotNull() & F.col("v").isNotNull())
-    pdf = raw.limit(limit + 1).toPandas()
-    if len(pdf) > limit:
-        return None
-    labels = _driver_union_find(pdf["u"].tolist(), pdf["v"].tolist())
-    return {n: lbl for n, lbl in labels.items() if n != lbl}
-
-
-def _apply_label_map(
-    frame: DataFrame, rep_col: str, mapping: dict, out_col: str
-) -> DataFrame:
-    """Attach driver-computed component labels to ``frame``:
-    ``out_col = coalesce(map[rep_col], rep_col)`` via a LEFT broadcast
-    join against the non-identity entries (a pure-JVM ``local_relation``,
-    so no Python worker in any downstream job). Bounded by the same
-    :data:`CC_DRIVER_EDGE_LIMIT` contract as the probe — at most
-    2×edges rows, the same volume the old fast path already shipped
-    driver-side as a LocalRelation."""
-    from pyspark.sql import types as T
-
-    from lapis_silo_spark.session import local_relation
-
-    dt = frame.schema[rep_col].dataType
-    lm = local_relation(
-        frame.sparkSession,
-        sorted(mapping.items()),
-        T.StructType(
-            [T.StructField("_cc_node", dt), T.StructField("_cc_label", dt)]
-        ),
-    )
-    joined = frame.join(
-        F.broadcast(lm), frame[rep_col] == lm["_cc_node"], "left"
-    )
-    return joined.withColumn(
-        out_col, F.coalesce(F.col("_cc_label"), F.col(rep_col))
-    ).drop("_cc_node", "_cc_label")
-
-
-def _min_label_propagation(
-    ids: DataFrame,
-    pairs: DataFrame,
-    pair_a: str,
-    pair_b: str,
-    max_iterations: int,
-    driver_edge_limit: int | None = None,
-) -> DataFrame:
-    """Connected components by min-label propagation over an ``(id)``
-    universe and an edge list; returns ``(labels, guard)`` where labels is
-    ``(id, label)`` (label = the component's minimum id) backed by a
-    checkpoint whose storage the caller must tie to its result's lifetime
-    (``cache.scoped_rdd_release``). Shared core of
-    :func:`dedup_cluster_assignment` and :func:`minhash_dedup_clusters` —
-    see the former's docstring for the convergence rationale.
+def _min_label_propagation(edges: DataFrame, max_iterations: int):
+    """Connected components by distributed min-label propagation over a
+    null-free ``(u, v)`` edge list; returns ``(labels, guard)`` where labels
+    is ``(id, label)`` for every edge endpoint (label = the component's
+    minimum id) backed by a checkpoint whose storage the caller must tie to
+    its result's lifetime (``cache.scoped_rdd_release``). Only
+    :func:`_component_labels` calls it, for edge lists above
+    :data:`CC_DRIVER_EDGE_LIMIT`.
 
     Two resource disciplines, both load-bearing (each was a measured bug):
 
@@ -1478,89 +1401,23 @@ def _min_label_propagation(
       reclaims localCheckpoint RDDs, so superseded rounds unpersist as the
       loop advances and the final checkpoint is scoped to the result.
 
-    Scale shape: propagation runs ONLY over nodes with at least one edge —
-    a node with no near-duplicates keeps its own label by construction, so
-    the per-round join/aggregate is O(nodes-in-pairs), not O(universe)
-    (near-dups are sparse at corpus scale); the untouched remainder unions
-    back in before the final checkpoint.
-
-    Small-edge-set fast path: each propagation round pays ~0.8-1 s of fixed
-    Spark job overhead (join + min-agg + localCheckpoint + convergence
-    probe), so when a bounded ``limit(N+1)`` fetch shows the RAW pair list
-    is at most ``driver_edge_limit`` rows (default
-    :data:`CC_DRIVER_EDGE_LIMIT`; pass ``0`` to force the distributed
-    loop), the pairs are collected and union-found on the driver — the
-    same bounded-collect discipline as ``operators/phylo.py`` — and the
-    labels return as a pure-JVM ``local_relation``. Identical fixpoint
-    (label = component min id); the probe doubles as the fetch (one job),
-    and the fast path skips the both-directions/distinct expansion
-    entirely (union-find is undirected and duplicate-tolerant).
+    Scale shape: the per-round join/aggregate is O(edge endpoints), not
+    O(universe) — an id with no near-duplicates never enters the loop and
+    keeps its own label by the caller's ``coalesce``.
     """
-    from lapis_silo_spark.cache import _CacheGuard, checkpoint_tracked
+    from pyspark.sql import types as T
 
-    raw = pairs.select(F.col(pair_a).alias("u"), F.col(pair_b).alias("v"))
-    # Null-endpoint edges never match the propagation equi-joins and never
-    # enter the union-find (see _cc_label_map's pandas-coercion rationale);
-    # filtering them once here keeps BOTH paths value-identical and the
-    # probe's pandas columns integer-typed.
-    raw = raw.filter(F.col("u").isNotNull() & F.col("v").isNotNull())
+    from lapis_silo_spark.cache import checkpoint_tracked
 
-    limit = CC_DRIVER_EDGE_LIMIT if driver_edge_limit is None else driver_edge_limit
-    if limit:
-        # probe + fetch straight off the pair pipeline — ONE job, no
-        # checkpoint write (round 11: the former checkpoint-then-fetch
-        # spent an extra eager job + an RDD materialization on the fast
-        # path's only large input; the pair stages' own scoped sig/vec
-        # caches materialize here and serve the rare fallback recompute)
-        pdf = raw.limit(limit + 1).toPandas()
-        if len(pdf) <= limit:
-            from pyspark.sql import types as T
-
-            from lapis_silo_spark.session import local_relation
-
-            labels_map = _driver_union_find(
-                pdf["u"].tolist(), pdf["v"].tolist()
-            )
-            dt = ids.schema["id"].dataType
-            touched_labels = local_relation(
-                ids.sparkSession,
-                sorted(labels_map.items()),
-                T.StructType(
-                    [T.StructField("id", dt), T.StructField("label", dt)]
-                ),
-            )
-            # anti-join against the labeled nodes themselves (NOT a
-            # touched-set derived from raw edges): a node whose only
-            # edges have a null partner has no label and must fall
-            # through to the untouched self-label path
-            untouched = ids.join(
-                touched_labels.select("id"), "id", "left_anti"
-            ).select("id", F.col("id").alias("label"))
-            # LAZY persist, not an eager checkpoint: the fast-path lineage
-            # is shallow (LocalRelation + one anti-join), so plan-size
-            # truncation is moot — the cache just stops the caller's
-            # multi-reference consumption (sizes agg + join) recomputing
-            # the anti-join, without paying a separate materialization job
-            final = touched_labels.union(untouched).persist()
-            return final, _CacheGuard(final)
-
-    # fallback (edge list above the driver bound, or probe disabled):
-    # one checkpoint materializes the pair pipeline for every round —
-    # recomputing it once here is the price of the probe-first fast path,
-    # paid only when the edge list is genuinely propagation-sized
-    raw_cp, raw_guard = checkpoint_tracked(raw)
-    fwd = raw_cp
+    # one checkpoint materializes the pair pipeline for both directions
+    raw_cp, raw_guard = checkpoint_tracked(edges)
     rev = raw_cp.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    edges, edges_guard = checkpoint_tracked(fwd.union(rev).distinct())
+    edges, edges_guard = checkpoint_tracked(raw_cp.union(rev).distinct())
     raw_guard.release()
 
-    touched = edges.select(F.col("u").alias("id")).distinct()
-    # the universe feeds the propagation seed AND the untouched anti-join;
-    # its lineage can be expensive (digest agg + doc semi-join in the fused
-    # cluster path) — cache it for the function's duration
-    ids = ids.persist()
     labels, labels_guard = checkpoint_tracked(
-        ids.join(touched, "id", "left_semi")
+        edges.select(F.col("u").alias("id"))
+        .distinct()
         .select("id", F.col("id").alias("label"))
     )
     # Convergence signal: labels only ever DECREASE under min-propagation,
@@ -1569,9 +1426,7 @@ def _min_label_propagation(
     # first-class in the pair stages) F.sum over the label column is no
     # signal at all (null / ANSI cast error), so compare rounds exactly
     # with an any-row-changed probe over the two checkpoint leaves.
-    from pyspark.sql import types as T
-
-    id_is_numeric = isinstance(ids.schema["id"].dataType, T.NumericType)
+    id_is_numeric = isinstance(labels.schema["id"].dataType, T.NumericType)
     prev_sum = (
         labels.agg(F.sum("label")).first()[0] if id_is_numeric else None
     )
@@ -1600,17 +1455,73 @@ def _min_label_propagation(
         labels, labels_guard = new_labels, new_guard
         if converged:
             break
-
-    untouched = ids.join(touched, "id", "left_anti").select(
-        "id", F.col("id").alias("label")
-    )
-    # checkpoint the UNION so the returned plan is one leaf — everything it
-    # was built from (rounds, edges, the universe cache) can then release
-    final, final_guard = checkpoint_tracked(labels.union(untouched))
-    labels_guard.release()
     edges_guard.release()
-    ids.unpersist()
-    return final, final_guard
+    return labels, labels_guard
+
+
+def _component_labels(
+    frame: DataFrame,
+    rep_col: str,
+    pairs: DataFrame,
+    pair_a: str,
+    pair_b: str,
+    max_iterations: int,
+):
+    """The connected-components stage of every cluster emitter: ``frame``
+    plus ``cluster_id`` = the minimum id of ``frame[rep_col]``'s component
+    in the ``(pair_a, pair_b)`` graph (its own id when it has no edge).
+    Returns ``(labeled, guard)``; ``guard`` (``None`` on the driver route)
+    must be tied to the result's lifetime with ``cache.scoped_rdd_release``.
+
+    Null-endpoint edges are dropped once here: the propagation equi-joins
+    would never match them, and a single null makes pandas coerce an int64
+    column to float64 (float labels would mismatch the LongType schema of
+    the label table).
+
+    Route choice, one bounded ``limit(N+1).toPandas()`` job that doubles as
+    the size probe and the edge fetch: an edge list of at most
+    :data:`CC_DRIVER_EDGE_LIMIT` rows is union-found on the driver
+    (:func:`_driver_union_find`) and its non-identity labels broadcast as a
+    pure-JVM ``local_relation``; a larger one runs
+    :func:`_min_label_propagation`. Both label only edge endpoints and
+    attach the same way — a left join, then ``coalesce(label, rep)`` — so
+    the two routes agree by construction. The fixpoint is a component's
+    minimum id, which may be an endpoint outside ``frame``; a caller whose
+    pairs can name such ids filters them first.
+    """
+    from pyspark.sql import types as T
+
+    edges = pairs.select(
+        F.col(pair_a).alias("u"), F.col(pair_b).alias("v")
+    ).filter(F.col("u").isNotNull() & F.col("v").isNotNull())
+    pdf = edges.limit(CC_DRIVER_EDGE_LIMIT + 1).toPandas()
+    if len(pdf) <= CC_DRIVER_EDGE_LIMIT:
+        found = _driver_union_find(pdf["u"].tolist(), pdf["v"].tolist())
+        dt = frame.schema[rep_col].dataType
+        schema = T.StructType(
+            [T.StructField("_cc_node", dt), T.StructField("_cc_label", dt)]
+        )
+        labels = F.broadcast(
+            local_relation(
+                frame.sparkSession,
+                sorted((n, lbl) for n, lbl in found.items() if n != lbl),
+                schema,
+            )
+        )
+        guard = None
+    else:
+        labels, guard = _min_label_propagation(edges, max_iterations)
+        labels = labels.select(
+            F.col("id").alias("_cc_node"), F.col("label").alias("_cc_label")
+        )
+    labeled = (
+        frame.join(labels, frame[rep_col] == labels["_cc_node"], "left")
+        .withColumn(
+            "cluster_id", F.coalesce(F.col("_cc_label"), F.col(rep_col))
+        )
+        .drop("_cc_node", "_cc_label")
+    )
+    return labeled, guard
 
 
 def dedup_cluster_assignment(
@@ -1629,66 +1540,46 @@ def dedup_cluster_assignment(
     output actionable: transitive closure, so A~B plus B~C dedups A,B,C
     together even though (A,C) was never emitted.
 
-    Algorithm: min-label propagation — labels start as ids; each round every
-    node takes the min of its own and its neighbors' labels, until fixpoint.
-    Rounds are bounded by the cluster diameter (near-dup components are
-    shallow; the 30-round cap is generous), each round is one equi-join +
-    one map-side-combinable min-aggregate, and the driver loop is the
+    Pairs with a null endpoint or an endpoint outside ``universe`` are
+    dropped, so the output is exactly one row per distinct universe id with
+    one canonical row per cluster.
+
+    Algorithm: :func:`_component_labels` — a driver union-find for edge
+    lists up to :data:`CC_DRIVER_EDGE_LIMIT`, otherwise min-label
+    propagation: labels start as ids; each round every node takes the min
+    of its own and its neighbors' labels, until fixpoint. Rounds are
+    bounded by the cluster diameter (near-dup components are shallow; the
+    30-round cap is generous), each round is one equi-join + one
+    map-side-combinable min-aggregate, and the driver loop is the
     canonical Spark iterative shape (GraphX connectedComponents does the
-    same propagation). Convergence detection exploits monotonicity for
-    NUMERIC ids: labels only ever DECREASE, so the label sum is strictly
-    decreasing until the fixpoint — one cheap global aggregate per round;
-    string ids (where a sum is no signal) fall back to an exact
-    any-row-changed probe between the round's two checkpoint leaves.
-    Per-round checkpoints are explicitly released;
-    the final one is scoped to the returned DataFrame's lifetime (see
-    :func:`_min_label_propagation`).
+    same propagation).
     """
     from lapis_silo_spark.cache import scoped_persist, scoped_rdd_release
 
     ids = universe.select(F.col(id_col).alias("id")).distinct()
-
-    # Driver fast path (round 11): attach labels as coalesce(map[id], id)
-    # over a broadcast of the non-identity entries — no anti-join, no
-    # union, no label-table checkpoint; the distinct ids frame is the only
-    # distributed input and is persisted for its two consumers (sizes agg
-    # + final join).
-    mapping = _cc_label_map(pairs, pair_a, pair_b)
-    if mapping is not None:
-        lbl = _apply_label_map(ids, "id", mapping, "cluster_id")
-        lbl = lbl.persist()
-        sizes = lbl.groupBy("cluster_id").agg(
-            F.count(F.lit(1)).alias("cluster_size")
-        )
-        out = lbl.join(sizes, on="cluster_id").select(
-            F.col("id"),
-            F.col("cluster_id"),
-            F.col("cluster_size"),
-            (F.col("id") == F.col("cluster_id")).alias("is_canonical"),
-        )
-        return scoped_persist(lbl, out)
-
-    labels, guard = _min_label_propagation(
-        ids, pairs, pair_a, pair_b, max_iterations, driver_edge_limit=0
+    inside = (
+        pairs.select(F.col(pair_a).alias("u"), F.col(pair_b).alias("v"))
+        .join(ids.select(F.col("id").alias("u")), "u", "left_semi")
+        .join(ids.select(F.col("id").alias("v")), "v", "left_semi")
     )
-
+    lbl, guard = _component_labels(ids, "id", inside, "u", "v", max_iterations)
+    # lbl is read twice (sizes agg + final join)
+    lbl = lbl.persist()
     # cluster_size via groupBy + join, NOT a cluster-keyed window: a
     # mega-cluster (billions of twins of one boilerplate doc — the corpus
     # this operator exists for) would make the window a single task AQE
     # cannot split, while the join's one-row-per-cluster build side is
     # skew-splittable (round-7 verdict #3; same doctrine as substring dedup).
-    sizes = labels.groupBy("label").agg(
+    sizes = lbl.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("cluster_size")
     )
-    return scoped_rdd_release(
-        labels.join(sizes, on="label").select(
-            F.col("id"),
-            F.col("label").alias("cluster_id"),
-            F.col("cluster_size"),
-            (F.col("id") == F.col("label")).alias("is_canonical"),
-        ),
-        guard,
+    out = lbl.join(sizes, on="cluster_id").select(
+        F.col("id"),
+        F.col("cluster_id"),
+        F.col("cluster_size"),
+        (F.col("id") == F.col("cluster_id")).alias("is_canonical"),
     )
+    return scoped_rdd_release(scoped_persist(lbl, out), guard)
 
 
 def minhash_dedup_clusters(
@@ -1723,8 +1614,8 @@ def minhash_dedup_clusters(
        standard ``minhash_lsh_pairs`` plan (band-bucket join, never rows²);
        its pair output here is bounded by near-dup relations between
        *distinct* texts, the irreducible edge set.
-    3. **Min-label propagation** collapses representative pairs into
-       connected components (transitive closure), then every doc joins back
+    3. **Connected components** (:func:`_component_labels`) collapse
+       representative pairs (transitive closure), then every doc joins back
        through its digest: ``cluster_id`` = min doc id of the component
        (each representative is already its digest group's min id, so the
        component's min representative IS the cluster's global min id).
@@ -1773,24 +1664,9 @@ def minhash_dedup_clusters(
         n_bands=n_bands, k=k, hash_fn=hash_fn, max_band_freq=max_band_freq,
     )
 
-    guard = None
-    mapping = _cc_label_map(pairs, "id_a", "id_b")
-    if mapping is not None:
-        # labels attach as coalesce(map[rep_id], rep_id) on the O(reps)
-        # aggregate directly — no propagation seed, no comp join, no
-        # untouched anti-join/union (round 11)
-        gl = _apply_label_map(g, "rep_id", mapping, "cluster_id")
-    else:
-        labels, guard = _min_label_propagation(
-            g.select(F.col("rep_id").alias("id")), pairs, "id_a", "id_b",
-            max_iterations, driver_edge_limit=0,
-        )
-        gl = g.join(
-            labels.select(
-                F.col("id").alias("rep_id"), F.col("label").alias("cluster_id")
-            ),
-            on="rep_id",
-        )
+    gl, guard = _component_labels(
+        g, "rep_id", pairs, "id_a", "id_b", max_iterations
+    )
     # gl is read twice (sizes agg + doc join) — persist the O(reps) table
     gl = gl.persist()
 
@@ -1810,9 +1686,7 @@ def minhash_dedup_clusters(
         )
     )
     out = scoped_persist(gl, scoped_persist(digests, out))
-    if guard is not None:
-        out = scoped_rdd_release(out, guard)
-    return out
+    return scoped_rdd_release(out, guard)
 
 
 def embedding_dedup_clusters(
@@ -1855,8 +1729,8 @@ def embedding_dedup_clusters(
        (:func:`~lapis_silo_spark.functions.similarity.lsh_candidate_pairs`,
        the sublinear-candidates path). The pair list exists only inside
        this plan, never as output.
-    3. **Min-label propagation** collapses representative pairs into
-       connected components; every row joins back through its vector
+    3. **Connected components** (:func:`_component_labels`) collapse
+       representative pairs; every row joins back through its vector
        group. ``cluster_id`` = min id of the component (representatives
        are their group minima, so the component's min representative IS
        the cluster's global min id).
@@ -1896,8 +1770,8 @@ def embedding_dedup_clusters(
         )
     )
     # pair generation sees NON-degenerate representatives only — degenerate
-    # ids still join the propagation universe (rep_map) and come out as
-    # singleton clusters
+    # ids still get labeled through rep_map and come out as singleton
+    # clusters
     rep_docs = base.join(
         reps_nz.select(F.col("rep_id").alias("id")), on="id", how="left_semi"
     )
@@ -1922,25 +1796,9 @@ def embedding_dedup_clusters(
     else:
         raise ValueError(f"unknown method {method!r}; use 'blocked' or 'lsh'")
 
-    guard = None
-    mapping = _cc_label_map(pairs.select("id_a", "id_b"), "id_a", "id_b")
-    if mapping is not None:
-        # labels attach as coalesce(map[rep_id], rep_id) directly on the
-        # narrow (id, rep_id) table — no rep_ids distinct seed, no comp
-        # join, no untouched anti-join/union (round 11)
-        rml = _apply_label_map(rep_map, "rep_id", mapping, "cluster_id")
-    else:
-        rep_ids = rep_map.select(F.col("rep_id").alias("id")).distinct()
-        labels, guard = _min_label_propagation(
-            rep_ids, pairs.select("id_a", "id_b"), "id_a", "id_b",
-            max_iterations, driver_edge_limit=0,
-        )
-        rml = rep_map.join(
-            labels.select(
-                F.col("id").alias("rep_id"), F.col("label").alias("cluster_id")
-            ),
-            on="rep_id",
-        )
+    rml, guard = _component_labels(
+        rep_map, "rep_id", pairs, "id_a", "id_b", max_iterations
+    )
     # rml is read twice (sizes agg + final join) and its lineage is the
     # vector-wide groupBy + join — persist the narrow labeled table so the
     # wide agg runs once
@@ -1960,9 +1818,7 @@ def embedding_dedup_clusters(
         "cluster_size",
         (F.col("id") == F.col("cluster_id")).alias("is_canonical"),
     )
-    if guard is not None:
-        result = scoped_rdd_release(result, guard)
-    result = scoped_persist(rml, result)
+    result = scoped_persist(rml, scoped_rdd_release(result, guard))
     if rep_docs.is_cached:
         result = scoped_persist(rep_docs, result)
     return result
@@ -1973,32 +1829,19 @@ def embedding_dedup_clusters(
 # ---------------------------------------------------------------------------
 
 def _gram_dup_occurrences(
-    docs: DataFrame, id_col: str, text_col: str, k: int, skew_safe: bool = True
+    docs: DataFrame, id_col: str, text_col: str, k: int
 ) -> DataFrame:
     """(id, pos, end): every word-``k``-gram occurrence that is NOT the
     corpus-wide canonical (lexicographically-min ``(id, pos)``) occurrence
     of its gram. Positions are 1-based; ``end = pos + k - 1``.
 
     The inverted-index shape: the occurrence table is O(total tokens) and
-    shuffles NARROW — ``(id, pos, md5)`` only, never the text.
-
-    Canonical selection has two equivalent physical forms, chosen by
-    ``skew_safe``:
-
-    - ``True`` (default, the 100 TB path): min-struct aggregate per gram +
-      join back. The min combines MAP-SIDE, and the 1:N join is
-      AQE-skew-splittable — a boilerplate gram occurring in millions of
-      documents (the COMMON hot case in web corpora, not an adversarial
-      one) spreads across split partitions. Costs a second compute of the
-      gram table (the partial-agg exchange differs from the join exchange,
-      so Catalyst cannot reuse it).
-    - ``False``: one row_number window over the gram key — a single pass
-      and ~1.6× faster at bench scale, but a hot gram's whole group must
-      sort inside ONE task (windows are not skew-splittable), so reserve
-      it for corpora known to be boilerplate-free.
+    shuffles NARROW — ``(id, pos, md5)`` only, never the text. Documents
+    with a null id take no part in the canonical pick.
     """
+    docs = docs.filter(F.col(id_col).isNotNull())
     occ = _gram_occurrences_arrow(docs, id_col, text_col, k)
-    return _non_canonical_occurrences(occ, k, skew_safe)
+    return _non_canonical_occurrences(occ, k)
 
 
 def _gram_occurrences_expr(
@@ -2039,23 +1882,20 @@ def _gram_occurrences_expr(
 
 
 def _gram_occurrences_arrow(
-    docs: DataFrame, id_col: str, text_col: str, k: int,
-    char_level: bool = False,
+    docs: DataFrame, id_col: str, text_col: str, k: int
 ) -> DataFrame:
     """Arrow-batched gram-occurrence production ``(id, pos, gh)`` for the
     substring-span family — one zero-shuffle ``mapInPandas`` pass per input
     partition (guide §4), bit-identical to the expression path and ~5×
     faster (round 11).
 
-    Word mode replicates ``tokens()`` exactly as the minhash Arrow pass
-    does (ASCII-space-only ``trim``, Java ``\\s`` = ``[ \\t\\n\\x0b\\f\\r]``
+    It replicates ``tokens()`` exactly as the minhash Arrow pass does
+    (ASCII-space-only ``trim``, Java ``\\s`` = ``[ \\t\\n\\x0b\\f\\r]``
     collapse, lowercase, single-space split — multibyte parity pinned by
     the sig-path tests); gram = ``md5(' '.join(tokens[p:p+k]))``, emitted
-    for 1-based positions 1..n_tokens-k+1. Char mode hashes raw-text
-    slices ``md5(text[p:p+k])`` (no normalization — same as the expression
-    twin; Python slicing and Spark ``substr`` both count code points).
-    NULL text and texts with fewer than ``k`` tokens/chars emit no rows,
-    matching the expression path's ``when(n >= k, sequence(..))`` guard.
+    for 1-based positions 1..n_tokens-k+1. NULL text and texts with fewer
+    than ``k`` tokens emit no rows, matching the expression path's
+    ``when(n >= k, sequence(..))`` guard.
     """
     import pandas as pd
     from pyspark.sql import types as T
@@ -2071,7 +1911,6 @@ def _gram_occurrences_arrow(
     base = _spread(
         docs, F.col(id_col).alias("id"), F.col(text_col).alias("_txt")
     )
-    kk, char_mode = k, char_level
 
     def gen(it):
         import hashlib
@@ -2084,33 +1923,14 @@ def _gram_occurrences_arrow(
             for i, txt in zip(pdf["id"], pdf["_txt"]):
                 if txt is None:
                     continue
-                if char_mode:
-                    m = len(txt) - (kk - 1)
-                    enc = txt.encode("utf-8")
-                    if len(enc) == len(txt):
-                        # pure-ASCII fast path: byte offsets == char offsets
-                        for p in range(m):
-                            ids.append(i)
-                            poss.append(p + 1)
-                            ghs.append(md5(enc[p: p + kk]).digest())
-                    else:
-                        for p in range(m):
-                            ids.append(i)
-                            poss.append(p + 1)
-                            ghs.append(
-                                md5(txt[p: p + kk].encode("utf-8")).digest()
-                            )
-                else:
-                    t = ws.sub(" ", txt.strip(" ")).lower()
-                    tk = t.split(" ")
-                    m = len(tk) - (kk - 1)
-                    for p in range(m):
-                        ids.append(i)
-                        poss.append(p + 1)
-                        ghs.append(
-                            md5(" ".join(tk[p: p + kk]).encode("utf-8"))
-                            .digest()
-                        )
+                t = ws.sub(" ", txt.strip(" ")).lower()
+                tk = t.split(" ")
+                for p in range(len(tk) - (k - 1)):
+                    ids.append(i)
+                    poss.append(p + 1)
+                    ghs.append(
+                        md5(" ".join(tk[p: p + k]).encode("utf-8")).digest()
+                    )
             yield pd.DataFrame(
                 {
                     "id": ids,
@@ -2122,118 +1942,72 @@ def _gram_occurrences_arrow(
     return base.mapInPandas(gen, out_schema)
 
 
-def _non_canonical_occurrences(
-    occ: DataFrame, k: int, skew_safe: bool,
-    prefilter_hot_prefix: bool = False,
-) -> DataFrame:
+def _non_canonical_occurrences(occ: DataFrame, k: int) -> DataFrame:
     """Shared back half of the span machinery: from ``(id, pos, gh)`` gram
     occurrences, every occurrence that is NOT its gram's corpus-wide
     canonical (lexicographically-min ``(id, pos)``) one, as
-    ``(id, pos, end)``. See :func:`_gram_dup_occurrences` for the
-    ``skew_safe`` physical-form tradeoff.
+    ``(id, pos, end)``.
 
-    INVARIANT (round-11 ADVICE): ``id`` and ``pos`` must be non-null —
-    every in-tree producer guarantees it (Generate/mapInPandas emit rows
-    only for real positions of non-null texts). The decimal packed-key
-    branch and the struct-min branch diverge on nulls (a null id yields a
-    null ``_k`` which ``min`` ignores and the ``_k != c`` filter drops,
-    whereas ``struct(null, pos)`` participates in struct ordering), so a
-    null-emitting producer must not be routed here without adding an
-    explicit isNotNull filter to pin one behavior.
+    The canonical pick is a min aggregate per gram joined back: the min
+    combines MAP-SIDE, and the 1:N join is AQE-skew-splittable — a
+    boilerplate gram occurring in millions of documents (the COMMON hot
+    case in web corpora, not an adversarial one) spreads across split
+    partitions, where a gram-keyed window would sort it inside one task.
 
-    ``prefilter_hot_prefix`` (round 12, char-gram path): on an O(chars)
-    occurrence table nearly every gram is a singleton (sf0.1: 1.18M
-    distinct of 1.24M occurrences, 55K duplicated), so the canonical
-    aggregate's hash table — 16-byte binary keys + a decimal min — is
-    sized by the corpus while its useful output is the tiny duplicated
-    tail. A first count-only aggregate on a 60-bit gram-hash PREFIX (a
-    plain long: narrower exchange rows, cheaper hash table) finds
-    may-be-duplicated prefixes, and only occurrences of those reach the
-    full-key aggregate. EXACT by construction: a gram with >= 2
-    occurrences always has prefix count >= 2 (superset), and the full
-    aggregate re-checks ``count >= 2`` on the true 16-byte key, so a
-    prefix-collision singleton is dropped exactly as before (equivalence
-    test-pinned; measured 2.44 -> 2.02 s noop at sf0.1 with identical
-    output). The price is two extra occurrence-map passes (the count agg
-    and the semi-join probe recompute the explode+md5 map) — the right
-    trade where the map is a cheap codegen'd scan but the wide-state
-    aggregate dominates, which is the char family's measured shape; the
-    word form keeps the single aggregate."""
-    if prefilter_hot_prefix and skew_safe:
-        # 15 hex chars = 60 bits keeps conv() inside a signed long
-        gh8 = F.conv(
-            F.substring(F.hex(F.col("gh")), 1, 15), 16, 10
-        ).cast("long")
-        hot8 = (
-            occ.select(gh8.alias("_g8"))
-            .groupBy("_g8")
-            .agg(F.count(F.lit(1)).alias("_n8"))
-            .where(F.col("_n8") >= 2)
-            .select("_g8")
+    INVARIANT: ``id`` and ``pos`` must be non-null. Both span paths drop
+    null-id documents before their occurrence producer, and the producers
+    emit rows only for real positions of non-null texts. The two pick
+    forms below diverge on nulls (a null id yields a null ``_k`` which
+    ``min`` ignores, whereas ``struct(null, pos)`` wins the struct min), so
+    that upstream filter is what pins one behaviour.
+    """
+    from pyspark.sql import types as T
+
+    # Keep only grams with >= 2 occurrences on the build side: a singleton
+    # gram's one occurrence IS its canonical, so the post-join filter would
+    # drop it anyway — filtering the aggregate first shrinks the join's
+    # build/broadcast side from O(distinct grams) to O(duplicated grams).
+    # The count combines map-side with the same min partial.
+    id_dt = occ.schema["id"].dataType
+    if isinstance(id_dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
+        # HASH-aggregable canonical pick (guide §2): MIN over a STRUCT
+        # forces SortAggregate (struct ordering has no hash-agg support —
+        # measured as the dominant stage of the char-span rows); packing
+        # (id, pos) into ONE decimal(38,0) as id * 2^32 + pos preserves
+        # lexicographic order exactly for any signed 64-bit id (pos ∈
+        # [1, 2^31) is always below the 2^32 stride) and min(decimal)
+        # hash-aggregates.
+        key = (
+            F.col("id").cast("decimal(20,0)")
+            * F.lit(4294967296).cast("decimal(20,0)")
+            + F.col("pos").cast("decimal(20,0)")
+        ).cast("decimal(38,0)")
+        keyed = occ.withColumn("_k", key)
+        canon = (
+            keyed.groupBy("gh")
+            .agg(F.min("_k").alias("c"), F.count(F.lit(1)).alias("_n"))
+            .where(F.col("_n") >= 2)
+            .select("gh", "c")
         )
-        # inner join == semi-join here (hot8 is a distinct-key aggregate);
-        # broadcast-vs-shuffle is left to the planner so an adversarially
-        # duplicate-heavy corpus degrades to a shuffled join, never an OOM
-        occ = occ.withColumn("_g8", gh8).join(hot8, "_g8").drop("_g8")
-    if skew_safe:
-        # Keep only grams with >= 2 occurrences on the build side (round
-        # 11): a singleton gram's one occurrence IS its canonical, so the
-        # post-join filter dropped it anyway — filtering the aggregate
-        # first is value-identical and shrinks the join's build/broadcast
-        # side from O(distinct grams) to O(duplicated grams). The count
-        # combines map-side with the same min partial.
-        from pyspark.sql import types as T
-
-        id_dt = occ.schema["id"].dataType
-        integral = isinstance(
-            id_dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-        )
-        if integral:
-            # HASH-aggregable canonical pick (round 11, guide §2): MIN over
-            # a STRUCT forces SortAggregate (struct ordering has no hash-agg
-            # support — measured as the dominant stage of the char-span
-            # rows); packing (id, pos) into ONE decimal(38,0) as
-            # id * 2^32 + pos preserves lexicographic order exactly for any
-            # signed 64-bit id (pos ∈ [1, 2^31) is always below the 2^32
-            # stride) and min(decimal) hash-aggregates.
-            key = (
-                F.col("id").cast("decimal(20,0)")
-                * F.lit(4294967296).cast("decimal(20,0)")
-                + F.col("pos").cast("decimal(20,0)")
-            ).cast("decimal(38,0)")
-            keyed = occ.withColumn("_k", key)
-            canon = (
-                keyed.groupBy("gh")
-                .agg(F.min("_k").alias("c"), F.count(F.lit(1)).alias("_n"))
-                .where(F.col("_n") >= 2)
-                .select("gh", "c")
-            )
-            dups = keyed.join(canon, "gh").where(F.col("_k") != F.col("c"))
-        else:
-            canon = (
-                occ.groupBy("gh")
-                .agg(
-                    F.min(F.struct("id", "pos")).alias("c"),
-                    F.count(F.lit(1)).alias("_n"),
-                )
-                .where(F.col("_n") >= 2)
-                .select("gh", "c")
-            )
-            dups = occ.join(canon, "gh").where(
-                (F.col("id") != F.col("c.id"))
-                | (F.col("pos") != F.col("c.pos"))
-            )
+        dups = keyed.join(canon, "gh").where(F.col("_k") != F.col("c"))
     else:
-        w = Window.partitionBy("gh").orderBy("id", "pos")
-        dups = occ.withColumn("_rn", F.row_number().over(w)).where(
-            F.col("_rn") > 1
+        canon = (
+            occ.groupBy("gh")
+            .agg(
+                F.min(F.struct("id", "pos")).alias("c"),
+                F.count(F.lit(1)).alias("_n"),
+            )
+            .where(F.col("_n") >= 2)
+            .select("gh", "c")
+        )
+        dups = occ.join(canon, "gh").where(
+            (F.col("id") != F.col("c.id")) | (F.col("pos") != F.col("c.pos"))
         )
     return dups.select("id", "pos", (F.col("pos") + F.lit(k - 1)).alias("end"))
 
 
 def _char_gram_dup_occurrences(
-    docs: DataFrame, id_col: str, text_col: str, k: int,
-    skew_safe: bool = True,
+    docs: DataFrame, id_col: str, text_col: str, k: int
 ) -> DataFrame:
     """Character-level twin of :func:`_gram_dup_occurrences`: ``(id, pos,
     end)`` for every character-``k``-gram occurrence that is not its gram's
@@ -2246,9 +2020,11 @@ def _char_gram_dup_occurrences(
     Cost note vs the word form: the occurrence table is O(chars) rows (one
     per character), ~5× the word form's O(tokens) — the inherent price of
     character resolution; everything shuffled is still ``(id, pos,
-    16-byte gh)``, never the text.
+    16-byte gh)``, never the text. Documents with a null id take no part
+    in the canonical pick.
     """
-    # Expression path, NOT the Arrow producer (round-11 A/B at sf1): char
+    docs = docs.filter(F.col(id_col).isNotNull())
+    # Expression path, NOT an Arrow producer (round-11 A/B at sf1): char
     # occurrence volume is O(chars) — ~8x the word form — and at that
     # volume the Python-boundary serialization of the (id, pos, gh) table
     # dominates: full-query sf1 wall 16.7 s (expr, stable) vs 24-114 s
@@ -2257,18 +2033,17 @@ def _char_gram_dup_occurrences(
     # so the O(len^2) collapse that justified Arrow for word grams does
     # not bite here. At sf0.1 the two are within ~0.6 s of each other.
     occ = _char_gram_occurrences_expr(docs, id_col, text_col, k)
-    return _non_canonical_occurrences(
-        occ, k, skew_safe, prefilter_hot_prefix=True
-    )
+    return _non_canonical_occurrences(occ, k)
 
 
 def _char_gram_occurrences_expr(
     docs: DataFrame, id_col: str, text_col: str, k: int
 ) -> DataFrame:
-    """Expression-path char-gram occurrence table — the semantics reference
-    for the Arrow producer (see :func:`_gram_occurrences_expr`: the carried
-    ``_s`` text column is copied into every exploded row's UnsafeRow, an
-    O(len²) bytes-materialized cost the Arrow pass avoids)."""
+    """The char-gram occurrence producer ``(id, pos, gh)``: one row per
+    1-based character position of every text with at least ``k`` chars,
+    gram = ``md5(substr(text, pos, k))`` over the raw text (no
+    normalization; ``substr`` counts code points). NULL text emits no
+    rows."""
     t = F.col(text_col)
     n = F.length(t)
     return docs.select(
@@ -2304,8 +2079,7 @@ def _merged_spans(dups: DataFrame) -> DataFrame:
 
 
 def duplicate_spans(
-    docs: DataFrame, id_col: str, text_col: str, k: int = 8,
-    skew_safe: bool = True,
+    docs: DataFrame, id_col: str, text_col: str, k: int = 8
 ) -> DataFrame:
     """Exact substring-level dedup statistics (Lee et al. 2022 semantics,
     re-expressed relationally): a token position is *duplicated* when it is
@@ -2322,7 +2096,7 @@ def duplicate_spans(
     of span ends), and a per-doc count join. Shuffle volume is O(tokens)
     ids+ints; nothing quadratic, no text movement after the scan.
     """
-    dups = _gram_dup_occurrences(docs, id_col, text_col, k, skew_safe)
+    dups = _gram_dup_occurrences(docs, id_col, text_col, k)
     spans = _merged_spans(dups)
     per_doc = spans.groupBy("id").agg(
         F.count(F.lit(1)).cast("long").alias("n_spans"),
@@ -2343,8 +2117,7 @@ def duplicate_spans(
 
 
 def remove_duplicate_spans(
-    docs: DataFrame, id_col: str, text_col: str, k: int = 8,
-    skew_safe: bool = True,
+    docs: DataFrame, id_col: str, text_col: str, k: int = 8
 ) -> DataFrame:
     """Cut every duplicated span (as defined by :func:`duplicate_spans`) out
     of each document, keeping only the corpus-wide canonical occurrence of
@@ -2355,7 +2128,7 @@ def remove_duplicate_spans(
     ``(pos, token)`` structs — one shuffle keyed on the doc id, bounded by
     document length, no pairwise work.
     """
-    dups = _gram_dup_occurrences(docs, id_col, text_col, k, skew_safe)
+    dups = _gram_dup_occurrences(docs, id_col, text_col, k)
     covered = dups.select(
         "id", F.explode(F.sequence(F.col("pos"), F.col("end"))).alias("pos")
     ).dropDuplicates(["id", "pos"])
@@ -2383,8 +2156,7 @@ def remove_duplicate_spans(
 
 
 def duplicate_char_spans(
-    docs: DataFrame, id_col: str, text_col: str, k: int = 50,
-    skew_safe: bool = True,
+    docs: DataFrame, id_col: str, text_col: str, k: int = 50
 ) -> DataFrame:
     """CHARACTER-level substring-dedup statistics (round-5 VERDICT #6):
     a character position is duplicated when covered by a char-``k``-gram
@@ -2398,9 +2170,9 @@ def duplicate_char_spans(
 
     Returns ``(id, n_chars, dup_chars, n_spans, dup_fraction)``. Scale
     shape identical to :func:`duplicate_spans` with O(chars) occurrence
-    rows instead of O(tokens); same ``skew_safe`` tradeoff.
+    rows instead of O(tokens).
     """
-    dups = _char_gram_dup_occurrences(docs, id_col, text_col, k, skew_safe)
+    dups = _char_gram_dup_occurrences(docs, id_col, text_col, k)
     spans = _merged_spans(dups)
     per_doc = spans.groupBy("id").agg(
         F.count(F.lit(1)).cast("long").alias("n_spans"),
@@ -2429,8 +2201,7 @@ def duplicate_char_spans(
 
 
 def remove_duplicate_char_spans(
-    docs: DataFrame, id_col: str, text_col: str, k: int = 50,
-    skew_safe: bool = True,
+    docs: DataFrame, id_col: str, text_col: str, k: int = 50
 ) -> DataFrame:
     """Cut every duplicated ≥-``k``-char span (per
     :func:`duplicate_char_spans`) out of each document, keeping the
@@ -2443,7 +2214,7 @@ def remove_duplicate_char_spans(
     it, concatenating the text between spans. One doc-keyed shuffle of
     span structs; the text itself never shuffles (it rides the docs scan).
     """
-    dups = _char_gram_dup_occurrences(docs, id_col, text_col, k, skew_safe)
+    dups = _char_gram_dup_occurrences(docs, id_col, text_col, k)
     spans = _merged_spans(dups)
     per_doc = spans.groupBy("id").agg(
         F.sort_array(F.collect_list(F.struct("s", "e"))).alias("sp")

@@ -330,10 +330,6 @@ def test_char_span_dedup_hand_computed(spark):
     assert clean[3]["clean_text"] == ident
     assert clean[4]["clean_text"] == "" and clean[4]["clean_chars"] == 0
     assert clean[5]["clean_text"] == rows[4][1]
-    # skew_safe=False (window form) must produce identical output
-    alt = sorted(map(tuple, dedup.duplicate_char_spans(
-        docs, "doc_id", "text", k=50, skew_safe=False).collect()))
-    assert alt == sorted(map(tuple, stats.values()))
 
 
 def test_cluster_assignment_string_ids_transitive(spark):
@@ -499,50 +495,66 @@ def test_dedup_cluster_assignment_transitive(spark):
 def test_cluster_assignment_driver_fast_path_matches_propagation(
     spark, monkeypatch
 ):
-    """The small-edge-set driver union-find must produce byte-identical
-    labels to the distributed min-label propagation loop, for numeric AND
-    string ids, and the forced-large fallback (limit=0) must still work."""
-    cases = [
-        (
-            spark.createDataFrame(
-                [(i,) for i in range(1, 11)], schema="doc_id long"
-            ),
-            spark.createDataFrame(
-                # two chains, one triangle, isolated nodes 8..10
-                [(1, 2), (2, 3), (5, 4), (6, 7), (7, 5), (4, 6)],
-                schema="id_a long, id_b long",
-            ),
+    """The small-edge-set driver union-find and the distributed min-label
+    propagation loop (forced with CC_DRIVER_EDGE_LIMIT = 0) must both give
+    the expected clusters, for numeric AND string ids and on edge inputs:
+    pairs naming ids outside the universe (dropped, so the output stays one
+    row per universe id with one canonical row per cluster), self-loops,
+    duplicate reversed edges, null endpoints and no pairs at all."""
+    L, S = "id_a long, id_b long", "id_a string, id_b string"
+    cases = {
+        # two chains, one triangle, isolated nodes 8..10
+        "long": (
+            range(1, 11), "long",
+            [(1, 2), (2, 3), (5, 4), (6, 7), (7, 5), (4, 6)], L,
+            {1: (1, 3), 2: (1, 3), 3: (1, 3), 4: (4, 4), 5: (4, 4),
+             6: (4, 4), 7: (4, 4), 8: (8, 1), 9: (9, 1), 10: (10, 1)},
         ),
-        (
-            spark.createDataFrame(
-                [(f"d{i:02d}",) for i in range(1, 8)], schema="doc_id string"
-            ),
-            spark.createDataFrame(
-                [("d03", "d01"), ("d03", "d05"), ("d06", "d07")],
-                schema="id_a string, id_b string",
-            ),
+        "string": (
+            [f"d{i:02d}" for i in range(1, 8)], "string",
+            [("d03", "d01"), ("d03", "d05"), ("d06", "d07")], S,
+            {"d01": ("d01", 3), "d02": ("d02", 1), "d03": ("d01", 3),
+             "d04": ("d04", 1), "d05": ("d01", 3), "d06": ("d06", 2),
+             "d07": ("d06", 2)},
         ),
-    ]
-    for universe, pairs in cases:
-        # default: probe sees a tiny edge list -> driver union-find
-        fast = sorted(
-            map(
-                tuple,
-                dedup.dedup_cluster_assignment(universe, pairs, "doc_id")
-                .collect(),
-            )
+        # 0 is not in the universe: it must not bridge 2 and 3
+        "outside_bridge": (
+            range(1, 5), "long", [(2, 0), (0, 3)], L,
+            {i: (i, 1) for i in range(1, 5)},
+        ),
+        # 9 is not in the universe: no extra row, no size for 1
+        "outside_leaf": (
+            [1, 2], "long", [(1, 9)], L, {1: (1, 1), 2: (2, 1)},
+        ),
+        "self_loop_reversed_dup": (
+            [1, 2, 3], "long", [(2, 2), (1, 2), (2, 1), (3, 3)], L,
+            {1: (1, 2), 2: (1, 2), 3: (3, 1)},
+        ),
+        "null_endpoint": (
+            [1, 2, 3], "long", [(1, None), (None, 2), (2, 3)], L,
+            {1: (1, 1), 2: (2, 2), 3: (2, 2)},
+        ),
+        "empty_pairs": ([1, 2], "long", [], L, {1: (1, 1), 2: (2, 1)}),
+    }
+    for name, (ids, id_type, pair_rows, pair_schema, want) in cases.items():
+        universe = spark.createDataFrame(
+            [(i,) for i in ids], f"doc_id {id_type}"
         )
-        # forced-large: disable the fast path -> distributed propagation
-        monkeypatch.setattr(dedup, "CC_DRIVER_EDGE_LIMIT", 0)
-        slow = sorted(
-            map(
-                tuple,
-                dedup.dedup_cluster_assignment(universe, pairs, "doc_id")
-                .collect(),
-            )
+        pairs = spark.createDataFrame(pair_rows, pair_schema)
+        expected = sorted(
+            (i, c, n, i == c) for i, (c, n) in want.items()
         )
+        for limit in (dedup.CC_DRIVER_EDGE_LIMIT, 0):
+            monkeypatch.setattr(dedup, "CC_DRIVER_EDGE_LIMIT", limit)
+            got = sorted(
+                map(
+                    tuple,
+                    dedup.dedup_cluster_assignment(universe, pairs, "doc_id")
+                    .collect(),
+                )
+            )
+            assert got == expected, (name, limit)
         monkeypatch.undo()
-        assert fast == slow
 
 
 def test_driver_union_find_min_label_semantics():

@@ -56,36 +56,38 @@ def _replay_char_spans(texts: list[str], k: int):
 def test_char_spans_match_pure_python_replay(spark, texts):
     """duplicate_char_spans / remove_duplicate_char_spans agree exactly
     with the brute-force replay on adversarial corpora (dense collisions,
-    overlapping/adjacent merges, empty and sub-k docs), in BOTH physical
-    forms (skew_safe join and row_number window)."""
+    overlapping/adjacent merges, empty and sub-k docs), through BOTH
+    canonical-pick branches: the packed decimal key (long ids) and the
+    struct min (string ids; single-digit ids keep the replay's order)."""
     from lapis_silo_spark.functions.dedup import (
         duplicate_char_spans,
         remove_duplicate_char_spans,
     )
 
-    rows = [(i, t) for i, t in enumerate(texts, start=1)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
     expect = _replay_char_spans(texts, K)
 
-    for skew_safe in (True, False):
+    for id_type in ("long", "string"):
+        rows = [
+            (i if id_type == "long" else str(i), t)
+            for i, t in enumerate(texts, start=1)
+        ]
+        df = spark.createDataFrame(rows, f"doc_id {id_type}, text string")
         stats = {
-            r["id"]: r
-            for r in duplicate_char_spans(
-                df, "doc_id", "text", k=K, skew_safe=skew_safe
-            ).collect()
+            int(r["id"]): r
+            for r in duplicate_char_spans(df, "doc_id", "text", k=K).collect()
         }
         clean = {
-            r["id"]: r
+            int(r["id"]): r
             for r in remove_duplicate_char_spans(
-                df, "doc_id", "text", k=K, skew_safe=skew_safe
+                df, "doc_id", "text", k=K
             ).collect()
         }
         assert set(stats) == set(expect) and set(clean) == set(expect)
         for i, (dup_chars, n_spans, clean_text) in expect.items():
-            assert stats[i]["dup_chars"] == dup_chars, (skew_safe, i, texts)
-            assert stats[i]["n_spans"] == n_spans, (skew_safe, i, texts)
+            assert stats[i]["dup_chars"] == dup_chars, (id_type, i, texts)
+            assert stats[i]["n_spans"] == n_spans, (id_type, i, texts)
             assert stats[i]["n_chars"] == len(texts[i - 1])
-            assert clean[i]["clean_text"] == clean_text, (skew_safe, i, texts)
+            assert clean[i]["clean_text"] == clean_text, (id_type, i, texts)
             assert clean[i]["clean_chars"] == len(clean_text)
 
 

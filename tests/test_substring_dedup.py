@@ -151,28 +151,6 @@ def test_substring_plan_stays_narrow(spark, span_docs):
     assert "BatchEvalPython" not in plan
 
 
-def test_skew_safe_and_window_forms_identical(spark, span_docs):
-    """Both physical forms of canonical selection produce identical spans."""
-    a = sorted(
-        map(tuple, duplicate_spans(span_docs, "doc_id", "text", k=3,
-                                   skew_safe=True).collect())
-    )
-    b = sorted(
-        map(tuple, duplicate_spans(span_docs, "doc_id", "text", k=3,
-                                   skew_safe=False).collect())
-    )
-    assert a == b
-    ca = sorted(
-        map(tuple, remove_duplicate_spans(span_docs, "doc_id", "text", k=3,
-                                          skew_safe=True).collect())
-    )
-    cb = sorted(
-        map(tuple, remove_duplicate_spans(span_docs, "doc_id", "text", k=3,
-                                          skew_safe=False).collect())
-    )
-    assert ca == cb
-
-
 def test_chunk_windows_plan_has_no_exchange(spark):
     """Chunking is a pure per-row map: sequence/transform/posexplode fuse
     into one Generate over the scan — any Exchange is a regression."""
@@ -188,13 +166,12 @@ def test_chunk_windows_plan_has_no_exchange(spark):
 
 
 def test_gram_occurrences_arrow_matches_expression_path(spark):
-    """The Arrow gram producer (round 11) must emit the exact occurrence
-    multiset of the expression path it replaced, for BOTH word and char
-    modes, across the edge cases the expression guards encode: NULL text,
-    empty string, whitespace-only, shorter-than-k, untrimmed \\t/\\n
-    whitespace, uppercase (normalization), and multibyte UTF-8."""
+    """The Arrow word-gram producer (round 11) must emit the exact
+    occurrence multiset of the expression path it replaced, across the edge
+    cases the expression guards encode: NULL text, empty string,
+    whitespace-only, shorter-than-k, untrimmed \\t/\\n whitespace,
+    uppercase (normalization), and multibyte UTF-8."""
     from lapis_silo_spark.functions.dedup import (
-        _char_gram_occurrences_expr,
         _gram_occurrences_arrow,
         _gram_occurrences_expr,
     )
@@ -225,42 +202,51 @@ def test_gram_occurrences_arrow_matches_expression_path(spark):
         arr = multiset(_gram_occurrences_arrow(docs, "doc_id", "text", k))
         assert arr == exp and len(exp) > 0, f"word k={k}"
 
-    for k in (3, 5):
-        exp = multiset(_char_gram_occurrences_expr(docs, "doc_id", "text", k))
-        arr = multiset(
-            _gram_occurrences_arrow(docs, "doc_id", "text", k, char_level=True)
+
+_SPAN_TEXT = "the quick brown fox jumps over the lazy dog again and again"
+_SPAN_EDGE_INPUTS = {
+    "null_ids": [
+        (1, _SPAN_TEXT), (None, _SPAN_TEXT), (3, _SPAN_TEXT + " tail")
+    ],
+    "null_text": [(1, _SPAN_TEXT), (2, None), (3, _SPAN_TEXT + " tail")],
+    "empty_text": [(1, _SPAN_TEXT), (2, ""), (3, _SPAN_TEXT + " tail")],
+    "empty_frame": [],
+}
+
+
+@pytest.mark.parametrize("case", sorted(_SPAN_EDGE_INPUTS))
+def test_span_functions_agree_across_id_types(spark, case):
+    """The canonical pick has one form per id type (a packed decimal key
+    for integral ids, a struct min otherwise); all four span functions must
+    give the same answer through both on edge inputs. A null-id document
+    takes no part in the pick: the other documents come out as if it were
+    absent."""
+    from lapis_silo_spark.functions.dedup import (
+        duplicate_char_spans,
+        remove_duplicate_char_spans,
+    )
+
+    fns = (duplicate_spans, remove_duplicate_spans, duplicate_char_spans,
+           remove_duplicate_char_spans)
+    rows = _SPAN_EDGE_INPUTS[case]
+
+    def run(fn, id_type, docs):
+        if id_type == "string":
+            docs = [(None if i is None else str(i), t) for i, t in docs]
+        df = spark.createDataFrame(docs, f"doc_id {id_type}, text string")
+        return sorted(
+            (
+                ((None if r[0] is None else str(r[0])),) + tuple(r[1:])
+                for r in fn(df, "doc_id", "text").collect()
+            ),
+            key=repr,
         )
-        assert arr == exp and len(exp) > 0, f"char k={k}"
 
-
-def test_char_span_hot_prefix_prefilter_identical(spark):
-    """The round-12 hot-prefix prefilter must not change the duplicated-
-    occurrence set: a gram with >=2 occurrences always survives the prefix
-    count, and prefix-collision singletons are re-dropped by the full-key
-    count. Pinned on a corpus with exact twins, partial overlaps, short
-    and NULL texts."""
-    from pyspark.sql import functions as F
-
-    from lapis_silo_spark.functions import dedup as D
-
-    rows = [
-        (1, "the quick brown fox jumps over the lazy dog " * 3),
-        (2, "the quick brown fox jumps over the lazy dog " * 3),
-        (3, "something else entirely with no duplication at all here"),
-        (4, "the quick brown fox jumps over the lazy dog tail differs"),
-        (5, None),
-        (6, "short"),
-    ]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    occ = D._char_gram_occurrences_expr(docs, "doc_id", "text", 20)
-    base = sorted(
-        map(tuple,
-            D._non_canonical_occurrences(occ, 20, True).collect())
-    )
-    pre = sorted(
-        map(tuple,
-            D._non_canonical_occurrences(
-                occ, 20, True, prefilter_hot_prefix=True
-            ).collect())
-    )
-    assert pre == base and len(base) > 0
+    for fn in fns:
+        as_long = run(fn, "long", rows)
+        assert as_long == run(fn, "string", rows), fn.__name__
+        assert len(as_long) == len(rows), fn.__name__
+        if case == "null_ids":
+            kept = [r for r in as_long if r[0] is not None]
+            absent = run(fn, "long", [r for r in rows if r[0] is not None])
+            assert kept == absent, fn.__name__
