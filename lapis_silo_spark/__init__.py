@@ -16,7 +16,8 @@ This is a ground-up Spark-first design, NOT a port:
 
 Public surface:
 
-- :class:`lapis_silo_spark.session.SiloSparkSession` — engine session wrapper.
+- :func:`lapis_silo_spark.session.get_spark` — SparkSession with the engine's defaults.
+- :class:`lapis_silo_spark.api.SiloDatabase` — embedded database handle.
 - :class:`lapis_silo_spark.catalog.Database` — named tables over Parquet dirs.
 - :mod:`lapis_silo_spark.expressions` — the SaneQL scalar-expression tree.
 - :mod:`lapis_silo_spark.operators` — the pipeline operators (filter, project,
@@ -25,7 +26,7 @@ Public surface:
   multimodal operators for large-scale training-data pipelines.
 """
 
-from lapis_silo_spark.session import SiloSparkSession, get_spark
+from lapis_silo_spark.session import get_spark
 
-__all__ = ["SiloSparkSession", "get_spark"]
+__all__ = ["get_spark"]
 __version__ = "0.1.0"

@@ -16,6 +16,7 @@ from lapis_silo_spark.catalog import Database
 from lapis_silo_spark.expressions.base import QueryCompileError
 from lapis_silo_spark.sources.ndjson import TableConfig, ingest_ndjson
 from lapis_silo_spark.session import local_relation
+from lapis_silo_spark.storage import append_rows, check_updatable, update_rows
 
 
 def _extract_update_literal(value_saneql: str, dtype: str):
@@ -104,26 +105,11 @@ class SiloDatabase:
         duplicate primary keys rejected."""
         config = self._config(table)
         main, store = ingest_ndjson(self.spark, path, config)
-        old = self.db.table(table)
-        combined = old.unionByName(main, allowMissingColumns=True)
-        from pyspark.sql import functions as F
-
-        dup = (
-            combined.groupBy(config.primary_key).count()
-            .filter(F.col("count") > 1).limit(1).collect()
-        )
-        if dup:
-            raise QueryCompileError(
-                f"duplicate primary key {dup[0][config.primary_key]!r}"
-            )
-        self.db.register_table(table, combined, primary_key=config.primary_key)
-        if config.nuc_sequences or config.aa_sequences:
-            from lapis_silo_spark.sources.adapt import merge_stores
-
-            old_store = self.db.sequence_stores[table]
-            self.db.register_sequence_store(
-                table, merge_stores(old_store, store)
-            )
+        # hand over the store only when the config declares sequences —
+        # otherwise the merge would replace the stored reference genome
+        # with the placeholder empty one
+        has_seqs = bool(config.nuc_sequences or config.aa_sequences)
+        append_rows(self.db, table, main, store if has_seqs else None)
 
     # -- query -------------------------------------------------------------
     def query(self, table: str, saneql: str):
@@ -185,44 +171,7 @@ class SiloDatabase:
         exact all-strings signature (value as a SaneQL literal) see
         :meth:`update_column_saneql`.
         """
-        from pyspark.sql import functions as F
-
-        from lapis_silo_spark.operators.relational import Pipeline
-        from lapis_silo_spark.saneql.binder import Binder
-        from lapis_silo_spark.saneql.parser import parse
-        from lapis_silo_spark.storage import check_updatable
-
-        check_updatable(self.db, table, column)
-        df = self.db.table(table)
-        target_type = df.schema[column].dataType
-        if filter_saneql is None:
-            cond = F.lit(True)
-            flags: list[str] = []
-        else:
-            binder = Binder(self.db)
-            pipeline = Pipeline.scan(self.db, table)
-            expr = binder.to_filter(parse(filter_saneql), pipeline)
-            from lapis_silo_spark.expressions.base import (
-                CompileContext,
-                apply_flag_joins,
-            )
-
-            ctx = CompileContext(database=self.db, table_name=table,
-                                 pk=pipeline.pk)
-            cond = expr.compile(ctx)
-            flags = []
-            if ctx.flag_joins or ctx.seq_flags:
-                df, flags = apply_flag_joins(df, ctx)
-        df = df.withColumn(
-            column,
-            F.when(cond, F.lit(value).cast(target_type)).otherwise(
-                F.col(column)
-            ),
-        )
-        if flags:
-            df = df.drop(*flags)
-        self.db.register_table(table, df,
-                               primary_key=self.db.primary_key(table))
+        update_rows(self.db, table, column, value, filter_saneql)
 
     def update_column_saneql(self, table: str, column: str,
                              value_saneql: str,
@@ -240,10 +189,8 @@ class SiloDatabase:
         column → "expected string literal"; dates are ``'2000-01-01'::date``
         casts).
         """
-        from lapis_silo_spark.storage import check_updatable
-
         # validate the column BEFORE parsing the literal (the reference's
-        # guard order); storage.update_column re-runs the same check — a
+        # guard order); storage.update_rows re-runs the same check — a
         # pair of dict probes, kept so the storage layer stays safe when
         # called directly
         dtype = check_updatable(self.db, table, column)
@@ -272,8 +219,26 @@ class SiloDatabase:
     def _config(self, table: str) -> TableConfig:
         if table in self._configs:
             return self._configs[table]
-        if table in self.db.tables:
-            # loaded from checkpoint: synthesize a minimal config
-            return TableConfig(name=table,
-                               primary_key=self.db.primary_key(table))
-        raise QueryCompileError(f"unknown table {table!r}")
+        if table not in self.db.tables:
+            raise QueryCompileError(f"unknown table {table!r}")
+        # loaded from checkpoint: rebuild the config from the stored table,
+        # so later appends ingest every metadata column and sequence
+        pk = self.db.primary_key(table)
+        config = TableConfig(name=table, primary_key=pk)
+        store = self.db.sequence_stores.get(table)
+        if store is not None:
+            refs: dict[tuple[bool, str], list[tuple[int, str]]] = {}
+            for r in store.reference.collect():
+                refs.setdefault((bool(r["is_aa"]), r["seq_name"]), []).append(
+                    (r["pos"], r["ref_symbol"])
+                )
+            for (is_aa, name), symbols in refs.items():
+                seqs = config.aa_sequences if is_aa else config.nuc_sequences
+                seqs[name] = "".join(sym for _, sym in sorted(symbols))
+        unaligned = {f"unaligned_{s}" for s in config.nuc_sequences}
+        for f in self.db.table(table).schema.fields:
+            if f.name != pk and f.name not in unaligned:
+                dtype = f.dataType.simpleString()
+                config.metadata[f.name] = "long" if dtype == "bigint" else dtype
+        self._configs[table] = config
+        return config

@@ -63,6 +63,9 @@ JOIN_TYPES = {
     "rightAnti": "__swap_anti",
 }
 
+# row number that carries an ordered input's order across the flag joins
+_ROW_NUMBER = "__silo_row_number"
+
 
 class MapExpr:
     """Computed-column helpers for :meth:`Pipeline.map` (``map_node.cpp:42-81``)."""
@@ -124,19 +127,30 @@ class Pipeline:
             full_table=self.full_table and keeps_rows,
         )
 
-    # -- operators --------------------------------------------------------
-    def filter(self, expr: Expression) -> "Pipeline":
-        ctx = CompileContext(
+    def _context(self) -> CompileContext:
+        return CompileContext(
             database=self.database, table_name=self.table_name, pk=self.pk
         )
-        cond = expr.compile(ctx)
+
+    def _flag_joined(self, ctx: CompileContext) -> tuple[DataFrame, list[str]]:
+        """Attach the flags ``ctx`` collected. The joins reorder rows (and
+        Catalyst drops a sort beneath a join), so ordered rows are numbered
+        before them and sorted back by that number after them."""
         df = self._df
-        if ctx.flag_joins or ctx.seq_flags:
-            df, flags = apply_flag_joins(df, ctx)
-            df = df.filter(cond).drop(*flags)
-        else:
-            df = df.filter(cond)
-        return self._with(df)
+        renumber = bool(self.ordering) and bool(ctx.flag_joins or ctx.seq_flags)
+        if renumber:
+            df = df.withColumn(_ROW_NUMBER, F.monotonically_increasing_id())
+        df, flags = apply_flag_joins(df, ctx)
+        if renumber:
+            df = df.orderBy(_ROW_NUMBER).drop(_ROW_NUMBER)
+        return df, flags
+
+    # -- operators --------------------------------------------------------
+    def filter(self, expr: Expression) -> "Pipeline":
+        ctx = self._context()
+        cond = expr.compile(ctx)
+        df, flags = self._flag_joined(ctx)
+        return self._with(df.filter(cond).drop(*flags))
 
     def where(self, cond: Column) -> "Pipeline":
         """Raw Column filter (internal / power-user path)."""
@@ -185,34 +199,29 @@ class Pipeline:
         row (the reference's MapNode semantics — computed columns never see
         each other).
 
-        Values may be Columns or index-backed scalar values exposing
-        ``compile_value(ctx)`` (e.g. :class:`SequenceAt` — ``at()`` on a
-        sequence column). The latter compile through one shared context so
-        all their side-table lookups batch into the minimal set of
-        aggregated flag joins (same batching as :meth:`filter`)."""
-        plain: dict[str, Column] = {}
-        pending: dict[str, Any] = {}
+        Values may be Columns, boolean :class:`Expression` predicates, or
+        index-backed scalar values exposing ``compile_value(ctx)`` (e.g.
+        :class:`SequenceAt` — ``at()`` on a sequence column). The latter two
+        compile through one shared context so all their side-table lookups
+        batch into the minimal set of aggregated flag joins (same batching
+        as :meth:`filter`). A predicate stored as a column is a definite
+        boolean — bitmap semantics: a row matches or it doesn't — so it is
+        wrapped in ``coalesce(_, False)``; ``compile_value`` scalars stay
+        nullable (null sequence ⇒ null key,
+        ``bitmap_aggregation_node.cpp:75-81``)."""
+        ctx = self._context()
+        columns: dict[str, Column] = {}
         for out_name, value in exprs.items():
+            if isinstance(value, Expression):
+                columns[out_name] = F.coalesce(value.compile(ctx), F.lit(False))
             # NB: Column.__getattr__ is field access, so hasattr alone is
             # always true for Columns — exclude them first
-            if not isinstance(value, Column) and hasattr(value, "compile_value"):
-                pending[out_name] = value
+            elif not isinstance(value, Column) and hasattr(value, "compile_value"):
+                columns[out_name] = value.compile_value(ctx)
             else:
-                plain[out_name] = value
-        if not pending:
-            return self._with(self._df.withColumns(plain), keeps_rows=True)
-        ctx = CompileContext(
-            database=self.database, table_name=self.table_name, pk=self.pk
-        )
-        compiled = {n: v.compile_value(ctx) for n, v in pending.items()}
-        df, flags = apply_flag_joins(self._df, ctx)
-        # preserve caller ordering of output columns across both kinds
-        df = df.withColumns(
-            {n: compiled.get(n, plain.get(n)) for n in exprs}
-        )
-        if flags:
-            df = df.drop(*flags)
-        return self._with(df, keeps_rows=True)
+                columns[out_name] = value
+        df, flags = self._flag_joined(ctx)
+        return self._with(df.withColumns(columns).drop(*flags), keeps_rows=True)
 
     def group_by(
         self,

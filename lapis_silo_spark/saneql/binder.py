@@ -53,11 +53,7 @@ from lapis_silo_spark.expressions import (
     PhyloDescendantOf,
     SymbolEquals,
 )
-from lapis_silo_spark.expressions.base import (
-    CompileContext,
-    QueryCompileError,
-    apply_flag_joins,
-)
+from lapis_silo_spark.expressions.base import QueryCompileError
 from lapis_silo_spark.expressions.core import Like, TrueExpr
 from lapis_silo_spark.operators.mutations import (
     insertions_aggregate,
@@ -500,47 +496,16 @@ def h_map(binder: Binder, name: str, bound: dict[str, ast.Node]) -> Pipeline:
         )
     if not record.fields:
         raise QueryCompileError("map() requires at least one assignment")
-    seen: set[str] = set()
-    assignments: list[tuple[str, Any]] = []
+    assignments: dict[str, Any] = {}
     for field in record.fields:
-        if field.name in seen:
+        if field.name in assignments:
             raise QueryCompileError(
                 f"map() assigns the output column '{field.name}' more than once"
             )
-        seen.add(field.name)
-        value = binder.to_scalar(
+        assignments[field.name] = binder.to_scalar(
             field.value, child, f"map() field '{field.name}'"
         )
-        assignments.append((field.name, value))
-
-    # Boolean Expression values may need flag joins (sequence predicates used
-    # as computed columns); compile them against one shared context.
-    ctx = CompileContext(
-        database=child.database, table_name=child.table_name, pk=child.pk
-    )
-    columns: dict[str, Column] = {}
-    for out_name, value in assignments:
-        if isinstance(value, Expression):
-            # predicates materialized as columns must be definite booleans
-            # (bitmap semantics: a row matches or it doesn't) — the filter
-            # boundary resolves NULL implicitly, map() has no such boundary
-            columns[out_name] = F.coalesce(value.compile(ctx), F.lit(False))
-        elif not isinstance(value, Column) and hasattr(value, "compile_value"):
-            # index-backed string scalars (SequenceAt): nullable by design
-            # (null sequence ⇒ null key, bitmap_aggregation_node.cpp:75-81)
-            columns[out_name] = value.compile_value(ctx)
-        else:
-            columns[out_name] = value
-    df = child.df
-    flags: list[str] = []
-    if ctx.flag_joins or ctx.seq_flags:
-        df, flags = apply_flag_joins(df, ctx)
-    for out_name, col in columns.items():
-        df = df.withColumn(out_name, col)
-    if flags:
-        df = df.drop(*flags)
-    return Pipeline(df, child.database, child.table_name, child.pk,
-                    full_table=child.full_table)
+    return child.map(assignments)
 
 
 def _seq_names_of_kind(child: Pipeline, amino_acid: bool,

@@ -167,35 +167,3 @@ def local_relation(spark: SparkSession, data, schema) -> DataFrame:
     except Exception:  # noqa: BLE001 — fall back to the classic path
         return spark.createDataFrame(rows, schema=st)
 
-
-class SiloSparkSession:
-    """Engine session: wraps a SparkSession + a catalog of named tables.
-
-    Mirrors the role of ``silo::Database``
-    (``/root/reference/src/silo/database.h:15-108``): create tables, append
-    data, run queries. Where the reference exposes Cython bindings returning
-    Arrow IPC, we *are* Python — queries return live DataFrames.
-    """
-
-    def __init__(self, spark: SparkSession | None = None):
-        self.spark = spark or get_spark()
-
-    # -- catalog ----------------------------------------------------------
-    def register_parquet_dir(self, sf_dir: str, tables: list[str] | None = None) -> None:
-        """Register every ``<name>.parquet`` under ``sf_dir`` as a temp view."""
-        names = tables
-        if names is None:
-            names = [
-                f[: -len(".parquet")]
-                for f in sorted(os.listdir(sf_dir))
-                if f.endswith(".parquet")
-            ]
-        for name in names:
-            path = os.path.join(sf_dir, f"{name}.parquet")
-            self.spark.read.parquet(path).createOrReplaceTempView(name)
-
-    def table(self, name: str) -> DataFrame:
-        return self.spark.table(name)
-
-    def sql(self, query: str) -> DataFrame:
-        return self.spark.sql(query)

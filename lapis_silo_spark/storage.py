@@ -20,10 +20,13 @@ Layout::
     <root>/versions/<ts>/phylo/<col>/
     <root>/latest                                   (contains "<ts>")
 
-``updateColumn`` (reference ``src/silo/database.h:76-87``,
-``scalar_column_update.cpp``: scalar columns only) rewrites just the one
-table into the new version and re-links everything else — column-level
-copy-on-write.
+Append and ``updateColumn`` (reference ``src/silo/database.h:76-87``,
+``scalar_column_update.cpp``) change the in-memory :class:`Database` through
+:func:`append_rows` / :func:`update_rows` — the same two functions the
+embedded API calls — and then save a new version. Every version is a full
+rewrite: each table, side table, hierarchy and model is written again, even
+when only one column of one table changed. Only the recorded layout
+(partition and sort columns) carries over from the previous version.
 """
 
 from __future__ import annotations
@@ -37,6 +40,8 @@ from pyspark.sql import functions as F
 
 from lapis_silo_spark.catalog import Database, SequenceStore
 from lapis_silo_spark.expressions.base import QueryCompileError
+from lapis_silo_spark.operators.relational import Pipeline
+from lapis_silo_spark.sources.adapt import merge_stores
 
 _SIDES = ("mutations", "coverage", "missing", "insertions", "reference")
 
@@ -59,7 +64,6 @@ def save_version(
     extra_manifest: dict | None = None,
     table_sorts: dict[str, list[str]] | None = None,
     parquet_options: dict[str, str] | None = None,
-    sorted_write_files: int | None = None,
 ) -> str:
     """Write every registered table/side-table/hierarchy of ``db`` as a new
     version directory, then atomically swap the ``latest`` pointer.
@@ -76,19 +80,15 @@ def save_version(
     ``filter_expressions/date_between.cpp:75-134``, and its per-chunk
     coverage ranges, ``horizontal_coverage_index.h:33-35``). Pinned by
     ``tests/test_storage_pruning.py``: scan-level ``numOutputRows`` drops
-    ~60× under a narrow date predicate vs an unsorted layout.
+    ~60× under a narrow date predicate vs an unsorted layout. A table that
+    is also partitioned is clustered by its partition columns instead and
+    sorted within each file, so each partition value's files are sorted
+    but their key ranges may overlap.
 
     ``parquet_options`` are writer options applied to every Parquet write
     (e.g. ``{"parquet.block.size": ...}`` — the row group is the pruning
     granule, so block size is the knob that trades scan parallelism and
     stats tightness against metadata volume at scale).
-
-    ``sorted_write_files`` sizes the range partitioning of sorted writes
-    explicitly; by default each frame keeps its incoming partition count.
-    Without this, ``repartitionByRange`` falls back to
-    ``spark.sql.shuffle.partitions`` (often 200) and a small table fans
-    out into that many tiny/near-empty files — the opposite of the
-    tight-row-group goal (round-5 ADVICE).
     """
     if version is None:
         # unix-second ids collide when two saves land in the same second
@@ -102,7 +102,10 @@ def save_version(
     os.makedirs(os.path.join(vdir, "tables"), exist_ok=True)
 
     def _ranged(frame: DataFrame, sorts: list[str]) -> DataFrame:
-        n = sorted_write_files or max(1, frame.rdd.getNumPartitions())
+        # keep the incoming partition count: the range partitioning would
+        # otherwise fall back to spark.sql.shuffle.partitions and fan a
+        # small table out into that many near-empty files
+        n = max(1, frame.rdd.getNumPartitions())
         return frame.repartitionByRange(n, *sorts).sortWithinPartitions(
             *sorts
         )
@@ -125,19 +128,23 @@ def save_version(
 
     for name, df in db.tables.items():
         path = os.path.join(vdir, "tables", name)
-        sorts = (table_sorts or {}).get(name)
-        if sorts:
-            df = _ranged(df, sorts)
+        sorts = (table_sorts or {}).get(name) or []
         parts = (table_partitions or {}).get(name)
         if parts:
             # Cluster rows by the partition columns before a partitionBy
-            # write (round 12, guide §6): without it every INPUT partition
-            # opens a file per partition VALUE it contains — N×V small
-            # files, slow commit, slow reader listing. The AQE rebalance
-            # hint targets advisory-sized output files per value and
-            # splits skewed values instead of single-tasking them (the
-            # plain ``repartition(cols)`` would).
-            df = df.hint("rebalance", *parts)
+            # write: without it every INPUT partition opens a file per
+            # partition VALUE it contains — N×V small files, slow commit,
+            # slow reader listing. The AQE rebalance hint targets
+            # advisory-sized output files per value and splits skewed
+            # values instead of single-tasking them (the plain
+            # ``repartition(cols)`` would). The rebalance shuffles any
+            # earlier order away, so the sort comes after it; partition
+            # columns lead so the writer needs no sort of its own.
+            df = df.hint("rebalance", *parts).sortWithinPartitions(
+                *parts, *sorts
+            )
+        elif sorts:
+            df = _ranged(df, sorts)
         writer = df.write.mode("overwrite")
         if parquet_options:
             writer = writer.options(**parquet_options)
@@ -147,7 +154,7 @@ def save_version(
         manifest["tables"][name] = {
             "primary_key": db.primary_key(name),
             "partitions": parts or [],
-            "sort": sorts or [],
+            "sort": sorts,
         }
 
     for table, store in db.sequence_stores.items():
@@ -280,25 +287,55 @@ def load_version(
     return db
 
 
-def _current_layout(root: str) -> tuple[dict[str, list[str]], dict[str, list[str]]]:
-    """Partition/sort columns recorded in ``root``'s latest manifest, so
-    version-to-version rewrites (append, updateColumn) PRESERVE the physical
-    layout. Without this, the first append to a partitioned table (e.g. the
-    cid-partitioned IVF-PQ codes table) silently rewrites it unpartitioned —
-    values stay correct but the static-partition-pruning scale contract is
-    lost (round-9 ADVICE)."""
+def _save_with_layout(db: Database, root: str,
+                      extra_manifest: dict | None = None) -> str:
+    """Save ``db`` as a new version of ``root`` with the partition/sort
+    columns recorded in ``root``'s latest manifest, so version-to-version
+    rewrites (append, updateColumn) PRESERVE the physical layout. Without
+    this, the first append to a partitioned table (e.g. the cid-partitioned
+    IVF-PQ codes table) silently rewrites it unpartitioned — values stay
+    correct but the static-partition-pruning scale contract is lost."""
     try:
-        manifest = read_manifest(root)
+        tables = read_manifest(root).get("tables", {})
     except (FileNotFoundError, json.JSONDecodeError):
-        return {}, {}
-    partitions: dict[str, list[str]] = {}
-    sorts: dict[str, list[str]] = {}
-    for name, meta in manifest.get("tables", {}).items():
-        if meta.get("partitions"):
-            partitions[name] = list(meta["partitions"])
-        if meta.get("sort"):
-            sorts[name] = list(meta["sort"])
-    return partitions, sorts
+        tables = {}
+    return save_version(
+        db, root,
+        table_partitions={n: m["partitions"] for n, m in tables.items()
+                          if m.get("partitions")},
+        table_sorts={n: m["sort"] for n, m in tables.items() if m.get("sort")},
+        extra_manifest=extra_manifest,
+    )
+
+
+def append_rows(
+    db: Database,
+    table: str,
+    new_main: DataFrame,
+    new_store: SequenceStore | None = None,
+) -> None:
+    """In-memory batch append: union ``new_main`` into ``table`` and
+    ``new_store`` into its side tables. Duplicate primary keys raise before
+    anything is registered, so a failed append leaves ``db`` unchanged
+    (reference: atomic append, ``storage/table.h:53-56``)."""
+    pk = db.primary_key(table)
+    combined = db.table(table).unionByName(new_main, allowMissingColumns=True)
+    dup = (
+        combined.groupBy(pk).count().filter(F.col("count") > 1).limit(1).collect()
+    )
+    if dup:
+        raise QueryCompileError(
+            f"duplicate primary key {dup[0][pk]!r} in append to {table!r}"
+        )
+    db.register_table(table, combined, primary_key=pk)
+    if new_store is not None:
+        old_store = db.sequence_stores.get(table)
+        # merge_stores rebases the fresh batch onto the old store's
+        # (possibly adapted) baseline before the union
+        db.register_sequence_store(
+            table,
+            new_store if old_store is None else merge_stores(old_store, new_store),
+        )
 
 
 def append_version(
@@ -309,40 +346,12 @@ def append_version(
     new_store: SequenceStore | None = None,
     extra_manifest: dict | None = None,
 ) -> str:
-    """Batch append: union new rows into ``table`` (and its side tables),
-    validate primary-key uniqueness, save as a new version.
+    """Batch append (:func:`append_rows`), saved as a new version.
 
-    All-or-nothing: any failure leaves the previous version untouched
-    (reference: atomic append, ``storage/table.h:53-56``).
+    All-or-nothing: any failure leaves the previous version untouched.
     """
-    pk = db.primary_key(table)
-    old = db.table(table)
-    combined = old.unionByName(new_main, allowMissingColumns=True)
-
-    dup = (
-        combined.groupBy(pk).count().filter(F.col("count") > 1).limit(1).collect()
-    )
-    if dup:
-        raise QueryCompileError(
-            f"duplicate primary key {dup[0][pk]!r} in append to {table!r}"
-        )
-
-    db.register_table(table, combined, primary_key=pk)
-    if new_store is not None:
-        from lapis_silo_spark.sources.adapt import merge_stores
-
-        old_store = db.sequence_stores.get(table)
-        if old_store is None:
-            db.register_sequence_store(table, new_store)
-        else:
-            # merge_stores rebases the fresh batch onto the old store's
-            # (possibly adapted) baseline before the union
-            db.register_sequence_store(table, merge_stores(old_store, new_store))
-    partitions, sorts = _current_layout(root)
-    return save_version(
-        db, root, table_partitions=partitions, table_sorts=sorts,
-        extra_manifest=extra_manifest,
-    )
+    append_rows(db, table, new_main, new_store)
+    return _save_with_layout(db, root, extra_manifest)
 
 
 def write_bucketed(
@@ -414,6 +423,39 @@ def check_updatable(db: Database, table: str, column: str) -> str:
     return dtype
 
 
+def update_rows(db: Database, table: str, column: str, value,
+                filter_expr=None) -> None:
+    """In-memory point update: set ``column = value`` on the rows of
+    ``table`` matching ``filter_expr`` — an engine Expression, a boolean
+    Column, or a SaneQL filter string (the reference's own API shape,
+    ``database.test.cpp:155``); ``None`` matches every row. A row whose
+    filter is null keeps its value.
+
+    ``Database::updateColumn`` (``scalar_column_update.cpp:28-90``): the
+    columns :func:`check_updatable` accepts; ``value=None`` clears the
+    matched rows to null (the reference's SaneQL ``null`` literal).
+    """
+    check_updatable(db, table, column)
+    pipe = Pipeline.scan(db, table)
+    if isinstance(filter_expr, str):
+        from lapis_silo_spark.saneql.binder import Binder
+        from lapis_silo_spark.saneql.parser import parse
+
+        filter_expr = Binder(db).to_filter(parse(filter_expr), pipe)
+    match = "__update_match"
+    target_type = pipe.df.schema[column].dataType
+    df = pipe.map({
+        match: F.lit(True) if filter_expr is None else filter_expr
+    }).df
+    df = df.withColumn(
+        column,
+        F.when(F.col(match), F.lit(value).cast(target_type)).otherwise(
+            F.col(column)
+        ),
+    ).drop(match)
+    db.register_table(table, df, primary_key=pipe.pk)
+
+
 def update_column(
     db: Database,
     root: str,
@@ -422,61 +464,6 @@ def update_column(
     value,
     filter_expr=None,
 ) -> str:
-    """Point update: set ``column = value`` for rows matching ``filter_expr``
-    (an engine Expression, a boolean Column, or a SaneQL filter string —
-    the reference's own API shape, ``database.test.cpp:155``), then save a
-    new version.
-
-    Scalar columns (INT32/INT64/FLOAT/DATE32/BOOL) plus the string family
-    (STRING / DICTIONARY_ENCODED / ZSTD_COMPRESSED_STRING, which are all
-    Spark strings here), mirroring ``Database::updateColumn``
-    (``src/silo/query_engine/scalar_column_update.cpp:28-90``);
-    phylo-tree-backed and lineage-indexed columns refuse (see
-    :func:`check_updatable`). ``value=None`` clears the matched rows to
-    null (the reference's SaneQL ``null`` literal).
-    """
-    df = db.table(table)
-    check_updatable(db, table, column)
-    target_type = df.schema[column].dataType
-
-    if isinstance(filter_expr, str):
-        from lapis_silo_spark.operators.relational import Pipeline
-        from lapis_silo_spark.saneql.binder import Binder
-        from lapis_silo_spark.saneql.parser import parse
-
-        filter_expr = Binder(db).to_filter(
-            parse(filter_expr), Pipeline.scan(db, table)
-        )
-
-    if filter_expr is None:
-        cond = F.lit(True)
-    elif hasattr(filter_expr, "compile"):
-        from lapis_silo_spark.expressions.base import CompileContext, apply_flag_joins
-        from lapis_silo_spark.operators.relational import Pipeline
-
-        pipe = Pipeline.scan(db, table)
-        ctx = CompileContext(database=db, table_name=table, pk=pipe.pk)
-        cond = filter_expr.compile(ctx)
-        if ctx.flag_joins or ctx.seq_flags:
-            df, flags = apply_flag_joins(df, ctx)
-            df = df.withColumn(
-                column,
-                F.when(cond, F.lit(value).cast(target_type)).otherwise(
-                    F.col(column)
-                ),
-            ).drop(*flags)
-            db.register_table(table, df, primary_key=db.primary_key(table))
-            partitions, sorts = _current_layout(root)
-            return save_version(db, root, table_partitions=partitions,
-                                table_sorts=sorts)
-    else:
-        cond = filter_expr
-
-    df = df.withColumn(
-        column,
-        F.when(cond, F.lit(value).cast(target_type)).otherwise(F.col(column)),
-    )
-    db.register_table(table, df, primary_key=db.primary_key(table))
-    partitions, sorts = _current_layout(root)
-    return save_version(db, root, table_partitions=partitions,
-                        table_sorts=sorts)
+    """Point update (:func:`update_rows`), saved as a new version."""
+    update_rows(db, table, column, value, filter_expr)
+    return _save_with_layout(db, root)

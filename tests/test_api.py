@@ -76,6 +76,40 @@ def test_update_column_and_checkpoint(handle, tmp_path, spark):
         handle.update_column("default", "main", "ZZ")
 
 
+def test_append_after_reload_keeps_metadata_and_mutations(spark, tmp_path):
+    """A handle loaded from a checkpoint ingests appends with the stored
+    table's full schema: metadata columns and sequences, not just the key."""
+    h = SiloDatabase(spark)
+    h.create_table(TableConfig(
+        name="default",
+        primary_key="primary_key",
+        metadata={"country": "string", "age": "int"},
+        nuc_sequences={"main": "ACGT"},
+    ))
+
+    def batch(key: str, country: str, age: int) -> str:
+        path = tmp_path / f"{key}.ndjson"
+        path.write_text(
+            f'{{"primary_key": "{key}", "country": "{country}", "age": {age}, '
+            '"main": {"sequence": "ACTT", "insertions": [], "offset": null}}\n'
+        )
+        return str(path)
+
+    h.append_data_from_file("default", batch("a1", "CH", 3))
+    root = str(tmp_path / "root")
+    h.save_checkpoint(root)
+    h = SiloDatabase.load_checkpoint(root, spark)
+    h.append_data_from_file("default", batch("a2", "DE", 5))
+
+    rows = {r["primary_key"]: (r["country"], r["age"])
+            for r in h.db.table("default").collect()}
+    assert rows == {"a1": ("CH", 3), "a2": ("DE", 5)}
+    assert h.get_filtered_keys(
+        "default",
+        "nucleotideEquals(position := 3, symbol := 'T', sequenceName := 'main')",
+    ) == {"a1", "a2"}
+
+
 # -- physical-plan hygiene ---------------------------------------------------
 
 def _formatted_plan(df) -> str:

@@ -201,6 +201,13 @@ def test_query_result_ordering_header(client):
     ]
     assert len(resp.headers["X-Request-Id"]) > 0
 
+    # map() keeps its input's ordering (row-preserving op)
+    resp = client.post("/query", data="default.orderBy({age}).map({y := 1})")
+    assert resp.status_code == 200
+    assert json.loads(resp.headers["result-ordering"]) == [
+        {"field": "age", "order": "ascending", "nullPlacement": "atStart"}
+    ]
+
 
 def test_query_arrow_ipc(client):
     import pyarrow as pa

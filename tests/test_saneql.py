@@ -96,6 +96,37 @@ def test_map_at_isoweek_limit_offset(example_db):
     assert out[0]["c"] == "S" and out[1]["c"] == "G"
 
 
+def test_map_evaluates_against_input_row(example_db):
+    """Every map() entry reads the node's INPUT row (MapNode semantics,
+    ``Pipeline.map``): ``x := age`` sees the original age even though the
+    same map replaces ``age``."""
+    out = rows(
+        example_db,
+        "default.map({age := 1, x := age}).project({primary_key, age, x})"
+        ".orderBy({primary_key})",
+    )
+    assert [r["x"] for r in out] == [30, None, 55, 20]
+    assert [r["age"] for r in out] == [1, 1, 1, 1]
+
+
+def test_order_survives_flag_joins(example_db):
+    """A sorted input stays sorted through filter() and map() nodes that
+    attach index-backed flags by join (Catalyst drops a sort beneath a
+    join)."""
+    out = rows(
+        example_db,
+        "default.orderBy({desc(age)}).filter(!nucleotideEquals(position := 3,"
+        " symbol := 'T', sequenceName := 'main'))",
+    )
+    assert [r["primary_key"] for r in out] == ["k3", "k1", "k4"]
+    out = rows(
+        example_db,
+        "default.orderBy({desc(age)}).project({primary_key})"
+        ".map({c := main.at(3)})",
+    )
+    assert [r["primary_key"] for r in out] == ["k3", "k1", "k4", "k2"]
+
+
 def test_between_and_in_and_like(example_db):
     out = rows(
         example_db,

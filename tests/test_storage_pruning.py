@@ -164,3 +164,44 @@ def test_sequence_side_tables_prune_position_predicates(spark, tmp_path):
     # globally — per-row-group pos ranges are tight and the reader skips
     # everything outside the probe window
     assert m["numOutputRows"] < n * 0.2, m
+
+
+def test_save_version_sorted_and_partitioned_layout(spark, tmp_path):
+    """A table with both ``table_sorts`` and ``table_partitions`` writes one
+    file per partition value (not one per input partition per value), every
+    file is sorted on the sort key, and the manifest records that sort."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from lapis_silo_spark.catalog import Database
+    from lapis_silo_spark.storage import load_version, read_manifest, save_version
+
+    n, n_values = 200_000, 5
+    frame = spark.range(0, n, 1, numPartitions=8).select(
+        F.col("id"),
+        (F.col("id") % 300).alias("day"),
+        (F.col("id") % n_values).alias("part"),
+    )
+    db = Database(spark)
+    db.register_table("t", frame, primary_key="id")
+    root = str(tmp_path / "store")
+    version = save_version(
+        db, root, table_partitions={"t": ["part"]}, table_sorts={"t": ["day"]}
+    )
+
+    files = glob.glob(
+        os.path.join(root, "versions", version, "tables", "t", "**", "*.parquet"),
+        recursive=True,
+    )
+    assert len(files) == n_values, files
+    unsorted = []
+    for path in files:
+        days = pq.read_table(path, columns=["day"]).column("day").to_pylist()
+        if days != sorted(days):
+            unsorted.append(path)
+    assert not unsorted
+
+    meta = read_manifest(root)["tables"]["t"]
+    assert meta["partitions"] == ["part"] and meta["sort"] == ["day"]
+    assert load_version(spark, root, version).table("t").count() == n

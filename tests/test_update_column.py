@@ -13,8 +13,10 @@ from __future__ import annotations
 import datetime
 
 import pytest
+from pyspark.sql import functions as F
 
 from lapis_silo_spark.api import SiloDatabase
+from lapis_silo_spark.expressions import Equals, SymbolEquals
 from lapis_silo_spark.expressions.base import QueryCompileError
 from lapis_silo_spark.sources.ndjson import TableConfig
 
@@ -202,3 +204,59 @@ def test_storage_update_accepts_saneql_filter(spark, tmp_path):
     rows = {r["primary_key"]: r["division"]
             for r in db.table("default").collect()}
     assert rows == {"k1": "Basel", "k2": "Zurich"}
+
+
+_UPDATE_FILTERS = {
+    # Column form is null on k2 (null age); the Expression forms are false
+    "metadata": ("age = 30", lambda: Equals("age", 30),
+                 lambda: F.col("age") == 30),
+    # needs a sequence flag join
+    "nucleotideEquals": (
+        "nucleotideEquals(position := 3, symbol := 'T', sequenceName := 'main')",
+        lambda: SymbolEquals("main", 3, "T"),
+        None,
+    ),
+    "none": (None, lambda: None, lambda: None),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_UPDATE_FILTERS))
+def test_update_forms_agree(spark, example_db, tmp_path, case):
+    """The embedded API and the version store run one update: the same
+    filter given as a SaneQL string, an engine Expression or (metadata
+    only) a Column updates the same rows."""
+    from lapis_silo_spark.catalog import Database
+    from lapis_silo_spark.storage import load_version, update_column
+
+    def fresh() -> Database:
+        db = Database(spark)
+        db.register_table("default", example_db.table("default"),
+                          primary_key="primary_key")
+        db.register_sequence_store("default",
+                                   example_db.sequence_store("default"))
+        return db
+
+    def table_rows(db: Database) -> list:
+        return sorted(db.table("default").collect())
+
+    saneql, as_expr, as_column = _UPDATE_FILTERS[case]
+    api = SiloDatabase(spark)
+    api.db = fresh()
+    api.update_column("default", "country", "Updated", saneql)
+    results = {"api": table_rows(api.db)}
+    forms = {"string": saneql, "expression": as_expr()}
+    if as_column is not None:
+        forms["column"] = as_column()
+    for form, flt in forms.items():
+        root = str(tmp_path / form)
+        update_column(fresh(), root, "default", "country", "Updated", flt)
+        results[form] = table_rows(load_version(spark, root))
+
+    expected = results.pop("api")
+    for form, rows in results.items():
+        assert rows == expected, form
+    updated = {r["primary_key"] for r in expected if r["country"] == "Updated"}
+    assert updated == {
+        "metadata": {"k1"}, "nucleotideEquals": {"k2"},
+        "none": {"k1", "k2", "k3", "k4"},
+    }[case]
