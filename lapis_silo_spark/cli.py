@@ -123,7 +123,9 @@ def cmd_api(args) -> int:
     # block cheap lookups — measured in tools/serving_soak.py (light-query
     # p95 at concurrency 8: 1422 ms FIFO vs 361 ms FAIR at sf0.1); the
     # reference gets the same isolation from its Poco worker pool
-    # (query_handler.cpp:38).
+    # (query_handler.cpp:38). FAIR only hands slots that free up to waiting
+    # requests; it does not preempt running tasks, so a request still
+    # waits while its neighbours' tasks hold every slot.
     spark = get_spark(extra_conf={"spark.scheduler.mode": "FAIR"})
     db = load_version(spark, args.root)
     serve(db, host=args.host, port=args.port)

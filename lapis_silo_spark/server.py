@@ -91,7 +91,10 @@ def _stream_with_timeout(spark, chunks_fn, seconds: int, tag: str):
       memory — the response body is NEVER assembled in driver memory);
     - each chunk must arrive within ``seconds`` (the reference's per-batch
       future wait) or the request's Spark jobs are cancelled and
-      :class:`QueryTimeoutError` raises;
+      :class:`QueryTimeoutError` raises. The first-batch wait includes the
+      time the request's job spends queued for an executor slot, and Spark
+      does not preempt running tasks, so a request whose neighbours'
+      tasks hold every slot for ``seconds`` times out;
     - the FIRST chunk is awaited before the HTTP status is committed, so
       bind/execution errors still surface as clean 400/500 responses;
       mid-stream failures abort the chunked transfer (reference behavior —

@@ -17,7 +17,15 @@ the query timeout — and asserts:
 - correct ``data-version`` and ``result-ordering`` headers on every
   successful response;
 - bounded driver memory while all bodies stream (RSS smoke bound), and
-  no Spark jobs left running once the dust settles.
+  the timed-out requests' jobs cancelled: no Spark job is left running
+  before the slow tasks could have ended on their own.
+
+The slow table holds ONE executor slot per timeout request (one
+partition). Spark never preempts a running task, and a request's
+first-batch clock includes the time its job waits for a free slot, so a
+healthy request is only served while its neighbours' sleeping tasks
+leave a slot free: the test needs 3 + 1 = 4 task slots and is skipped
+on a smaller session.
 """
 
 from __future__ import annotations
@@ -34,6 +42,8 @@ import pytest
 
 PORT = 8431
 TIMEOUT_S = 6
+SLEEP_S = 30
+TIMEOUT_REQUESTS = 3
 
 
 def _rss_mb() -> float:
@@ -47,8 +57,14 @@ def _rss_mb() -> float:
 @pytest.fixture(scope="module")
 def served_db(spark):
     """Threaded HTTP server over a real db: the sf0.001 genomic store, the
-    lineitem volume table, and a deliberately slow table (30 s sleeping
-    tasks) that can never beat the server's 6 s query timeout."""
+    lineitem volume table, and a deliberately slow table (one partition,
+    one ``SLEEP_S`` sleeping task) that can never beat the server's
+    ``TIMEOUT_S`` query timeout.
+
+    One partition means each timeout request holds one executor slot
+    until it is cancelled. Spark does not preempt running tasks, so the
+    three timeout requests must leave at least one of the session's slots
+    free for the large requests: the test needs 4 slots."""
     from lapis_silo_spark.driver_queries import genomic_db
     from lapis_silo_spark.server import create_app
 
@@ -59,8 +75,8 @@ def served_db(spark):
         primary_key="l_orderkey",
     )
     slow = spark.createDataFrame(
-        spark.sparkContext.parallelize(range(4), 4).map(
-            lambda i: (time.sleep(30), i)[1:]
+        spark.sparkContext.parallelize(range(1), 1).map(
+            lambda i: (time.sleep(SLEEP_S), i)[1:]
         ),
         "id long",
     )
@@ -98,6 +114,13 @@ def served_db(spark):
 
 
 def test_eight_concurrent_streams_no_cross_request_leak(spark, served_db):
+    slots = spark.sparkContext.defaultParallelism
+    if slots < TIMEOUT_REQUESTS + 1:
+        pytest.skip(
+            f"needs {TIMEOUT_REQUESTS} task slots held by the timeout "
+            f"requests plus 1 free for the large requests; the session "
+            f"has {slots} (Spark does not preempt running tasks)"
+        )
     db, post = served_db
     # the binder reproduces the reference's PARTIAL `<` (not implemented
     # for integer expressions), so request-distinguishing predicates use
@@ -110,8 +133,10 @@ def test_eight_concurrent_streams_no_cross_request_leak(spark, served_db):
     # distinct expected counts, or the no-mixing assertion proves nothing
     assert len(set(expected.values())) == len(thresholds)
 
-    jobs = [("large", k) for k in thresholds] + [("timeout", None)] * 3
+    jobs = ([("large", k) for k in thresholds]
+            + [("timeout", None)] * TIMEOUT_REQUESTS)
     rss_before = _rss_mb()
+    t_sent = time.monotonic()
 
     def run(job):
         kind, k = job
@@ -153,11 +178,12 @@ def test_eight_concurrent_streams_no_cross_request_leak(spark, served_db):
     # whole-body assembly) — smoke bound, generous for GC slack
     assert rss_after - rss_before < 256, (rss_before, rss_after)
 
-    # the timed-out requests' job groups were cancelled: nothing may still
-    # occupy executor slots once responses are in
+    # the timed-out requests' job groups were cancelled: no job may still
+    # occupy executor slots once responses are in. Poll only until the
+    # slow tasks could have ended by themselves, or a server that never
+    # cancels would pass too.
     tracker = spark.sparkContext.statusTracker()
-    for _ in range(60):
-        if not tracker.getActiveJobsIds():
-            break
+    while (tracker.getActiveJobsIds()
+           and time.monotonic() < t_sent + SLEEP_S):
         time.sleep(0.5)
     assert not tracker.getActiveJobsIds()
