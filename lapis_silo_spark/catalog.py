@@ -62,7 +62,7 @@ class SequenceStore:
     insertion_trigrams: DataFrame | None = None
     _ref_cache: dict[str, dict[int, str]] = field(default_factory=dict)
     _local_cache: dict[str, dict[int, str]] = field(default_factory=dict)
-    _aa_names: set[str] | None = None
+    _is_aa: dict[str, bool] | None = None
 
     def ref_symbol(self, seq_name: str, pos: int) -> str:
         """Driver-side reference-genome lookup (cached; genome ≤ ~30k nt)."""
@@ -99,11 +99,22 @@ class SequenceStore:
         # positions absent from the adaptation table keep the published symbol
         return sym if sym is not None else self.ref_symbol(seq_name, pos)
 
-    def is_amino_acid(self, seq_name: str) -> bool:
-        if self._aa_names is None:
+    def _kinds(self) -> dict[str, bool]:
+        """``{seq_name: is_aa}``, read once per store."""
+        if self._is_aa is None:
             rows = self.reference.select("seq_name", "is_aa").distinct().collect()
-            self._aa_names = {r["seq_name"] for r in rows if r["is_aa"]}
-        return seq_name in self._aa_names
+            self._is_aa = {r["seq_name"]: bool(r["is_aa"]) for r in rows}
+        return self._is_aa
+
+    def is_amino_acid(self, seq_name: str) -> bool:
+        return self._kinds().get(seq_name, False)
+
+    def sequence_names(self, amino_acid: bool | None = None) -> list[str]:
+        """Sorted sequence names, optionally only those of one symbol kind."""
+        return sorted(
+            name for name, is_aa in self._kinds().items()
+            if amino_acid is None or is_aa == amino_acid
+        )
 
 
 class Database:
@@ -116,6 +127,9 @@ class Database:
         self.sequence_stores: dict[str, SequenceStore] = {}
         # lineage column name -> closure DataFrame (ancestor, descendant, mode)
         self.lineage_closures: dict[str, DataFrame] = {}
+        # lineage column name -> {(ancestor, mode): descendants}, collected
+        # from the closure on first use (see lineage_clades)
+        self._clades: dict[str, dict[tuple[str, str], frozenset[str]]] = {}
         # lineage column name -> original definition YAML text (served by
         # GET /lineageDefinition/<col>)
         self.lineage_definitions: dict[str, str] = {}
@@ -151,6 +165,7 @@ class Database:
         definition_text: str | None = None,
     ) -> None:
         self.lineage_closures[column] = closure
+        self._clades.pop(column, None)
         if relation is not None:
             self.lineage_relations[column] = relation
         if definition_text is not None:
@@ -190,6 +205,24 @@ class Database:
             return self.sequence_stores[table]
         except KeyError:
             raise KeyError(f"table {table!r} has no sequence columns") from None
+
+    def lineage_clades(
+        self, column: str
+    ) -> dict[tuple[str, str], frozenset[str]]:
+        """``{(ancestor, mode): lineages in its sub-clade}`` for a lineage
+        column; an alias maps to its canonical lineage's clade. The closure
+        is bounded by the lineage definition, not by the data
+        (:mod:`lapis_silo_spark.sources.lineage`), so it is collected once
+        per column. A closure replaced in ``lineage_closures`` without
+        :meth:`register_lineage` is not re-read."""
+        if column not in self._clades:
+            clades: dict[tuple[str, str], set[str]] = {}
+            for r in self.lineage_closures[column].collect():
+                clades.setdefault((r["ancestor"], r["mode"]), set()).add(
+                    r["descendant"]
+                )
+            self._clades[column] = {k: frozenset(v) for k, v in clades.items()}
+        return self._clades[column]
 
     def phylo_descendant_names(self, column: str, node: str) -> DataFrame:
         """All node names (internal + leaves) in the subtree rooted at ``node``.

@@ -3,9 +3,11 @@
 The reference precomputes, per lineage column, a bitmap per (value, mode)
 covering the value's whole sub-clade (``storage/column/lineage_index.h:14-46``);
 our equivalent precompute is the ``lineage_closure(ancestor, descendant,
-mode)`` table built at ingest (:mod:`lapis_silo_spark.sources.lineage`), and
-the filter is a flag join of the *column value* against the closure's
-descendants — a broadcast hash join at any scale (closures are ~10^4 rows).
+mode)`` table built at ingest (:mod:`lapis_silo_spark.sources.lineage`).
+The closure is bounded by the lineage definition (~10^4 rows), not by the
+data, so the catalog collects it once into a driver-side map and the filter
+is an ``IN`` set of the clade's lineage names on the column: no join, no
+shuffle.
 """
 
 from __future__ import annotations
@@ -50,15 +52,24 @@ class LineageFilter(Expression):
             raise QueryCompileError(
                 f"column {self.column!r} has no lineage definition"
             )
-        if not self.include_sublineages:
-            return F.coalesce(F.col(self.column) == F.lit(self.value), F.lit(False))
-        closure = ctx.database.lineage_closures[self.column]
-        descendants = closure.filter(
-            (F.col("ancestor") == F.lit(self.value))
-            & (F.col("mode") == F.lit(self.recombinant_mode))
-        ).select(F.col("descendant").alias(self.column))
-        flag = ctx.new_flag(descendants, key_cols=[self.column])
-        return F.coalesce(F.col(flag), F.lit(False))
+        clades = ctx.database.lineage_clades(self.column)
+        mode = self.recombinant_mode
+        clade = clades.get((self.value, mode), frozenset())
+        if self.include_sublineages:
+            members = clade
+        else:
+            # an alias has its canonical lineage's clade, and only that
+            # lineage heads the same clade (the definition is acyclic);
+            # a name outside the definition is compared as given
+            members = {next(
+                (d for d in clade if clades.get((d, mode)) == clade),
+                self.value,
+            )}
+        if not members:
+            return F.lit(False)
+        return F.coalesce(
+            F.col(self.column).isin(sorted(members)), F.lit(False)
+        )
 
 
 class PhyloDescendantOf(Expression):

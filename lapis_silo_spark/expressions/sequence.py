@@ -12,6 +12,13 @@ stored symbol of row r at position p =
     reference symbol at p         otherwise (covered, unmutated)
     -- rows with a NULL sequence never match anything
        (``symbol_in_set.cpp:104-126``)
+
+Ingest writes a mutation only inside a row's coverage window, and every row
+that stores a sequence has a coverage row (``sources/ndjson.py``; local
+reference adaptation keeps both). So a mutation entry or a covered
+position already implies the row stores the sequence, and a predicate
+needs the ``has_seq`` flag (a whole-coverage-table aggregate and join)
+only when it can match an UNcovered position.
 """
 
 from __future__ import annotations
@@ -199,7 +206,6 @@ class SymbolEquals(_SequencePredicate):
         match_default = local_sym in matched
         match_missing = missing_sym in matched
 
-        has_seq = self._has_seq_flag(ctx)
         cond = F.lit(False)
         if mut_set:
             cond = cond | self._mutation_flag(ctx, mut_set)
@@ -211,7 +217,8 @@ class SymbolEquals(_SequencePredicate):
                 # uncovered position, interior missing — and explicit stored
                 # 'N'/'X' mutations count as missing too
                 cond = cond | ~covered | self._mutation_flag(ctx, [missing_sym])
-        return has_seq & cond
+                return self._has_seq_flag(ctx) & cond
+        return cond
 
 
 class HasMutation(_SequencePredicate):
@@ -246,7 +253,6 @@ class HasMutation(_SequencePredicate):
         ref_sym = store.ref_symbol(self.seq_name, self.position)
         local_sym = store.local_symbol(self.seq_name, self.position)
         alphabet = set(AA_SYMBOLS if is_aa else NUC_SYMBOLS)
-        has_seq = self._has_seq_flag(ctx)
         if ctx.mode is AmbiguityMode.UPPER_BOUND:
             # anything but the reference could be a mutation — including
             # stored missing symbols and uncovered positions
@@ -258,14 +264,14 @@ class HasMutation(_SequencePredicate):
                 cond = cond | (
                     self._covered_flag(ctx) & ~self._mutation_flag(ctx, None)
                 )
-            return has_seq & cond
+            return self._has_seq_flag(ctx) & cond
         matched = alphabet - ambiguity_symbols(ref_sym, is_aa)
         cond = self._mutation_flag(ctx, sorted(matched - {local_sym}))
         if local_sym in matched:
             cond = cond | (
                 self._covered_flag(ctx) & ~self._mutation_flag(ctx, None)
             )
-        return has_seq & cond
+        return cond
 
 
 class InsertionContains(Expression):

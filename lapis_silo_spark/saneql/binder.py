@@ -483,8 +483,7 @@ def _sequence_names(child: Pipeline) -> set[str]:
         store = child.database.sequence_store(child.table_name)
     except (KeyError, QueryCompileError):
         return set()
-    rows = store.reference.select("seq_name").distinct().collect()
-    return {r["seq_name"] for r in rows}
+    return set(store.sequence_names())
 
 
 def h_map(binder: Binder, name: str, bound: dict[str, ast.Node]) -> Pipeline:
@@ -514,8 +513,7 @@ def _seq_names_of_kind(child: Pipeline, amino_acid: bool,
     (``mutations()`` → nucleotide segments, ``aminoAcidMutations()`` → genes),
     mirroring the reference's per-symbol-type column iteration."""
     store = child.database.sequence_store(child.table_name)
-    rows = store.reference.select("seq_name", "is_aa").distinct().collect()
-    of_kind = sorted(r["seq_name"] for r in rows if bool(r["is_aa"]) == amino_acid)
+    of_kind = store.sequence_names(amino_acid)
     if requested is None:
         return of_kind
     kind = "Amino Acid" if amino_acid else "Nucleotide"

@@ -10,15 +10,66 @@ ones that matter at that scale and are harmless on ``local[*]``:
   (sequence diffing at ingest, multimodal decode).
 - Modest broadcast threshold: dimension tables (reference genomes, lineage
   closures, phylo node tables) are small and should always broadcast.
+- Python<->JVM data sockets over a Unix-domain socket instead of loopback
+  TCP. ``toLocalIterator`` (the server's result stream) fetches each
+  partition with a request/reply handshake; the JVM writes small
+  unbuffered packets, so Nagle's algorithm on the JVM side meets delayed
+  ACK on the Python side and every partition stalls ~40 ms. On 4 cores a
+  100-row frame took 88 ms to iterate on 1 partition and 252 ms on 4 over
+  TCP (``collect()``: 44 ms), and 50 ms / 102 ms over a Unix socket.
+  Python UDF workers use the same socket. Spark names each socket
+  ``<dir>/.<uuid>.sock``; the directory is a per-process one under
+  :func:`tempfile.gettempdir`, removed at exit (a process that exits
+  without ``spark.stop()`` would otherwise leave its socket files behind),
+  and the session keeps TCP when that path would pass the ``AF_UNIX``
+  length limit, or when the master is not local.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+#: ``sun_path`` holds 108 bytes on Linux, the terminating NUL included.
+_UNIX_SOCKET_PATH_MAX = 107
+#: Spark's socket name under its directory: ``/.<uuid4>.sock``.
+_SOCKET_NAME_LEN = len("/.") + 36 + len(".sock")
+#: This process's socket directory: unset until the first session, then
+#: the directory, or ``""`` when its path is too long for a socket.
+_socket_dir: str | None = None
+
+
+def _socket_dir_fits(directory: str) -> bool:
+    """True when Spark's sockets under ``directory`` fit ``AF_UNIX``."""
+    return len(os.fsencode(directory)) + _SOCKET_NAME_LEN <= _UNIX_SOCKET_PATH_MAX
+
+
+def _unix_socket_conf() -> dict[str, str]:
+    """Session settings that move the Python<->JVM sockets onto Unix-domain
+    sockets in a per-process directory (created once, removed at exit);
+    none when that directory's path is too long, so the session keeps TCP."""
+    global _socket_dir
+    if _socket_dir is None:
+        # a short name leaves the most room for a long temporary path
+        directory = tempfile.mkdtemp(prefix="uds")
+        if _socket_dir_fits(directory):
+            atexit.register(shutil.rmtree, directory, ignore_errors=True)
+            _socket_dir = directory
+        else:
+            os.rmdir(directory)
+            _socket_dir = ""
+    if not _socket_dir:
+        return {}
+    return {
+        "spark.python.unix.domain.socket.enabled": "true",
+        "spark.python.unix.domain.socket.dir": _socket_dir,
+    }
 
 
 def get_spark(
@@ -31,7 +82,8 @@ def get_spark(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` when no cluster is
     configured — on a real deployment spark-submit supplies the master and
-    these local settings are inert.
+    these local settings are inert. ``extra_conf`` overrides any default,
+    the Unix-socket settings included.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -64,13 +116,12 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
     )
-    if master is not None:
-        builder = builder.master(master)
-    elif "SPARK_MASTER" in os.environ:
-        builder = builder.master(os.environ["SPARK_MASTER"])
-    else:
-        builder = builder.master(f"local[{cpus}]")
-    for k, v in (extra_conf or {}).items():
+    if master is None:
+        master = os.environ.get("SPARK_MASTER", f"local[{cpus}]")
+    builder = builder.master(master)
+    # executors on other hosts would need the socket directory too
+    sockets = _unix_socket_conf() if master.startswith("local") else {}
+    for k, v in {**sockets, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
 

@@ -167,7 +167,7 @@ def test_plan_sequence_flags_batched(example_db):
     plan = _formatted_plan(pipeline.df)
     n_joins = len(re.findall(r"\(\d+\) [A-Za-z]*Join", plan))
     # 6 symbol predicates → 3 batched side-table joins (mutations agg,
-    # coverage agg incl. has_seq, missing agg)
+    # coverage agg, missing agg)
     assert n_joins <= 4, f"expected batched flags, found {n_joins} joins"
     # and it still answers correctly: k1 matches at 1,2,4,6,7 (>=3)
     got = {r["primary_key"] for r in pipeline.df.select("primary_key").collect()}

@@ -68,6 +68,40 @@ def test_lineage_sublineages(example_db):
     assert pks(scan(example_db).filter(expr)) == {"k1", "k2", "k3"}
 
 
+def test_lineage_alias_matches_canonical_under_both_flags(spark, example_db):
+    from lapis_silo_spark.catalog import Database
+    from lapis_silo_spark.sources.lineage import MODES
+
+    db = Database(spark)
+    db.register_table("default", example_db.table("default"))
+    db.register_lineage("pango_lineage", build_lineage_closure(
+        spark, LINEAGE_PARENTS, aliases={"Q": "B.1.1.7", "BX": "B.1"},
+    ))
+    for alias, canonical, exact in [("Q", "B.1.1.7", {"k2"}),
+                                    ("BX", "B.1", {"k1"})]:
+        for sub in (False, True):
+            for mode in MODES:
+                got = [
+                    pks(scan(db).filter(LineageFilter(
+                        "pango_lineage", name, include_sublineages=sub,
+                        recombinant_mode=mode,
+                    )))
+                    for name in (alias, canonical)
+                ]
+                assert got[0] == got[1], (alias, sub, mode)
+                if not sub:
+                    assert got[0] == exact
+    # a name outside the definition still matches nothing
+    assert pks(scan(db).filter(LineageFilter("pango_lineage", "Z.9"))) == set()
+
+
+def test_lineage_sublineages_compile_without_join(example_db):
+    expr = LineageFilter("pango_lineage", "B.1", include_sublineages=True)
+    plan = scan(example_db).filter(expr).df._jdf.queryExecution() \
+        .optimizedPlan().toString()
+    assert "Join" not in plan
+
+
 def test_lineage_null_value(example_db):
     assert pks(scan(example_db).filter(LineageFilter("pango_lineage", None))) == {
         "k4"
