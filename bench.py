@@ -60,9 +60,8 @@ HEADLINE = [
     # embedding near-dup: the LSH scale path plus the round-5 blocked
     # DISTRIBUTED exact form (hash-blocked block-pair matmuls, no driver
     # collect). Since round 6 every REGISTERED embedding-pair row runs a
-    # distributed form; the collect+broadcast all-pairs baseline lives
-    # only in the library (embedding_near_dup_pairs, the test-side
-    # verifier, refusing above EXACT_EMBEDDING_MAX_ROWS).
+    # distributed form; the collect+broadcast all-pairs baseline is a
+    # numpy reference in tests/dedup_reference.py.
     "dedup_embedding_lsh_pairs",
     "dedup_embedding_blocked_pairs",
     # round-6: fused O(docs) embedding near-dup clustering — the pair stage
@@ -137,12 +136,13 @@ HEADLINE = [
 
 
 #: Rows whose end-to-end wall is dominated by RESULT TRANSFER, not compute:
-#: the round-9 sessionize profile (tools/sessionize_profile.py, BENCH_NOTES)
-#: measured 1.13 s compute vs 9.2 s benched wall at sf1 — the gap is py4j
-#: row materialization of a large result, a bench-protocol shape, not a
-#: plan property. For these rows the artifact additionally records the
-#: noop-sink compute wall + result row count, so a transfer-shape change
-#: can't masquerade as (or hide) a plan regression (round-9 VERDICT #5).
+#: the round-9 sessionize profile (BENCH_NOTES; its tool is deleted, see
+#: git history) measured 1.13 s compute vs 9.2 s benched wall at sf1 — the
+#: gap is py4j row materialization of a large result, a bench-protocol
+#: shape, not a plan property. For these rows the artifact additionally
+#: records the noop-sink compute wall + result row count, so a
+#: transfer-shape change can't masquerade as (or hide) a plan regression
+#: (round-9 VERDICT #5).
 #: The headline number and the oracle gate stay end-to-end.
 TRANSFER_SPLIT_ROWS = [
     "events_sessionize_30m",

@@ -1215,11 +1215,10 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs — exact all-pairs SEMANTICS,
     distributed blocked EXECUTION (round 6: the registered row no longer
-    runs the collect+broadcast O(n²) baseline; that stays in the library as
-    ``embedding_near_dup_pairs``, the test-side verifier the blocked and
-    LSH forms are pinned against, refusing above ``max_rows``). Block
-    count auto-sizes from the corpus, so per-task memory is independent
-    of corpus size."""
+    runs the collect+broadcast O(n²) baseline; that is now a numpy
+    reference in ``tests/dedup_reference.py`` the blocked and LSH forms are
+    pinned against). Block count auto-sizes from the corpus, so per-task
+    memory is independent of corpus size."""
     from lapis_silo_spark.functions import dedup as fdedup
 
     db = db_for(spark, sf_dir)

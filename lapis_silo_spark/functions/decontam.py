@@ -181,6 +181,7 @@ def near_dup_contaminated(
     """
     from lapis_silo_spark.cache import scoped_persist
     from lapis_silo_spark.functions.dedup import (
+        _sig_jaccard,
         banded_rows,
         hash32,
         minhash_signatures,
@@ -214,15 +215,7 @@ def near_dup_contaminated(
         .select(
             "id",
             "eval_id",
-            (
-                F.size(
-                    F.filter(
-                        F.zip_with("sig_t", "sig_e", lambda a, b: a == b),
-                        lambda x: x,
-                    )
-                )
-                / F.lit(float(n_perms))
-            ).alias("j"),
+            _sig_jaccard("sig_t", "sig_e", n_perms).alias("j"),
         )
         .filter(F.col("j") >= threshold)
     )

@@ -19,6 +19,7 @@ Design for 100 TB:
 
 from __future__ import annotations
 
+import hashlib
 from collections.abc import Callable
 
 import pandas as pd
@@ -255,90 +256,21 @@ def ngram_jaccard_pairs(
 
 # -- MinHash + LSH -----------------------------------------------------------
 
-def minhash_signature(col: str | Column, n_perms: int = 16, k: int = 5) -> Column:
-    """array<long> MinHash signature over character k-shingles, as a single
-    column expression.
-
-    Universal hash family h_i(x) = ((2i+1)·x + i·B) mod P over md5-derived
-    32-bit shingle hashes — deterministic and SQL-reproducible.
-
-    NOTE: expression-only path for small/embedded use. The engine's dedup
-    operators use :func:`minhash_signatures` instead — Catalyst does not
-    share the inner ``hashes`` subexpression across the ``n_perms`` outer
-    lambda iterations, so this form recomputes every shingle md5 n_perms
-    times.
-    """
-    hashes = F.transform(char_shingles(col, k), hash32)
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(n_perms - 1)),
-        lambda i: F.array_min(
-            F.transform(
-                hashes,
-                lambda h: (
-                    ((i * 2 + 1) * h + (i * MINHASH_B_MULT) % MINHASH_PRIME)
-                    % MINHASH_PRIME
-                ),
-            )
-        ),
-    )
-
-
 def hash32_fast(col: Column) -> Column:
-    """32-bit shingle hash via native xxhash64 — ~4× faster than the
-    md5+conv path (no hex-string round-trip), for operators that don't need
-    an external-SQL-reproducible hash."""
+    """32-bit shingle hash via Spark's native xxhash64 (seed 42): in SQL it
+    skips md5's hex-string round-trip. The MinHash signature producer
+    (:func:`minhash_signatures`) hashes shingles in Python, though, where
+    its twin :func:`_xxh64_32` is the SLOWER family: 2.3 µs per shingle
+    against 0.86 µs for ``hashlib.md5`` (20k 5-char shingles, min of 5, one
+    Xeon core). It stays the default of the LSH entry points because their
+    registered results pin it."""
     return F.pmod(F.xxhash64(col), F.lit(2 ** 32))
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n_perms: int = 16,
-    k: int = 5,
-    hash_fn=hash32,
-) -> DataFrame:
-    """(id, sig: array<long>) — the scale path for MinHash signatures.
-
-    With the default ``hash_fn`` (:func:`hash32`, md5-derived and DuckDB
-    oracle-able) signatures come from :func:`_minhash_signatures_arrow` —
-    one Arrow-batched pass per partition, zero shuffle, bit-identical
-    values. :func:`hash32_fast` routes through the same Arrow pass with a
-    pure-Python XXH64 (bit-parity with Spark's ``xxhash64`` seed-42 string
-    hash is test-pinned across lengths 0-100 and multibyte UTF-8). Any
-    other ``hash_fn`` runs the expression pipeline: explode
-    shingles → hash each shingle ONCE → ``n_perms`` min-aggregates (one per
-    permutation) → pack into an array; each hash is computed exactly once,
-    the mins combine map-side (partial aggregation), and the single shuffle
-    is keyed on ``id``. Rows with NULL text produce no signature on either
-    path.
-    """
-    if hash_fn is hash32:
-        return _minhash_signatures_arrow(df, id_col, text_col, n_perms, k)
-    if hash_fn is hash32_fast:
-        return _minhash_signatures_arrow(
-            df, id_col, text_col, n_perms, k, hasher="xx32"
-        )
-    exploded = (
-        _spread(df, F.col(id_col).alias("id"), F.col(text_col).alias("_t"))
-        .select("id", F.explode(char_shingles("_t", k)).alias("sh"))
-        .select("id", hash_fn(F.col("sh")).alias("h"))
-    )
-    aggs = [
-        F.min(
-            (
-                F.lit(i * 2 + 1) * F.col("h")
-                + F.lit((i * MINHASH_B_MULT) % MINHASH_PRIME)
-            )
-            % MINHASH_PRIME
-        ).alias(f"_m{i}")
-        for i in range(n_perms)
-    ]
-    return (
-        exploded.groupBy("id")
-        .agg(*aggs)
-        .select("id", F.array(*[f"_m{i}" for i in range(n_perms)]).alias("sig"))
-    )
+def _md5_32(data: bytes) -> int:
+    """The Python twin of :func:`hash32`: the first 8 md5 hex chars are the
+    first 4 digest bytes, big-endian."""
+    return int.from_bytes(hashlib.md5(data).digest()[:4], "big")
 
 
 _XXH_P1 = 0x9E3779B185EBCA87
@@ -406,107 +338,93 @@ def _xxh64_32(data: bytes, seed: int = 42) -> int:
     return h & 0xFFFFFFFF
 
 
-def _minhash_signatures_arrow(
-    df: DataFrame, id_col: str, text_col: str, n_perms: int, k: int,
-    hasher: str = "md5",
+#: The two shingle-hash families of :func:`minhash_signatures`, each with
+#: its Python twin.
+_SHINGLE_HASHES = {hash32: _md5_32, hash32_fast: _xxh64_32}
+
+
+def minhash_signatures(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n_perms: int = 16,
+    k: int = 5,
+    hash_fn=hash32,
 ) -> DataFrame:
-    """Arrow-batched signature computation for the md5 (:func:`hash32`)
-    family — bit-identical to the expression path, measured ~3× faster and
-    ZERO-shuffle (round 11, guide §4).
+    """(id, sig: array<long>) — the one MinHash signature producer.
 
-    The expression pipeline pays three interpreted-evaluation costs Catalyst
-    cannot codegen: ``char_shingles``'s higher-order ``transform`` builds a
-    per-row string array element by element, ``array_distinct`` hashes it
-    again, and the ``n_perms`` separate ``min()`` aggregate expressions
-    re-evaluate a multiply-add-mod per row each — measured 4.98 s wall at
-    sf0.1 against 1.7 s for this path (plans/r11, OPTIMIZATION_r11.md).
-    Here one ``mapInPandas`` pass normalizes, shingles, md5-hashes and
-    min-reduces per input partition: no explode, no groupBy shuffle (the
-    per-doc shingle set never leaves the task), and the permutation sweep is
-    one vectorized numpy broadcast.
+    ``hash_fn`` picks the shingle-hash family: :func:`hash32` (md5-derived,
+    reproducible in external SQL — the DuckDB oracle replays it) or
+    :func:`hash32_fast` (Spark's seed-42 ``xxhash64``, computed by
+    :func:`_xxh64_32`); anything else raises ``ValueError``. Signature
+    component i is the minimum over the document's distinct shingle hashes
+    h of ((2i+1)·h + i·B) mod P.
 
-    Value equivalence is exact and test-pinned (``tests/test_dedup.py``):
-    ``trim`` drops only ASCII 0x20 (Spark's ``StringTrim``), ``\\s`` is the
-    Java ASCII class ``[ \\t\\n\\x0b\\f\\r]``, a short-but-non-null text
-    yields its single truncated shingle (the ``greatest(.., 1)`` guard), a
-    NULL text yields no row, and the first 8 md5 hex chars equal the first
-    4 digest bytes big-endian.
+    One ``mapInPandas`` pass per input partition normalizes, shingles,
+    hashes and min-reduces: no explode, no groupBy shuffle (the per-doc
+    shingle set never leaves the task), and the permutation sweep is one
+    vectorized numpy broadcast. The same signatures as Spark expressions
+    pay three interpreted-evaluation costs Catalyst cannot codegen
+    (``char_shingles``'s higher-order ``transform``, ``array_distinct``,
+    and ``n_perms`` separate ``min()`` aggregates) — measured 4.98 s wall
+    at sf0.1 against 1.7 s for this pass (OPTIMIZATION_r11.md).
+
+    Shingling equals :func:`~lapis_silo_spark.functions.text.char_shingles`
+    (bit-parity against an expression reference is test-pinned): ``trim``
+    drops only ASCII 0x20 (Spark's ``StringTrim``), ``\\s`` is the Java
+    ASCII class ``[ \\t\\n\\x0b\\f\\r]``, and a text shorter than ``k``
+    chars (the empty text included) yields its single truncated shingle.
+    A row whose id or text is NULL gets no signature under either family,
+    so it never pairs.
     """
-    import pandas as pd
     from pyspark.sql import types as T
 
-    id_type = df.schema[id_col].dataType
+    shingle_hash = _SHINGLE_HASHES.get(hash_fn)
+    if shingle_hash is None:
+        raise ValueError(
+            "hash_fn must be dedup.hash32 or dedup.hash32_fast, "
+            f"got {hash_fn!r}"
+        )
     out_schema = T.StructType(
         [
-            T.StructField("id", id_type),
+            T.StructField("id", df.schema[id_col].dataType),
             T.StructField("sig", T.ArrayType(T.LongType())),
         ]
     )
-    base = _spread(df, F.col(id_col).alias("id"), F.col(text_col).alias("_t"))
+    base = _spread(
+        df.filter(F.col(id_col).isNotNull() & F.col(text_col).isNotNull()),
+        F.col(id_col).alias("id"),
+        F.col(text_col).alias("_t"),
+    )
     prime, b_mult, n, kk = MINHASH_PRIME, MINHASH_B_MULT, n_perms, k
-    use_md5 = hasher == "md5"
 
     def gen(it):
-        import hashlib
         import re
 
         import numpy as np
 
         # Shingles repeat heavily across documents (natural text reuses
-        # k-grams), so hash each DISTINCT shingle once per task: a memo
-        # cuts the dominant per-row cost (hashlib.md5 ≈ 1 µs/shingle; the
-        # pure-Python XXH64 is ~5-10×that) by the corpus' repetition
-        # factor. Values are unchanged — the memo only caches a pure
-        # function. Bounded: cleared at 1M entries (~100 MB worst case)
-        # so a pathological task cannot grow without limit.
+        # k-grams), so hash each DISTINCT shingle once per task: the memo
+        # cuts the dominant per-row cost by the corpus' repetition factor.
+        # Values are unchanged — the memo only caches a pure function.
+        # Bounded: cleared at 1M entries (~100 MB worst case) so a
+        # pathological task cannot grow without limit.
         memo: dict = {}
-        if use_md5:
-            def sh_hash(s):
-                v = memo.get(s)
-                if v is None:
-                    if len(memo) >= 1_000_000:
-                        memo.clear()
-                    v = int.from_bytes(
-                        hashlib.md5(s.encode("utf-8")).digest()[:4], "big"
-                    )
-                    memo[s] = v
-                return v
-        else:
-            def sh_hash(s):
-                v = memo.get(s)
-                if v is None:
-                    if len(memo) >= 1_000_000:
-                        memo.clear()
-                    v = _xxh64_32(s.encode("utf-8"))
-                    memo[s] = v
-                return v
+
+        def sh_hash(s):
+            v = memo.get(s)
+            if v is None:
+                if len(memo) >= 1_000_000:
+                    memo.clear()
+                v = memo[s] = shingle_hash(s.encode("utf-8"))
+            return v
 
         ws = re.compile(r"[\t\n\x0b\f\r ]+")
         a_mul = np.arange(n, dtype=np.uint64) * 2 + 1
         b_add = (np.arange(n, dtype=np.uint64) * b_mult) % prime
         for pdf in it:
-            ids, sigs = [], []
-            for i, txt in zip(pdf["id"], pdf["_t"]):
-                if txt is None:
-                    # Replicate the expression path exactly per family:
-                    # char_shingles(null) -> [null]; md5(null) is null, so
-                    # the md5 family emits (id, [null]*n) (inert downstream:
-                    # concat_ws skips nulls in band hashes, zip_with scores
-                    # them 0). xxhash64(null) is the SEED (42) — hash
-                    # expressions skip null inputs — so the fast family
-                    # emits the permutation mins of the single hash 42.
-                    if use_md5:
-                        ids.append(i)
-                        sigs.append([None] * n)
-                        continue
-                    hs = np.array([42], dtype=np.uint64)
-                    mins = (
-                        (hs[None, :] * a_mul[:, None] + b_add[:, None])
-                        % prime
-                    ).min(axis=1)
-                    ids.append(i)
-                    sigs.append(mins.astype("int64"))
-                    continue
+            sigs = []
+            for txt in pdf["_t"]:
                 t = ws.sub(" ", txt.strip(" ")).lower()
                 shingles = {
                     t[j: j + kk] for j in range(max(len(t) - (kk - 1), 1))
@@ -519,28 +437,39 @@ def _minhash_signatures_arrow(
                 mins = (
                     (hs[None, :] * a_mul[:, None] + b_add[:, None]) % prime
                 ).min(axis=1)
-                ids.append(i)
                 sigs.append(mins.astype("int64"))
-            yield pd.DataFrame({"id": ids, "sig": sigs})
+            yield pd.DataFrame({"id": pdf["id"], "sig": sigs})
 
     return base.mapInPandas(gen, out_schema)
 
 
-def _band_hash(rows_per_band: int) -> Column:
-    """md5 bucket key over the ``band``-th slice of ``sig``."""
-    return F.md5(
-        F.concat_ws(
-            ",",
-            F.transform(
-                F.slice(
-                    F.col("sig"),
-                    F.col("band") * rows_per_band + 1,
-                    rows_per_band,
-                ),
-                lambda v: v.cast("string"),
-            ),
-        )
-    ).alias("band_hash")
+def _signature_bands(
+    sig: DataFrame, n_bands: int, rows_per_band: int
+) -> DataFrame:
+    """``(id, sig, band, band_hash)``: one row per band of every ``(id,
+    sig)`` signature, keyed by md5 over the band's ``rows_per_band``-long
+    slice of ``sig`` — the one band builder of every MinHash LSH form."""
+    band_slice = F.transform(
+        F.slice(F.col("sig"), F.col("band") * rows_per_band + 1, rows_per_band),
+        lambda v: v.cast("string"),
+    )
+    return sig.select(
+        "id",
+        "sig",
+        F.explode(F.sequence(F.lit(0), F.lit(n_bands - 1))).alias("band"),
+    ).select(
+        "id",
+        "sig",
+        "band",
+        F.md5(F.concat_ws(",", band_slice)).alias("band_hash"),
+    )
+
+
+def _sig_jaccard(a: str, b: str, n_perms: int) -> Column:
+    """Signature-estimated Jaccard of two MinHash signature columns: the
+    fraction of the ``n_perms`` components on which they agree."""
+    agree = F.filter(F.zip_with(a, b, lambda x, y: x == y), lambda eq: eq)
+    return F.size(agree) / F.lit(float(n_perms))
 
 
 def banded_rows(
@@ -554,11 +483,9 @@ def banded_rows(
     the shared candidate-generation front half of every banded LSH join
     (self-join dedup AND cross-corpus decontamination), so the cap
     semantics cannot drift between call sites."""
-    bands = sig.select(
-        "id",
-        "sig",
-        F.explode(F.sequence(F.lit(0), F.lit(n_bands - 1))).alias("band"),
-    ).select("id", "band", _band_hash(rows_per_band))
+    bands = _signature_bands(sig, n_bands, rows_per_band).select(
+        "id", "band", "band_hash"
+    )
     if max_band_freq is not None:
         hot = (
             bands.groupBy("band", "band_hash")
@@ -579,11 +506,8 @@ def minhash_bands(
     k: int = 5,
 ) -> DataFrame:
     """(id, band, band_hash): md5 over each signature band — the LSH bucket key."""
-    rows_per_band = n_perms // n_bands
     sig = minhash_signatures(df, id_col, text_col, n_perms, k)
-    band_idx = F.explode(F.sequence(F.lit(0), F.lit(n_bands - 1))).alias("band")
-    banded = sig.select("id", "sig", band_idx)
-    return banded.select("id", "band", _band_hash(rows_per_band))
+    return banded_rows(sig, n_bands, n_perms // n_bands)
 
 
 def minhash_lsh_pairs(
@@ -627,10 +551,12 @@ def minhash_lsh_pairs(
     ``max_shingle_freq``). Default ``None`` = exact LSH semantics.
     """
     rows_per_band = n_perms // n_bands
-    # Default to xxhash-based signatures: LSH recall only depends on hash
-    # uniformity, not on which family — the fast path saves the md5
-    # hex-string round-trip. Pass ``hash_fn=hash32`` to make the full pair
-    # output SQL-oracle-reproducible (the registered correctness query does).
+    # The xxhash family is the default because the registered
+    # dedup_minhash_lsh_pairs_fast row pins its results (LSH recall depends
+    # only on hash uniformity; in the Python signature producer xxhash is
+    # the slower family, see hash32_fast). Pass ``hash_fn=hash32`` to make
+    # the full pair output SQL-oracle-reproducible (the registered
+    # correctness query does).
     sig = minhash_signatures(df, id_col, text_col, n_perms, k,
                              hash_fn=hash_fn or hash32_fast)
     # LAZY persist (round 11, re-measured after the Arrow producer + memo
@@ -687,11 +613,7 @@ def minhash_lsh_pairs(
         sig.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b")),
         on="id_b",
     )
-    est = F.size(
-        F.filter(
-            F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda eq: eq
-        )
-    ) / F.lit(float(n_perms))
+    est = _sig_jaccard("sig_a", "sig_b", n_perms)
     verified = (
         candidates.withColumn("jaccard", est)
         .filter(F.col("jaccard") >= F.lit(threshold))
@@ -721,43 +643,15 @@ def minhash_lsh_pairs(
 
 # -- SimHash -----------------------------------------------------------------
 
-def simhash64(col: str | Column) -> Column:
-    """63-bit SimHash over whitespace tokens (bit 63 left clear so all
-    arithmetic stays within signed int64 — no ANSI overflow).
-
-    Bit j of the signature is 1 iff Σ_tokens (±1 by token-hash bit j) > 0.
-    Token hash = two md5-derived halves packed into 63 bits. Pure expression
-    algebra (shiftright / bitwise-and), no UDF.
-    """
-    toks = tokens(col)
-    # 63-bit token hash: high 32 bits from md5(t), low 31 from md5(t+"#").
-    tok_hashes = F.transform(
-        toks,
-        lambda t: (
-            hash32(t) * F.lit(2 ** 31).cast("long")
-            + (hash32(F.concat(t, F.lit("#"))) % F.lit(2 ** 31).cast("long"))
-        ),
-    )
-
-    def bit_sum(j: int) -> Column:
-        return F.aggregate(
-            tok_hashes,
-            F.lit(0),
-            lambda acc, h: acc
-            + F.when(F.shiftright(h, j).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1),
-        )
-
-    out = F.lit(0).cast("long")
-    for j in range(63):
-        out = out + F.when(bit_sum(j) > 0, F.lit(2 ** j).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-    return out
-
-
 def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, sig) — scale path for :func:`simhash64`: explode tokens, hash each
-    ONCE, sum per-bit signs as 63 map-side-combinable aggregates."""
+    """(id, sig): 63-bit SimHash over whitespace tokens (bit 63 left clear
+    so all arithmetic stays within signed int64 — no ANSI overflow).
+
+    Bit j of the signature is 1 iff Σ_tokens (±1 by token-hash bit j) > 0;
+    token hash = two md5-derived halves packed into 63 bits (high 32 bits
+    from md5(t), low 31 from md5(t + "#")). Tokens explode, each is hashed
+    ONCE, and the per-bit signs sum as 63 map-side-combinable aggregates.
+    A NULL text has no tokens and gets no signature, so it never pairs."""
     tok = (
         _spread(df, F.col(id_col).alias("id"), F.col(text_col).alias("_t"))
         .select("id", F.explode(tokens("_t")).alias("t"))
@@ -863,9 +757,10 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-#: Hard ceiling on the exact all-pairs path. Above this the broadcast matrix
-#: alone is >~1 GB and the O(n²) compare cannot finish; the LSH path must be
-#: used instead. Override only for controlled verification runs.
+#: Default row ceiling of the exact all-pairs form
+#: (:func:`embedding_near_dup_pairs_blocked`): above it the O(n²) compare
+#: cannot finish and the LSH path must be used instead. Override only for
+#: controlled verification runs.
 EXACT_EMBEDDING_MAX_ROWS = 1_000_000
 
 
@@ -907,93 +802,6 @@ def _id_dtype(id_type):
     return np.int64 if isinstance(id_type, integral) else object
 
 
-def embedding_near_dup_pairs(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    threshold: float = 0.95,
-    max_rows: int = EXACT_EMBEDDING_MAX_ROWS,
-) -> DataFrame:
-    """All pairs with cosine >= threshold (exact all-pairs baseline; for the
-    bucketed scale path see similarity.lsh_candidate_pairs).
-
-    Shape: one side is collected and broadcast as a dense matrix — the same
-    broadcast Spark's BroadcastNestedLoopJoin performs for this theta join
-    (``a.id < b.id`` has no equi-key) — and the streamed side does one BLAS
-    (batch × dim) · (dim × n) matmul per Arrow batch. The earlier
-    pair-at-a-time formulation evaluated O(n²) interpreted higher-order-
-    function dot products (HOF lambdas never enter whole-stage codegen) and
-    was ~25× slower at sf0.1.
-
-    Exact all-pairs is inherently O(n²) and this form exists as the
-    small-scale verification oracle ONLY: it refuses to run above
-    ``max_rows`` (the count is checked BEFORE anything is collected to the
-    driver). When exact recall is required beyond that,
-    :func:`embedding_near_dup_pairs_blocked` computes the identical result
-    with no driver collect (hash-blocked block-pair matmuls, per-task
-    memory independent of corpus size); when approximate recall suffices,
-    :func:`lapis_silo_spark.functions.similarity.lsh_candidate_pairs`
-    avoids the n² compare entirely. Degenerate rows are dropped by the
-    same policy as both (:func:`_pairable`).
-    """
-    import numpy as np
-    import pandas as pd
-
-    id_type = df.schema[id_col].dataType
-    n = df.count()
-    if n > max_rows:
-        raise ValueError(
-            f"embedding_near_dup_pairs is the exact O(n²) verification "
-            f"baseline and collects every vector to the driver; refusing "
-            f"{n} rows (max_rows={max_rows}). Use "
-            f"similarity.lsh_candidate_pairs for the scale path."
-        )
-    out_schema = _pair_schema(id_type)
-    rows = (
-        df.select(F.col(id_col).alias("id"),
-                  F.col(vec_col).cast("array<double>").alias("vec"))
-        .filter(_pairable())
-        .collect()
-    )
-    if not rows:
-        return local_relation(df.sparkSession, [], out_schema)
-    all_ids = np.array([r["id"] for r in rows], dtype=_id_dtype(id_type))
-    all_mat = np.array([r["vec"] for r in rows], dtype=np.float64)
-    all_nrm = np.sqrt((all_mat * all_mat).sum(axis=1))
-    bc = df.sparkSession.sparkContext.broadcast((all_ids, all_mat, all_nrm))
-
-    stream = _spread(
-        df,
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("vec"),
-    ).filter(_pairable())
-
-    def pair_batches(batches):
-        b_ids, b_mat, b_nrm = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            a_ids = np.asarray(pdf["id"].to_numpy())
-            a_mat = np.array(pdf["vec"].tolist(), dtype=np.float64)
-            a_nrm = np.sqrt((a_mat * a_mat).sum(axis=1))
-            cos = (a_mat @ b_mat.T) / np.outer(a_nrm, b_nrm)
-            # unrounded threshold test, then round — matches the SQL form
-            # WHERE cos >= t ... SELECT round(cos, 6)
-            keep = (b_ids[None, :] > a_ids[:, None]) & (cos >= threshold)
-            ia, ib = np.nonzero(keep)
-            if len(ia) == 0:
-                continue
-            yield pd.DataFrame(
-                {
-                    "id_a": a_ids[ia],
-                    "id_b": b_ids[ib],
-                    "cos": np.round(cos[ia, ib], 6),
-                }
-            )
-
-    return stream.mapInPandas(pair_batches, schema=out_schema)
-
-
 def _block_pair_cosines(
     rows: DataFrame,
     threshold: float,
@@ -1004,7 +812,8 @@ def _block_pair_cosines(
     :func:`lapis_silo_spark.functions.similarity.lsh_candidate_pairs` (one
     group per LSH bucket). Returns ``(id_a, id_b, cos)`` with ``id_a <
     id_b``, an unrounded ``cos >= threshold`` test and ``round(cos, 6)``
-    — the contract of :func:`embedding_near_dup_pairs`.
+    — the contract of every embedding pair form, test-pinned against a
+    driver all-pairs numpy reference (``tests/dedup_reference.py``).
 
     ``rows`` is a projected ``(id, vec array<double>)`` frame. Degenerate
     rows are dropped first (:func:`_pairable`); ``tag`` then maps the clean
@@ -1098,8 +907,7 @@ def embedding_near_dup_pairs_blocked(
 ) -> DataFrame:
     """All pairs with cosine >= threshold — the DISTRIBUTED exact form.
 
-    Same contract as :func:`embedding_near_dup_pairs`, but nothing is ever
-    collected to the driver: the whole corpus is ONE group of
+    Nothing is ever collected to the driver: the whole corpus is ONE group of
     :func:`_block_pair_cosines` with ``nb = n_blocks`` hash blocks (its
     docstring holds the cost model).
 
@@ -1176,18 +984,14 @@ def minhash_band_state(
     hash_fn=None,
 ) -> DataFrame:
     """The persisted per-corpus LSH state an append-mode pipeline stores:
-    ``(id, band, band_hash, sig)`` — band hashes for candidate generation,
+    ``(id, sig, band, band_hash)`` — band hashes for candidate generation,
     the signature for estimated-Jaccard verification. n_bands rows of
     (2 longs + hash + n_perms-long array) per doc; the corpus TEXT is never
     needed again (the same O(state)-not-O(bytes) contract as
     :func:`incremental_exact_dedup`'s digest table)."""
-    rows_per_band = n_perms // n_bands
     sig = minhash_signatures(df, id_col, text_col, n_perms, k,
                              hash_fn=hash_fn or hash32_fast)
-    return sig.select(
-        "id", "sig",
-        F.explode(F.sequence(F.lit(0), F.lit(n_bands - 1))).alias("band"),
-    ).select("id", "sig", "band", _band_hash(rows_per_band))
+    return _signature_bands(sig, n_bands, n_perms // n_bands)
 
 
 def incremental_minhash_dedup(
@@ -1207,10 +1011,10 @@ def incremental_minhash_dedup(
     case (``base_state`` = a stored :func:`minhash_band_state` table; the
     base text is never re-read).
 
-    Returns EVERY new row with a verdict
+    Returns every new row with a non-null id with a verdict
     ``(id, status ∈ {kept, dup_of_base, dup_in_batch})`` — including rows
-    whose text yields no shingles (NULL or shorter than ``k`` chars): they
-    have no signature, can never collide, and report ``kept``.
+    with NULL text: they have no signature, can never collide, and report
+    ``kept`` (a text shorter than ``k`` chars has one truncated shingle).
     ``dup_of_base`` when a band collision with the base verifies at
     ``threshold`` (and it wins when both apply), ``dup_in_batch`` when a
     LOWER-id row of the same batch verifies (greedy one-pass semantics —
@@ -1243,11 +1047,7 @@ def incremental_minhash_dedup(
     # the band, occupancy, and verify branches; leave the states lazy
     # (guide §1: measure before caching). This row's ~2.3-3 s is the
     # double Arrow signature pass (base 80% + batch 20%) — its floor.
-    est = F.size(
-        F.filter(
-            F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda eq: eq
-        )
-    ) / F.lit(float(n_perms))
+    est = _sig_jaccard("sig_a", "sig_b", n_perms)
 
     hot = None
     if max_band_freq is not None:
@@ -1316,9 +1116,13 @@ def incremental_minhash_dedup(
         new_state, new_state, F.col("b.id") < F.col("a.id")
     ).withColumn("_batch", F.lit(True))
 
-    # id universe from new_df, NOT new_state: rows with no shingles (NULL
-    # text or len < k) produce no signature and would silently vanish
-    ids = new_df.select(F.col(id_col).alias("id")).distinct()
+    # id universe from new_df, NOT new_state: NULL-text rows produce no
+    # signature and would silently vanish
+    ids = (
+        new_df.select(F.col(id_col).alias("id"))
+        .filter(F.col("id").isNotNull())
+        .distinct()
+    )
     return (
         ids.join(base_hits.withColumnRenamed("nid", "id"), "id", "left")
         .join(batch_hits.withColumnRenamed("nid", "id"), "id", "left")
@@ -1595,8 +1399,11 @@ def minhash_dedup_clusters(
     max_band_freq: int | None = DEFAULT_MAX_BAND_FREQ,
 ) -> DataFrame:
     """End-to-end near-duplicate CLUSTERING with O(docs) output:
-    ``(id, cluster_id, cluster_size, is_canonical)`` for every input row —
-    the scale-safe form of near-dup removal. :func:`minhash_lsh_pairs`'s
+    ``(id, cluster_id, cluster_size, is_canonical)`` for every input row
+    with a non-null id, exactly once — the scale-safe form of near-dup
+    removal. A row with a null id is dropped and counts in no
+    ``cluster_size``; a row with NULL text has no signature and is its own
+    canonical singleton. :func:`minhash_lsh_pairs`'s
     banded candidate generation is correct at scale, but *materializing* the
     pair list is quadratic on twin-heavy corpora (the round-3 100× sweep:
     ~25M verified pairs, wall dominated by pair output). Fusing pair
@@ -1645,9 +1452,20 @@ def minhash_dedup_clusters(
     # digests feeds the rep aggregation AND the final doc join — persist
     # the narrow (id, digest) projection so the md5 pass over the corpus
     # runs once (round 11; the cache fills during the pair stage's probe).
-    digests = df.select(
-        F.col(id_col).alias("id"), F.md5(normalized(text_col)).alias("digest")
-    ).persist()
+    # A NULL text's digest is derived from its id (no md5 hex string
+    # starts with '#'), so it neither joins another row's digest group nor
+    # drops out of the digest join.
+    digests = (
+        df.select(
+            F.col(id_col).alias("id"),
+            F.coalesce(
+                F.md5(normalized(text_col)),
+                F.concat(F.lit("#"), F.col(id_col).cast("string")),
+            ).alias("digest"),
+        )
+        .filter(F.col("id").isNotNull())
+        .persist()
+    )
     # ONE digest-keyed aggregation produces both the representative (min
     # id) and the digest-group size — the former reps/digest_sizes twin
     # groupBys shared a key but ran as two exchanges (round 11, guide §2.4).
@@ -1844,50 +1662,17 @@ def _gram_dup_occurrences(
     return _non_canonical_occurrences(occ, k)
 
 
-def _gram_occurrences_expr(
-    docs: DataFrame, id_col: str, text_col: str, k: int
-) -> DataFrame:
-    """Expression-path word-gram occurrence table ``(id, pos, gh)`` —
-    retained as the semantics reference the Arrow producer is test-pinned
-    against (``tests/test_substring_dedup.py``).
-
-    NOT the default production path (round 11): Catalyst collapses the
-    ``_t`` projection through the Generate, so ``split(lower(regexp_
-    replace(trim(text))))`` re-evaluates PER EXPLODED ROW — O(len) text
-    work × O(len) positions = O(len²) per document (the formatted plan
-    shows the full split chain inside the post-Generate Filter AND
-    Project). Measured 3.8-4.1 s noop wall at sf0.1 vs 0.5-0.7 s for the
-    Arrow pass, identical output multiset.
-    """
-    toks = tokens(text_col)
-    n = F.size(toks)
-    return docs.select(
-        F.col(id_col).alias("id"),
-        F.explode(
-            F.when(
-                n >= k, F.sequence(F.lit(1), n - F.lit(k - 1))
-            ).otherwise(F.array().cast("array<int>"))
-        ).alias("pos"),
-        toks.alias("_t"),
-    ).select(
-        "id",
-        "pos",
-        # 16-byte binary key (not the 32-char hex string): the gram key is
-        # internal to this plan, and halving+ the shuffled key width measures
-        # 1.7x faster on the span stage at sf0.1 with identical output
-        F.unhex(
-            F.md5(F.array_join(F.slice(F.col("_t"), F.col("pos"), k), " "))
-        ).alias("gh"),
-    )
-
-
 def _gram_occurrences_arrow(
     docs: DataFrame, id_col: str, text_col: str, k: int
 ) -> DataFrame:
     """Arrow-batched gram-occurrence production ``(id, pos, gh)`` for the
     substring-span family — one zero-shuffle ``mapInPandas`` pass per input
-    partition (guide §4), bit-identical to the expression path and ~5×
-    faster (round 11).
+    partition (guide §4), bit-identical to the expression reference in
+    ``tests/dedup_reference.py`` and ~5× faster (round 11): in expression
+    form Catalyst collapses the ``_t`` projection through the Generate, so
+    ``split(lower(regexp_replace(trim(text))))`` re-evaluates per exploded
+    row — O(len²) per document, 3.8-4.1 s noop wall at sf0.1 against
+    0.5-0.7 s here.
 
     It replicates ``tokens()`` exactly as the minhash Arrow pass does
     (ASCII-space-only ``trim``, Java ``\\s`` = ``[ \\t\\n\\x0b\\f\\r]``

@@ -90,12 +90,14 @@ def streaming_minhash_pairs(
     """Cross-batch NEAR-duplicate pairs: the streaming twin of
     ``functions.dedup.minhash_lsh_pairs``.
 
-    Each document's MinHash signature is computed as a per-row expression
-    (``minhash_signature`` — no aggregation, so the plan stays a single
-    stateful operator, which Structured Streaming requires), exploded into
-    band buckets, and compared against the bucket's remembered members:
-    a pair is emitted the moment the later document arrives, with the
-    signature-estimated Jaccard, when that estimate >= ``threshold``.
+    Each document's MinHash signature comes from the batch producer
+    (``functions.dedup.minhash_signatures``, md5 family — a per-partition
+    ``mapInPandas`` pass with no aggregation, so the plan stays a single
+    stateful operator, which Structured Streaming requires); it is
+    exploded into band buckets and compared against the bucket's
+    remembered members: a pair is emitted the moment the later document
+    arrives, with the signature-estimated Jaccard, when that estimate >=
+    ``threshold``. A NULL-text document gets no signature and never pairs.
 
     State per (band, bucket) is a capped member list (``max_bucket``
     ids + signatures) — hot buckets degrade to first-N recall instead of
@@ -105,11 +107,9 @@ def streaming_minhash_pairs(
     absorbs duplicates.
     """
     from lapis_silo_spark.functions.dedup import (
-        _band_hash,
-        minhash_signature,
+        _signature_bands,
+        minhash_signatures,
     )
-
-    rows_per_band = n_perms // n_bands
 
     def _group(
         key: Any,
@@ -149,20 +149,13 @@ def streaming_minhash_pairs(
         state.update((ids, sigs))
         yield pd.DataFrame({"id_a": out_a, "id_b": out_b, "jaccard": out_j})
 
-    banded = (
-        stream.select(
-            F.col(id_col).cast("string").alias("id"),
-            minhash_signature(text_col, n_perms=n_perms, k=k).alias("sig"),
-        )
-        # drop null text (null sig) and too-short-to-shingle text (sig of
-        # nulls) — the batch path drops both by producing no exploded rows
-        .filter(F.col("sig").getItem(0).isNotNull())
-        .select(
-            "id",
-            "sig",
-            F.explode(F.sequence(F.lit(0), F.lit(n_bands - 1))).alias("band"),
-        )
-        .select("id", "sig", "band", _band_hash(rows_per_band))
+    docs = stream.select(
+        F.col(id_col).cast("string").alias("id"), F.col(text_col).alias("_t")
+    )
+    banded = _signature_bands(
+        minhash_signatures(docs, "id", "_t", n_perms, k),
+        n_bands,
+        n_perms // n_bands,
     )
     return banded.groupBy("band", "band_hash").applyInPandasWithState(
         _group,

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pytest
+from dedup_reference import exact_cosine_pairs, minhash_signatures_expr
 from pyspark.sql import functions as F
 
 from lapis_silo_spark.functions import dedup, multimodal, similarity, text
@@ -157,10 +158,8 @@ def test_pack_sequences(spark):
 
 def test_simhash_identical_and_distant(docs):
     sigs = {
-        r["doc_id"]: r["sig"]
-        for r in docs.select(
-            "doc_id", dedup.simhash64("text").alias("sig")
-        ).collect()
+        r["id"]: r["sig"]
+        for r in dedup.simhash_signatures(docs, "doc_id", "text").collect()
     }
     assert sigs[1] == sigs[2]
     assert sigs[1] >= 0  # bit 63 clear
@@ -186,7 +185,7 @@ def vectors(spark):
 
 
 def test_embedding_near_dup(vectors):
-    pairs = dedup.embedding_near_dup_pairs(
+    pairs = exact_cosine_pairs(
         vectors, "vec_id", "embedding", threshold=0.95
     )
     assert {(r["id_a"], r["id_b"]) for r in pairs.collect()} == {(1, 2)}
@@ -210,7 +209,7 @@ def test_embedding_near_dup_blocked_matches_exact(spark):
     )
     exact = {
         (r["id_a"], r["id_b"]): r["cos"]
-        for r in dedup.embedding_near_dup_pairs(
+        for r in exact_cosine_pairs(
             df, "vec_id", "embedding", threshold=0.6
         ).collect()
     }
@@ -275,7 +274,7 @@ def test_embedding_dedup_clusters_matches_pairwise(spark):
         [(i, [float(x) for x in mat[i]]) for i in range(40)],
         schema="vec_id long, embedding array<double>",
     )
-    pairs = dedup.embedding_near_dup_pairs(
+    pairs = exact_cosine_pairs(
         df, "vec_id", "embedding", threshold=0.9
     )
     want = sorted(
@@ -430,7 +429,7 @@ def test_embedding_pair_forms_agree_on_edge_inputs(spark, case):
     def pairs(frame):
         return {(r["id_a"], r["id_b"]): r["cos"] for r in frame.collect()}
 
-    want = pairs(dedup.embedding_near_dup_pairs(df, "vec_id", "embedding", t))
+    want = pairs(exact_cosine_pairs(df, "vec_id", "embedding", t))
     if case != "empty":
         assert len(want) == 3 * 10  # C(5, 2) per cluster
     for nb in (1, 3):
@@ -446,7 +445,7 @@ def test_embedding_pair_forms_agree_on_edge_inputs(spark, case):
 
     want_clusters = sorted(map(tuple, dedup.dedup_cluster_assignment(
         df.filter(F.col("vec_id").isNotNull()),
-        dedup.embedding_near_dup_pairs(df, "vec_id", "embedding", t),
+        exact_cosine_pairs(df, "vec_id", "embedding", t),
         "vec_id",
     ).collect()))
     for method in ("blocked", "lsh"):
@@ -455,6 +454,94 @@ def test_embedding_pair_forms_agree_on_edge_inputs(spark, case):
             n_planes=2, n_tables=8, dim=4,
         ).collect()))
         assert got == want_clusters, method
+
+
+_NEAR_DUP_DOCS = {
+    1: "the quick brown fox jumps over the lazy dog near the quiet river bank",
+    2: "The  QUICK brown fox jumps over the lazy dog near the quiet river bank",
+    5: "the quick brown fox jumps over the lazy dog near the quiet river banks",
+    6: "completely unrelated zebra xylophone quartz melody",
+    7: "der hund und die katze sind nicht auf der couch heute",
+}
+_NEAR_DUP_EXTRA = {
+    "null_ids": [(None, _NEAR_DUP_DOCS[1])],
+    "null_text": [(3, None), (4, None)],
+    "empty_text": [(3, ""), (4, "")],
+    "empty": [],
+    "string_ids": [],
+}
+
+
+@pytest.mark.parametrize("case", list(_NEAR_DUP_EXTRA))
+def test_text_near_dup_forms_agree_on_edge_inputs(spark, case):
+    """One edge-input behaviour for the MinHash emitters under both hash
+    families, and for SimHash pairs: a NULL text has no signature, so it
+    never pairs, is its own canonical cluster and is ``kept`` even against
+    a NULL-text base document; a null-id row (a twin of doc 1 here) leaves
+    every other row as if it were absent and is not output; two empty
+    texts are exact duplicates; an empty frame gives no rows; string ids
+    give the same answers as long ids."""
+    docs = sorted(_NEAR_DUP_DOCS.items())
+    rows = [] if case == "empty" else docs + _NEAR_DUP_EXTRA[case]
+    strings = case == "string_ids"
+
+    def name(i):
+        return f"d{i:02d}" if strings and i is not None else i
+
+    schema = f"doc_id {'string' if strings else 'long'}, text string"
+    df = spark.createDataFrame([(name(i), t) for i, t in rows], schema)
+    base = spark.createDataFrame(
+        [(name(90), _NEAR_DUP_DOCS[6]), (name(91), None)], schema
+    )
+
+    pairs = {(1, 2), (1, 5), (2, 5)}
+    cluster_of = {1: 1, 2: 1, 5: 1, 6: 6, 7: 7}
+    status = {1: "kept", 2: "dup_in_batch", 5: "dup_in_batch",
+              6: "dup_of_base", 7: "kept"}
+    if case == "null_text":
+        cluster_of.update({3: 3, 4: 4})
+        status.update({3: "kept", 4: "kept"})
+    elif case == "empty_text":
+        pairs.add((3, 4))
+        cluster_of.update({3: 3, 4: 3})
+        status.update({3: "kept", 4: "dup_in_batch"})
+    elif case == "empty":
+        pairs, cluster_of, status = set(), {}, {}
+    want_pairs = {(name(a), name(b)) for a, b in pairs}
+    members = list(cluster_of.values())
+    sizes = {c: members.count(c) for c in members}
+    want_clusters = sorted(
+        ((name(i), name(c), sizes[c], i == c) for i, c in cluster_of.items()),
+        key=repr,
+    )
+    want_status = sorted(((name(i), s) for i, s in status.items()), key=repr)
+
+    wrong = []  # every disagreeing (emitter, family), not just the first
+
+    def check(emitter, got, want):
+        if got != want:
+            wrong.append((emitter, got))
+
+    for fam in (dedup.hash32, dedup.hash32_fast):
+        check(f"minhash_lsh_pairs/{fam.__name__}", {
+            (r["id_a"], r["id_b"]) for r in dedup.minhash_lsh_pairs(
+                df, "doc_id", "text", hash_fn=fam).collect()
+        }, want_pairs)
+        check(f"minhash_dedup_clusters/{fam.__name__}", sorted(
+            map(tuple, dedup.minhash_dedup_clusters(
+                df, "doc_id", "text", hash_fn=fam).collect()), key=repr,
+        ), want_clusters)
+        state = dedup.minhash_band_state(base, "doc_id", "text", hash_fn=fam)
+        check(f"incremental_minhash_dedup/{fam.__name__}", sorted(
+            map(tuple, dedup.incremental_minhash_dedup(
+                df, state, "doc_id", "text", hash_fn=fam).collect()), key=repr,
+        ), want_status)
+    # SimHash keeps only the exact twins (1, 2) and the two empty texts
+    check("simhash_pairs", {
+        (r["id_a"], r["id_b"])
+        for r in dedup.simhash_pairs(df, "doc_id", "text").collect()
+    }, {p for p in want_pairs if p[1] != name(5)})
+    assert not wrong, "\n".join(f"{e}: {got}" for e, got in wrong)
 
 
 def test_remove_duplicate_char_spans_null_text(spark):
@@ -897,7 +984,7 @@ def test_decontam_plan_broadcasts_eval_grams(spark):
 def test_lsh_candidate_pairs_subset_of_exact(vectors):
     exact = {
         (r["id_a"], r["id_b"]): r["cos"]
-        for r in dedup.embedding_near_dup_pairs(
+        for r in exact_cosine_pairs(
             vectors, "vec_id", "embedding", threshold=0.5
         ).collect()
     }
@@ -1968,14 +2055,13 @@ def test_near_dup_contaminated_band_cap(spark):
 
 
 def test_minhash_signatures_arrow_matches_expression_path(spark):
-    """The md5-family Arrow fast path (_minhash_signatures_arrow) must be
-    bit-identical to the expression pipeline it replaced (round 11,
-    guide §4): same shingling (trim = ASCII space only, Java-\\s whitespace
-    collapse, the greatest(..,1) short-text guard), same md5-derived hash,
-    same permutation mins. Pinned on the real corpus plus the edge shapes:
-    NULL text (an all-null sig row, matching char_shingles(null) -> [null]),
-    empty text (one ''-shingle), shorter-than-k text
-    (one truncated shingle), tab/newline whitespace, and string ids."""
+    """The md5 family of the Arrow signature producer must be bit-identical
+    to the expression reference (tests/dedup_reference.py): same shingling
+    (trim = ASCII space only, Java-\\s whitespace collapse, the
+    greatest(..,1) short-text guard), same md5-derived hash, same
+    permutation mins. Pinned on the real corpus plus the edge shapes: empty
+    text (one ''-shingle), shorter-than-k text (one truncated shingle),
+    tab/newline whitespace, and string ids. NULL text yields no row."""
     from pyspark.sql import functions as F
 
     docs = spark.read.parquet(
@@ -1995,42 +2081,38 @@ def test_minhash_signatures_arrow_matches_expression_path(spark):
 
     fast = {
         r["id"]: r["sig"]
-        for r in dedup._minhash_signatures_arrow(
+        for r in dedup.minhash_signatures(
             both, "doc_id", "text", 64, 5
         ).collect()
     }
-    # the expression path, forced via a non-hash32-identity wrapper that
-    # computes the SAME md5 hash (hash_fn identity check routes on object)
     slow = {
         r["id"]: r["sig"]
-        for r in dedup.minhash_signatures(
-            both, "doc_id", "text", 64, 5,
-            hash_fn=lambda c: dedup.hash32(c),
+        for r in minhash_signatures_expr(
+            both, "doc_id", "text", 64, 5, dedup.hash32
         ).collect()
     }
     assert fast == slow
-    assert fast[9001] == [None] * 64 and 9002 in fast and 9003 in fast
+    assert 9001 not in fast and 9002 in fast and 9003 in fast
 
     # string-id corpus takes the same path
-    sdocs = both.filter(F.col("text").isNotNull()).select(
+    sdocs = both.select(
         F.concat(F.lit("d"), F.col("doc_id").cast("string")).alias("doc_id"),
         "text",
     )
     sfast = {
         r["id"]: r["sig"]
-        for r in dedup._minhash_signatures_arrow(
+        for r in dedup.minhash_signatures(
             sdocs, "doc_id", "text", 16, 5
         ).collect()
     }
-    assert set(sfast) == {"d" + str(k) for k in fast if k != 9001}
+    assert set(sfast) == {"d" + str(k) for k in fast}
 
 
 def test_minhash_signatures_arrow_xx32_matches_expression_path(spark):
-    """The xx32 Arrow fast path must be bit-identical to the expression
-    pipeline with hash32_fast — including the null-text quirk (xxhash64 of
-    a NULL input is the SEED, so the fast family's null-text sig is the
-    permutation mins of hash 42, not all-null) and the >= 32-byte / UTF-8
-    multibyte XXH64 code paths (long shingle via k=40)."""
+    """The xxhash family of the Arrow producer must be bit-identical to the
+    expression reference with hash32_fast (Spark's native xxhash64) — the
+    >= 32-byte / UTF-8 multibyte XXH64 code paths included (long shingle
+    via k=40). NULL text yields no row, as in the md5 family."""
     docs = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet"
     ).select("doc_id", "text")
@@ -2048,19 +2130,31 @@ def test_minhash_signatures_arrow_xx32_matches_expression_path(spark):
     for kk in (5, 40):
         fast = {
             r["id"]: r["sig"]
-            for r in dedup._minhash_signatures_arrow(
-                both, "doc_id", "text", 16, kk, hasher="xx32"
+            for r in dedup.minhash_signatures(
+                both, "doc_id", "text", 16, kk, hash_fn=dedup.hash32_fast
             ).collect()
         }
         slow = {
             r["id"]: r["sig"]
-            for r in dedup.minhash_signatures(
-                both, "doc_id", "text", 16, kk,
-                hash_fn=lambda c: dedup.hash32_fast(c),
+            for r in minhash_signatures_expr(
+                both, "doc_id", "text", 16, kk, dedup.hash32_fast
             ).collect()
         }
         assert fast == slow, f"k={kk}"
-        assert fast[9001] is not None and None not in fast[9001]
+        assert 9001 not in fast and 9002 in fast and 9003 in fast
+
+
+def test_minhash_signatures_reject_other_hash_families(docs):
+    """The hash family is a closed choice of hash32 and hash32_fast: any
+    other callable, even one computing the same hash, raises."""
+    with pytest.raises(ValueError, match="hash_fn"):
+        dedup.minhash_signatures(
+            docs, "doc_id", "text", hash_fn=lambda c: dedup.hash32(c)
+        )
+    with pytest.raises(ValueError, match="hash_fn"):
+        dedup.minhash_lsh_pairs(
+            docs, "doc_id", "text", hash_fn=lambda c: dedup.hash32_fast(c)
+        )
 
 
 def test_count_min_arrow_build_flush_overflow_identical(spark, monkeypatch):

@@ -167,14 +167,13 @@ def test_chunk_windows_plan_has_no_exchange(spark):
 
 def test_gram_occurrences_arrow_matches_expression_path(spark):
     """The Arrow word-gram producer (round 11) must emit the exact
-    occurrence multiset of the expression path it replaced, across the edge
+    occurrence multiset of the expression reference, across the edge
     cases the expression guards encode: NULL text, empty string,
     whitespace-only, shorter-than-k, untrimmed \\t/\\n whitespace,
     uppercase (normalization), and multibyte UTF-8."""
-    from lapis_silo_spark.functions.dedup import (
-        _gram_occurrences_arrow,
-        _gram_occurrences_expr,
-    )
+    from dedup_reference import gram_occurrences_expr
+
+    from lapis_silo_spark.functions.dedup import _gram_occurrences_arrow
 
     docs = spark.createDataFrame(
         [
@@ -198,7 +197,7 @@ def test_gram_occurrences_arrow_matches_expression_path(spark):
         )
 
     for k in (2, 3):
-        exp = multiset(_gram_occurrences_expr(docs, "doc_id", "text", k))
+        exp = multiset(gram_occurrences_expr(docs, "doc_id", "text", k))
         arr = multiset(_gram_occurrences_arrow(docs, "doc_id", "text", k))
         assert arr == exp and len(exp) > 0, f"word k={k}"
 
