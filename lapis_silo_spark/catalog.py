@@ -18,10 +18,15 @@ plus hierarchy tables:
 - ``lineage_closure (col, ancestor, descendant, mode)`` ≙ LineageIndex
 - ``phylo_nodes (col, node, parent, depth, euler_in, euler_out)`` ≙ PhyloTree
 
-Scale notes: ``seq_mutations`` is the big one (rows × avg-mutations). It is
-written partitioned/bucketed so that (a) ``pos`` range predicates prune files
-and (b) joins on ``pk`` against the main table are co-located. Reference
-genomes / closures / phylo nodes are tiny → broadcast joins.
+Scale notes: ``seq_mutations`` is the big one (rows × avg-mutations).
+``storage.save_version`` writes every side table range-partitioned and
+sorted by (seq_name, pos) (coverage: (seq_name, cov_start)), with a file
+count that follows its bytes, so ``pos`` predicates skip files and Parquet
+row groups by their min/max stats. Nothing is bucketed by ``pk``: a flag
+join on ``pk`` broadcasts its position-filtered side (``expressions/
+base.py``) or shuffles it. ``storage.write_bucketed`` is the co-located
+layout for a caller that needs it. Reference genomes / closures / phylo
+nodes are tiny → broadcast joins.
 """
 
 from __future__ import annotations

@@ -930,8 +930,12 @@ _SHINGLES_SQL = (
 
 @query(
     "dedup_exact_groups",
-    f"""WITH d AS (SELECT doc_id AS id, md5({_NORM_SQL}) AS digest FROM documents)
-        SELECT id, min(id) OVER (PARTITION BY digest) AS canonical_id, digest
+    f"""WITH d AS (SELECT doc_id AS id, md5({_NORM_SQL}) AS digest
+                   FROM documents WHERE doc_id IS NOT NULL)
+        SELECT id,
+               CASE WHEN digest IS NULL THEN id
+                    ELSE min(id) OVER (PARTITION BY digest) END AS canonical_id,
+               digest
         FROM d""",
 )
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:

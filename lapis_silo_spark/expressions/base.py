@@ -66,7 +66,7 @@ class FlagJoin:
 class SeqFlagRequest:
     """A structured sequence-index flag: enough information for the compile
     boundary to BATCH all requests against one side table into a single
-    aggregated join (the Spark form of SURVEY §7.3's "collapse repeated
+    pk join (the Spark form of SURVEY §7.3's "collapse repeated
     self-semi-joins on seq_mutations" optimization).
 
     kinds: ``mutation`` (recorded mutation at ``pos``, optionally restricted
@@ -118,7 +118,7 @@ class CompileContext:
         """Register (or reuse) a structured sequence flag. Identical requests
         share one flag column — e.g. every predicate on a sequence shares the
         same ``has_seq`` flag — and all requests against one side table
-        compile into ONE aggregated join in :func:`apply_flag_joins`."""
+        compile into ONE pk join in :func:`apply_flag_joins`."""
         if request not in self.seq_flags:
             self.seq_flags[request] = self._next_name()
         return self.seq_flags[request]
@@ -156,10 +156,25 @@ class Expression:
 
 
 def _batched_seq_flag_frames(ctx: CompileContext):
-    """Compile all structured sequence-flag requests into one aggregated
-    keys-DataFrame per (side table, seq_name): a single pass over the side
-    table computes every requested boolean via conditional MAX aggregation
-    (map-side combinable), and one pk join attaches them all."""
+    """Compile all structured sequence-flag requests into one keys-DataFrame
+    per (side table, seq_name): a single pass over the side table computes
+    every requested value, and one pk join attaches them all.
+
+    A frame must hold at most one row per pk. That is free when the group
+    reads at most one side row per pk, and then the frame is a plain
+    projection — no shuffle, and a small side table joins by broadcast:
+
+    - a coverage group: the store holds one coverage range per
+      (pk, seq_name);
+    - a mutations or missing group filtered to exactly one position: the
+      store holds at most one row per (pk, seq_name, pos).
+
+    Both are store invariants that ingest, append and local-reference
+    adaptation keep (pinned by ``tests/test_seq_flag_frames.py``). A group
+    over several positions (``nOf``, mutation profiles, a multi-position
+    ``at()``) aggregates its rows per pk with conditional MAX (map-side
+    combinable) — the batching that stops one join per position, SURVEY
+    §7.3."""
     from pyspark.sql import functions as F
 
     store = ctx.database.sequence_store(ctx.table_name)
@@ -180,7 +195,7 @@ def _batched_seq_flag_frames(ctx: CompileContext):
         })
         if positions and table in ("mutations", "missing"):
             side = side.filter(F.col("pos").isin(positions))
-        aggs = []
+        values: dict[str, Column] = {}
         for req, flag in entries:
             if req.kind == "has_seq":
                 cond = F.lit(True)
@@ -191,13 +206,9 @@ def _batched_seq_flag_frames(ctx: CompileContext):
             elif req.kind == "missing":
                 cond = F.col("pos") == F.lit(req.pos)
             elif req.kind == "symbol_at":
-                # string-valued: the stored mutation symbol at pos (≤1 row
-                # per (pk, pos) by ingest construction, so MAX is a pick)
-                aggs.append(
-                    F.max(
-                        F.when(F.col("pos") == F.lit(req.pos),
-                               F.col("symbol"))
-                    ).alias(flag)
+                # string-valued: the stored mutation symbol at pos
+                values[flag] = F.when(
+                    F.col("pos") == F.lit(req.pos), F.col("symbol")
                 )
                 continue
             else:  # mutation
@@ -208,10 +219,16 @@ def _batched_seq_flag_frames(ctx: CompileContext):
                     cond = cond & ~F.col("symbol").isin(
                         list(req.exclude_symbols)
                     )
-            aggs.append(F.max(F.when(cond, F.lit(True))).alias(flag))
-        frames.append(
-            side.groupBy(F.col("pk").alias(ctx.pk)).agg(*aggs)
-        )
+            values[flag] = F.when(cond, F.lit(True))
+        pk = F.col("pk").alias(ctx.pk)
+        if table == "coverage" or len(positions) == 1:
+            frames.append(
+                side.select(pk, *[v.alias(f) for f, v in values.items()])
+            )
+        else:
+            frames.append(side.groupBy(pk).agg(
+                *[F.max(v).alias(f) for f, v in values.items()]
+            ))
     return frames
 
 

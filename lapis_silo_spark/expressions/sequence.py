@@ -64,7 +64,7 @@ class _SequencePredicate(Expression):
     # shared flag builders -------------------------------------------------
     # Each registers a STRUCTURED request (SeqFlagRequest): identical
     # requests dedupe to one flag column, and apply_flag_joins batches every
-    # request against the same side table into ONE aggregated pk join — a
+    # request against the same side table into ONE pk join — a
     # query with k sequence predicates compiles to ≤3 side-table joins
     # instead of ~4k (SURVEY §7.3's self-semi-join collapse).
     def _has_seq_flag(self, ctx: CompileContext) -> Column:
@@ -126,7 +126,7 @@ class SequenceAt:
         (``map_node.cpp:63-71``: at() is utf8_slice_codeunits — past-end
         slices are empty).
 
-    One position-filtered aggregated join per sequence (batched with every
+    One position-filtered pk join per sequence (batched with every
     other flag on that sequence by ``apply_flag_joins``) — no O(L)
     ``transform``, no genome-sized maps in the shuffle. Matches
     ``operators/reconstruct.py``'s ``char_at`` definition exactly.

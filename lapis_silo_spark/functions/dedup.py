@@ -103,15 +103,24 @@ def _spread(df: DataFrame, *cols: Column) -> DataFrame:
 
 # -- exact -------------------------------------------------------------------
 
-def exact_dedup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, canonical_id, digest): canonical = min id per normalized-text
-    digest. Pure hash-groupBy — one shuffle keyed on the digest."""
-    digests = df.select(
+def _text_digests(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, digest) of every row with an id; a NULL text has a NULL digest.
+    A null-id row is dropped as if it were absent."""
+    return df.filter(F.col(id_col).isNotNull()).select(
         F.col(id_col).alias("id"), F.md5(normalized(text_col)).alias("digest")
     )
+
+
+def exact_dedup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, canonical_id, digest): canonical = min id per normalized-text
+    digest. Pure hash-groupBy — one shuffle keyed on the digest.
+
+    A NULL text is its own canonical singleton (digest NULL): a NULL digest
+    matches no group in the left join, so it keeps its own id."""
+    digests = _text_digests(df, id_col, text_col)
     canon = digests.groupBy("digest").agg(F.min("id").alias("canonical_id"))
-    return digests.join(canon, on="digest", how="inner").select(
-        "id", "canonical_id", "digest"
+    return digests.join(canon, on="digest", how="left").select(
+        "id", F.coalesce("canonical_id", "id").alias("canonical_id"), "digest"
     )
 
 
@@ -174,7 +183,8 @@ def incremental_exact_dedup(
     :func:`exact_dedup_groups` output (or a stored digest side table)
     provides.
 
-    Returns every new row with a verdict:
+    Returns every new row that has an id with a verdict (a NULL text is
+    its own canonical singleton, so always ``kept``):
     ``(id, digest, status ∈ {kept, dup_of_base, dup_in_batch})`` —
     ``dup_of_base`` wins when both apply, ``kept`` is the batch-canonical
     (min id) of a digest unseen in the base.
@@ -184,15 +194,14 @@ def incremental_exact_dedup(
     is never read, only its digest column, which is the point: the corpus
     contributes O(distinct digests) of state, not O(bytes).
     """
-    digests = new_df.select(
-        F.col(id_col).alias("id"), F.md5(normalized(text_col)).alias("digest")
-    )
+    digests = _text_digests(new_df, id_col, text_col)
     canon = digests.groupBy("digest").agg(F.min("id").alias("_kid"))
     base = base_digests.select(F.col("digest")).distinct().withColumn(
         "_in_base", F.lit(True)
     )
+    # a NULL-text row (NULL digest) joins neither side: it is always kept
     return (
-        digests.join(canon, on="digest")
+        digests.join(canon, on="digest", how="left")
         .join(base, on="digest", how="left")
         .select(
             "id",

@@ -27,6 +27,14 @@ stalls ~40 ms: on 4 cores a 100-row result took 88 ms on 1 partition and
 these sockets over a Unix-domain socket (:mod:`lapis_silo_spark.session`;
 50 ms and 102 ms), which keeps the one-partition memory bound of the
 stream.
+
+A light query's result arrives as one partition after AQE coalescing, so
+the stream runs one result job. Counted with
+``statusTracker().getJobIdsForGroup`` on warmed queries of each light
+``lapis_serve`` class (2,500 genomes, one client, 4 cores), iteration ran
+exactly as many jobs as ``collect()`` — ``aggregated`` 2, ``lineage`` 2,
+``details`` 1, ``sequence_filter`` 4 at the median — and the walls were
+within noise of each other (73 / 81, 59 / 60, 36 / 39 and 144 / 148 ms).
 """
 
 from __future__ import annotations

@@ -27,6 +27,15 @@ embedded API calls — and then save a new version. Every version is a full
 rewrite: each table, side table, hierarchy and model is written again, even
 when only one column of one table changed. Only the recorded layout
 (partition and sort columns) carries over from the previous version.
+
+File counts follow bytes, not the writer's input partitioning. Every
+dataset is written through one exchange that has no fixed partition count
+— a range exchange for sorted datasets (the sequence side tables, the
+insertion trigram index and any table with ``table_sorts``), a rebalance
+for the rest — and AQE coalesces it. A dataset below about 1 MB of shuffle
+bytes becomes one file, so a light query on a small store scans each
+dataset in one task. A larger one gets about one file per MB up to one per
+core, and more only where a file would pass the advisory partition size.
 """
 
 from __future__ import annotations
@@ -71,6 +80,9 @@ def save_version(
     ``table_partitions`` optionally maps table name → partition columns
     (e.g. ``{"default": ["date"]}``) for partition-pruned scans at scale.
 
+    Each dataset's file count follows its bytes (see the module
+    docstring): one file below about 1 MB, up to one per core above.
+
     ``table_sorts`` maps table name → sort columns: the table is
     range-partitioned AND sorted on them at write, so every file covers a
     disjoint key range and every Parquet row group carries tight min/max
@@ -101,20 +113,41 @@ def save_version(
     vdir = _version_dir(root, version)
     os.makedirs(os.path.join(vdir, "tables"), exist_ok=True)
 
-    def _ranged(frame: DataFrame, sorts: list[str]) -> DataFrame:
-        # keep the incoming partition count: the range partitioning would
-        # otherwise fall back to spark.sql.shuffle.partitions and fan a
-        # small table out into that many near-empty files
-        n = max(1, frame.rdd.getNumPartitions())
-        return frame.repartitionByRange(n, *sorts).sortWithinPartitions(
-            *sorts
-        )
-
-    def _write(frame: DataFrame, path: str) -> None:
-        w = frame.write.mode("overwrite")
+    def _write(
+        frame: DataFrame,
+        path: str,
+        sorts: list[str] | tuple[str, ...] = (),
+        parts: list[str] | None = None,
+    ) -> None:
+        # one exchange without a fixed partition count: AQE sizes the files
+        # by bytes (module docstring)
+        if parts:
+            # Cluster rows by the partition columns before a partitionBy
+            # write: without it every INPUT partition opens a file per
+            # partition VALUE it contains — N×V small files, slow commit,
+            # slow reader listing. The rebalance targets advisory-sized
+            # output files per value and splits skewed values instead of
+            # single-tasking them (the plain ``repartition(cols)`` would).
+            # The rebalance shuffles any earlier order away, so the sort
+            # comes after it; partition columns lead so the writer needs no
+            # sort of its own.
+            frame = frame.hint("rebalance", *parts).sortWithinPartitions(
+                *parts, *sorts
+            )
+        elif sorts:
+            # a range exchange: files cover disjoint key ranges, and the
+            # sort within each gives every row group tight min/max stats
+            frame = frame.repartitionByRange(*sorts).sortWithinPartitions(
+                *sorts
+            )
+        else:
+            frame = frame.hint("rebalance")
+        writer = frame.write.mode("overwrite")
         if parquet_options:
-            w = w.options(**parquet_options)
-        w.parquet(path)
+            writer = writer.options(**parquet_options)
+        if parts:
+            writer = writer.partitionBy(*parts)
+        writer.parquet(path)
 
     manifest: dict = {
         "version": version,
@@ -127,30 +160,9 @@ def save_version(
         manifest.update(extra_manifest)
 
     for name, df in db.tables.items():
-        path = os.path.join(vdir, "tables", name)
         sorts = (table_sorts or {}).get(name) or []
         parts = (table_partitions or {}).get(name)
-        if parts:
-            # Cluster rows by the partition columns before a partitionBy
-            # write: without it every INPUT partition opens a file per
-            # partition VALUE it contains — N×V small files, slow commit,
-            # slow reader listing. The AQE rebalance hint targets
-            # advisory-sized output files per value and splits skewed
-            # values instead of single-tasking them (the plain
-            # ``repartition(cols)`` would). The rebalance shuffles any
-            # earlier order away, so the sort comes after it; partition
-            # columns lead so the writer needs no sort of its own.
-            df = df.hint("rebalance", *parts).sortWithinPartitions(
-                *parts, *sorts
-            )
-        elif sorts:
-            df = _ranged(df, sorts)
-        writer = df.write.mode("overwrite")
-        if parquet_options:
-            writer = writer.options(**parquet_options)
-        if parts:
-            writer = writer.partitionBy(*parts)
-        writer.parquet(path)
+        _write(df, os.path.join(vdir, "tables", name), sorts, parts)
         manifest["tables"][name] = {
             "primary_key": db.primary_key(name),
             "partitions": parts or [],
@@ -160,27 +172,25 @@ def save_version(
     for table, store in db.sequence_stores.items():
         base = os.path.join(vdir, "seq", table)
         for side in _SIDES:
-            # side tables RANGE-partitioned + sorted by (seq_name, pos) →
+            # side tables range-partitioned + sorted by (seq_name, pos) →
             # files cover disjoint key ranges and Parquet row-group min/max
             # stats prune position predicates (the Spark analog of the
             # reference's chunk skipping; evidenced by
-            # tests/test_storage_pruning.py). Round 3 only sorted within
-            # whatever partitioning arrived — overlapping ranges across
-            # files left the min/max stats useless.
+            # tests/test_storage_pruning.py). How many files a side table
+            # gets follows its bytes, not the ingest's partition count: a
+            # table below about 1 MB is one file, so a position lookup on a
+            # small store scans it in one task.
             side_df: DataFrame = getattr(store, side)
             sort_cols = [c for c in ("seq_name", "pos", "cov_start")
                          if c in side_df.columns]
-            if sort_cols:
-                side_df = _ranged(side_df, sort_cols)
-            _write(side_df, os.path.join(base, side))
+            _write(side_df, os.path.join(base, side), sort_cols)
         if store.local_reference is not None:
             _write(store.local_reference, os.path.join(base, "local_reference"))
         if store.insertion_trigrams is not None:
             _write(
-                store.insertion_trigrams.sortWithinPartitions(
-                    "seq_name", "pos", "trigram"
-                ),
+                store.insertion_trigrams,
                 os.path.join(base, "insertion_trigrams"),
+                ("seq_name", "pos", "trigram"),
             )
         manifest["sequence_stores"][table] = {
             "local_reference": store.local_reference is not None,
@@ -206,11 +216,11 @@ def save_version(
         manifest["phylo"].append(col)
 
     # train-once model artifacts (k-means centroids, PQ codebooks, BPE merge
-    # tables): KB-scale by construction — coalesce(1) so each loads back as a
-    # single broadcast-friendly file instead of shuffle-partition shards
+    # tables): KB-scale by construction, so the byte-sized write gives each
+    # one file that loads back broadcast-friendly
     manifest["models"] = {}
     for name, mdf in db.models.items():
-        _write(mdf.coalesce(1), os.path.join(vdir, "models", name))
+        _write(mdf, os.path.join(vdir, "models", name))
         manifest["models"][name] = db.model_meta.get(name, {})
 
     with open(os.path.join(vdir, "manifest.json"), "w") as fh:

@@ -544,6 +544,56 @@ def test_text_near_dup_forms_agree_on_edge_inputs(spark, case):
     assert not wrong, "\n".join(f"{e}: {got}" for e, got in wrong)
 
 
+@pytest.mark.parametrize("case", list(_NEAR_DUP_EXTRA))
+def test_exact_dedup_family_edge_inputs(spark, case):
+    """One edge-input behaviour for the exact family: a NULL text is its own
+    canonical singleton — kept, never ``dup_in_batch`` nor ``dup_of_base``,
+    even against a NULL-text base document; a null-id row is dropped as if
+    it were absent; two empty texts are exact duplicates; an empty frame
+    gives no rows; string ids give the same answers as long ids."""
+    docs = sorted(_NEAR_DUP_DOCS.items())
+    rows = [] if case == "empty" else docs + _NEAR_DUP_EXTRA[case]
+    strings = case == "string_ids"
+
+    def name(i):
+        return f"d{i:02d}" if strings and i is not None else i
+
+    schema = f"doc_id {'string' if strings else 'long'}, text string"
+    df = spark.createDataFrame([(name(i), t) for i, t in rows], schema)
+    base = dedup.exact_dedup_groups(spark.createDataFrame(
+        [(name(90), _NEAR_DUP_DOCS[6]), (name(91), None)], schema
+    ), "doc_id", "text").select("digest")
+
+    canonical = {1: 1, 2: 1, 5: 5, 6: 6, 7: 7}
+    status = {1: "kept", 2: "dup_in_batch", 5: "kept", 6: "dup_of_base",
+              7: "kept"}
+    if case == "null_text":
+        canonical.update({3: 3, 4: 4})
+        status.update({3: "kept", 4: "kept"})
+    elif case == "empty_text":
+        canonical.update({3: 3, 4: 3})
+        status.update({3: "kept", 4: "dup_in_batch"})
+    elif case == "empty":
+        canonical, status = {}, {}
+
+    def named(d):
+        return sorted(((name(i), name(v) if isinstance(v, int) else v)
+                       for i, v in d.items()), key=repr)
+
+    assert sorted(
+        ((r["id"], r["canonical_id"]) for r in
+         dedup.exact_dedup_groups(df, "doc_id", "text").collect()), key=repr,
+    ) == named(canonical)
+    assert sorted(
+        (r["doc_id"] for r in dedup.exact_dedup(df, "doc_id", "text")
+         .collect()), key=repr,
+    ) == sorted((name(i) for i, c in canonical.items() if i == c), key=repr)
+    assert sorted(
+        ((r["id"], r["status"]) for r in dedup.incremental_exact_dedup(
+            df, base, "doc_id", "text").collect()), key=repr,
+    ) == named(status)
+
+
 def test_remove_duplicate_char_spans_null_text(spark):
     """Null text normalizes to ('' / 0), matching the word twin's contract."""
     docs = spark.createDataFrame(

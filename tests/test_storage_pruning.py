@@ -205,3 +205,78 @@ def test_save_version_sorted_and_partitioned_layout(spark, tmp_path):
     meta = read_manifest(root)["tables"]["t"]
     assert meta["partitions"] == ["part"] and meta["sort"] == ["day"]
     assert load_version(spark, root, version).table("t").count() == n
+
+
+def _parquet_files(path: str) -> list[str]:
+    import glob
+
+    return glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
+
+
+def test_save_version_file_count_follows_bytes(spark, tmp_path):
+    """Files are sized by bytes, not by the writer's input partitions: a
+    small store (well under 1 MB per dataset) writes one file per dataset,
+    and side tables of several MB per core keep at least one file per
+    core."""
+    from lapis_silo_spark.catalog import Database, SequenceStore
+    from lapis_silo_spark.storage import save_version
+
+    cores = spark.sparkContext.defaultParallelism
+
+    def store_db(n_muts: int) -> Database:
+        # md5 keys: the exchange is sized by its compressed bytes, so the
+        # rows must not compress away
+        muts = spark.range(0, n_muts, 1, numPartitions=8).select(
+            F.md5((F.col("id") % 50_000).cast("string")).alias("pk"),
+            F.lit("main").alias("seq_name"),
+            (F.col("id") % 29_903).cast("int").alias("pos"),
+            F.lit("T").alias("symbol"),
+        )
+        cov = muts.select(
+            "pk", "seq_name", F.col("pos").alias("cov_start"),
+            (F.col("pos") + 1).alias("cov_end"),
+        )
+        db = Database(spark)
+        db.register_table(
+            "default",
+            spark.range(0, 1_000, 1, numPartitions=8).select(
+                F.md5(F.col("id").cast("string")).alias("key"),
+                (F.col("id") % 7).alias("age"),
+            ),
+            primary_key="key",
+        )
+        db.register_sequence_store(
+            "default",
+            SequenceStore(
+                mutations=muts, coverage=cov,
+                missing=muts.select("pk", "seq_name", "pos"),
+                insertions=muts.select(
+                    "pk", "seq_name", "pos", F.col("symbol").alias("inserted")
+                ),
+                reference=muts.select(
+                    "seq_name", "pos", F.col("symbol").alias("ref_symbol"),
+                    F.lit(False).alias("is_aa"),
+                ).limit(100),
+            ),
+        )
+        return db
+
+    small_root = str(tmp_path / "small")
+    version = save_version(store_db(5_000), small_root)
+    vdir = os.path.join(small_root, "versions", version)
+    datasets = [os.path.join(vdir, "tables", "default")] + [
+        os.path.join(vdir, "seq", "default", side)
+        for side in ("mutations", "coverage", "missing", "insertions",
+                     "reference")
+    ]
+    assert {d: len(_parquet_files(d)) for d in datasets} == {
+        d: 1 for d in datasets
+    }
+
+    # ~40 compressed bytes a row: 150k rows a core is several MB a core
+    large_root = str(tmp_path / "large")
+    version = save_version(store_db(150_000 * cores), large_root)
+    vdir = os.path.join(large_root, "versions", version)
+    for side in ("mutations", "coverage", "missing", "insertions"):
+        n_files = len(_parquet_files(os.path.join(vdir, "seq", "default", side)))
+        assert n_files >= cores, (side, n_files)

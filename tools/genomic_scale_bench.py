@@ -332,6 +332,18 @@ def short_read_queries(ref_length: int, count: int, seed: int = 42):
 # Harness
 # ---------------------------------------------------------------------------
 
+def _file_counts(base: str, names) -> dict[str, int]:
+    """Parquet files each dataset under ``base`` was written as."""
+    out = {}
+    for name in names:
+        path = os.path.join(base, name)
+        out[name] = sum(
+            f.endswith(".parquet")
+            for _, _, files in os.walk(path) for f in files
+        )
+    return out
+
+
 def run_workload(
     spark: SparkSession,
     label: str,
@@ -367,8 +379,16 @@ def run_workload(
         # save_version range-partitions + sorts every store side table by
         # (seq_name, pos/cov_start) itself — position predicates prune row
         # groups on the reloaded store
-        save_version(db, root)
+        version = save_version(db, root)
         result["ingest_and_save_sec"] = round(time.perf_counter() - t0, 2)
+        vdir = os.path.join(root, "versions", version)
+        result["files"] = {
+            **_file_counts(os.path.join(vdir, "tables"), ["default"]),
+            **_file_counts(
+                os.path.join(vdir, "seq", "default"),
+                ["mutations", "coverage", "missing", "insertions"],
+            ),
+        }
 
     db2 = load_version(spark, root)
     store2 = db2.sequence_store("default")
@@ -666,8 +686,9 @@ def run_clustered_layout(
     scattered input. The Spark-native equivalent of its clustered
     buffering is the engine's default side-table write layout
     (``storage.save_version``: ``repartitionByRange + sortWithinPartitions``
-    on (seq_name, pos / cov_start)) — a shuffle at write time instead of
-    ingest-side buffer management. Three scenarios over identical reads:
+    on (seq_name, pos / cov_start), file count sized by bytes) — a shuffle
+    at write time instead of ingest-side buffer management. Three
+    scenarios over identical reads:
 
       1. amplicon-sorted input, RAW side-table write (ideal for free)
       2. shuffled input, RAW write (coverage scattered — no row-group
@@ -732,11 +753,13 @@ def run_clustered_layout(
                      "reference"):
             frame: DataFrame = getattr(store, side)
             if ranged:
+                # the engine's side-table write: a range exchange without a
+                # partition count, so AQE sizes the files by bytes
                 sort_cols = [c for c in ("seq_name", "pos", "cov_start")
                              if c in frame.columns]
                 if sort_cols:
                     frame = frame.repartitionByRange(
-                        nparts, *sort_cols
+                        *sort_cols
                     ).sortWithinPartitions(*sort_cols)
             frame.write.mode("overwrite").parquet(
                 os.path.join(sdir, side)
@@ -744,7 +767,10 @@ def run_clustered_layout(
             sides[side] = spark.read.parquet(os.path.join(sdir, side))
         main_df.write.mode("overwrite").parquet(os.path.join(sdir, "main"))
         entry: dict = {
-            "ingest_and_write_sec": round(time.perf_counter() - t0, 2)
+            "ingest_and_write_sec": round(time.perf_counter() - t0, 2),
+            "files": _file_counts(
+                sdir, ["main", "mutations", "coverage", "missing"]
+            ),
         }
 
         db = Database(spark)
