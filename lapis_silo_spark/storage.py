@@ -35,7 +35,11 @@ insertion trigram index and any table with ``table_sorts``), a rebalance
 for the rest — and AQE coalesces it. A dataset below about 1 MB of shuffle
 bytes becomes one file, so a light query on a small store scans each
 dataset in one task. A larger one gets about one file per MB up to one per
-core, and more only where a file would pass the advisory partition size.
+core. The two exchanges differ above that: AQE only merges range
+partitions, so a sorted dataset never gets more files than
+``spark.sql.shuffle.partitions`` (the session default is one per core),
+however large its files grow; a rebalance is also split where a file would
+pass the advisory partition size.
 """
 
 from __future__ import annotations
@@ -81,7 +85,9 @@ def save_version(
     (e.g. ``{"default": ["date"]}``) for partition-pruned scans at scale.
 
     Each dataset's file count follows its bytes (see the module
-    docstring): one file below about 1 MB, up to one per core above.
+    docstring): one file below about 1 MB, up to one per core above. A
+    sorted dataset is capped at ``spark.sql.shuffle.partitions`` files and
+    is not split by bytes beyond that.
 
     ``table_sorts`` maps table name → sort columns: the table is
     range-partitioned AND sorted on them at write, so every file covers a
@@ -179,7 +185,8 @@ def save_version(
             # tests/test_storage_pruning.py). How many files a side table
             # gets follows its bytes, not the ingest's partition count: a
             # table below about 1 MB is one file, so a position lookup on a
-            # small store scans it in one task.
+            # small store scans it in one task, and a large one is capped at
+            # spark.sql.shuffle.partitions files.
             side_df: DataFrame = getattr(store, side)
             sort_cols = [c for c in ("seq_name", "pos", "cov_start")
                          if c in side_df.columns]

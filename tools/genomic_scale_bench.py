@@ -332,16 +332,11 @@ def short_read_queries(ref_length: int, count: int, seed: int = 42):
 # Harness
 # ---------------------------------------------------------------------------
 
-def _file_counts(base: str, names) -> dict[str, int]:
-    """Parquet files each dataset under ``base`` was written as."""
-    out = {}
-    for name in names:
-        path = os.path.join(base, name)
-        out[name] = sum(
-            f.endswith(".parquet")
-            for _, _, files in os.walk(path) for f in files
-        )
-    return out
+def _parquet_file_count(path: str) -> int:
+    """Parquet files the dataset at ``path`` was written as."""
+    return sum(
+        f.endswith(".parquet") for _, _, files in os.walk(path) for f in files
+    )
 
 
 def run_workload(
@@ -383,11 +378,15 @@ def run_workload(
         result["ingest_and_save_sec"] = round(time.perf_counter() - t0, 2)
         vdir = os.path.join(root, "versions", version)
         result["files"] = {
-            **_file_counts(os.path.join(vdir, "tables"), ["default"]),
-            **_file_counts(
-                os.path.join(vdir, "seq", "default"),
-                ["mutations", "coverage", "missing", "insertions"],
+            "default": _parquet_file_count(
+                os.path.join(vdir, "tables", "default")
             ),
+            **{
+                side: _parquet_file_count(
+                    os.path.join(vdir, "seq", "default", side)
+                )
+                for side in ("mutations", "coverage", "missing", "insertions")
+            },
         }
 
     db2 = load_version(spark, root)
@@ -686,15 +685,15 @@ def run_clustered_layout(
     scattered input. The Spark-native equivalent of its clustered
     buffering is the engine's default side-table write layout
     (``storage.save_version``: ``repartitionByRange + sortWithinPartitions``
-    on (seq_name, pos / cov_start), file count sized by bytes) — a shuffle
-    at write time instead of ingest-side buffer management. Three
-    scenarios over identical reads:
+    on (seq_name, pos / cov_start)) — a shuffle at write time instead of
+    ingest-side buffer management. Three scenarios over identical reads:
 
       1. amplicon-sorted input, RAW side-table write (ideal for free)
       2. shuffled input, RAW write (coverage scattered — no row-group
          pruning for position predicates)
-      3. shuffled input, the engine's DEFAULT range-sorted write —
-         must recover scenario 1's query profile
+      3. shuffled input, written by ``save_version`` itself (the
+         engine's default layout) — must recover scenario 1's query
+         profile
 
     Per scenario: ingest+write wall, the query stream's latency stats, and
     the mutations-side scan ``numOutputRows`` for a fixed position filter
@@ -705,6 +704,7 @@ def run_clustered_layout(
     from lapis_silo_spark.operators.relational import Pipeline
     from lapis_silo_spark.saneql import execute_query
     from lapis_silo_spark.sources.ndjson import TableConfig, ingest_records
+    from lapis_silo_spark.storage import save_version
 
     base = short_read_records(spark, reference, n)
     nparts = spark.sparkContext.defaultParallelism
@@ -742,42 +742,48 @@ def run_clustered_layout(
     # matching rows exist to be read
     probe_pos: int | None = None
     queries = short_read_queries(len(reference), n_queries)
+    sides_written = ("mutations", "coverage", "missing", "insertions",
+                     "reference")
 
     for name, records, ranged in scenarios:
         sdir = os.path.join(root, name)
         shutil.rmtree(sdir, ignore_errors=True)
         t0 = time.perf_counter()
         main_df, store = ingest_records(spark, records, config)
-        sides: dict[str, DataFrame] = {}
-        for side in ("mutations", "coverage", "missing", "insertions",
-                     "reference"):
-            frame: DataFrame = getattr(store, side)
-            if ranged:
-                # the engine's side-table write: a range exchange without a
-                # partition count, so AQE sizes the files by bytes
-                sort_cols = [c for c in ("seq_name", "pos", "cov_start")
-                             if c in frame.columns]
-                if sort_cols:
-                    frame = frame.repartitionByRange(
-                        *sort_cols
-                    ).sortWithinPartitions(*sort_cols)
-            frame.write.mode("overwrite").parquet(
-                os.path.join(sdir, side)
+        if ranged:
+            # the engine's own write: save_version lays every dataset out
+            # (side tables range-sorted, file counts sized by bytes)
+            written = Database(spark)
+            written.register_table("default", main_df, primary_key="key")
+            written.register_sequence_store("default", store)
+            vdir = os.path.join(sdir, "versions", save_version(written, sdir))
+            paths = {"main": os.path.join(vdir, "tables", "default")}
+            paths.update(
+                (side, os.path.join(vdir, "seq", "default", side))
+                for side in sides_written
             )
-            sides[side] = spark.read.parquet(os.path.join(sdir, side))
-        main_df.write.mode("overwrite").parquet(os.path.join(sdir, "main"))
+        else:
+            paths = {"main": os.path.join(sdir, "main")}
+            paths.update((side, os.path.join(sdir, side))
+                         for side in sides_written)
+            main_df.write.mode("overwrite").parquet(paths["main"])
+            for side in sides_written:
+                getattr(store, side).write.mode("overwrite").parquet(
+                    paths[side]
+                )
         entry: dict = {
             "ingest_and_write_sec": round(time.perf_counter() - t0, 2),
-            "files": _file_counts(
-                sdir, ["main", "mutations", "coverage", "missing"]
-            ),
+            "files": {
+                dataset: _parquet_file_count(paths[dataset])
+                for dataset in ("main", "mutations", "coverage", "missing")
+            },
         }
 
+        sides = {side: spark.read.parquet(paths[side])
+                 for side in sides_written}
         db = Database(spark)
         db.register_table(
-            "default",
-            spark.read.parquet(os.path.join(sdir, "main")),
-            primary_key="key",
+            "default", spark.read.parquet(paths["main"]), primary_key="key"
         )
         db.register_sequence_store("default", SequenceStore(**sides))
 
