@@ -22,11 +22,21 @@ Scale notes: ``seq_mutations`` is the big one (rows × avg-mutations).
 ``storage.save_version`` writes every side table range-partitioned and
 sorted by (seq_name, pos) (coverage: (seq_name, cov_start)), with a file
 count that follows its bytes, so ``pos`` predicates skip files and Parquet
-row groups by their min/max stats. Nothing is bucketed by ``pk``: a flag
-join on ``pk`` broadcasts its position-filtered side (``expressions/
-base.py``) or shuffles it. ``storage.write_bucketed`` is the co-located
-layout for a caller that needs it. Reference genomes / closures / phylo
-nodes are tiny → broadcast joins.
+row groups by their min/max stats. Nothing is bucketed by ``pk``.
+
+How a flag join on ``pk`` plans depends on the loaded layout
+(:attr:`Database.single_partition`, ``expressions/base.py``):
+
+- a store whose every dataset fits one scan split is loaded
+  single-partition, and all of a filter's pk flags fold into one frame
+  joined by a shuffled hash join that needs no exchange, so a light query
+  runs as one Spark job;
+- any other store, and every database built by registration (for example
+  :meth:`Database.register_parquet_dir`), broadcasts each position-filtered
+  side, or shuffles it when it is too large to broadcast.
+
+``storage.write_bucketed`` is the co-located layout for a caller that needs
+it. Reference genomes / closures / phylo nodes are tiny → broadcast joins.
 """
 
 from __future__ import annotations
@@ -152,6 +162,11 @@ class Database:
         self.models: dict[str, DataFrame] = {}
         # model artifact name -> free-form metadata dict (kind, params)
         self.model_meta: dict[str, dict] = {}
+        # True when every table and side table is one partition:
+        # storage.load_version sets it for a store whose datasets each fit
+        # one scan split, and registering a table or sequence store clears
+        # it. Flag joins then plan without exchanges (expressions/base.py).
+        self.single_partition = False
 
     # -- registration -----------------------------------------------------
     def register_table(
@@ -159,10 +174,12 @@ class Database:
     ) -> None:
         self.tables[name] = df
         self.primary_keys[name] = primary_key
+        self.single_partition = False
         df.createOrReplaceTempView(name)
 
     def register_sequence_store(self, table: str, store: SequenceStore) -> None:
         self.sequence_stores[table] = store
+        self.single_partition = False
 
     def register_lineage(
         self, column: str, closure: DataFrame,

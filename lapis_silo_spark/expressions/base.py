@@ -158,11 +158,12 @@ class Expression:
 def _batched_seq_flag_frames(ctx: CompileContext):
     """Compile all structured sequence-flag requests into one keys-DataFrame
     per (side table, seq_name): a single pass over the side table computes
-    every requested value, and one pk join attaches them all.
+    every requested value. Returns ``(rows, one_per_pk)`` pairs: ``rows``
+    holds the pk and one value column per flag, and ``one_per_pk`` says
+    whether it already holds at most one row per pk.
 
-    A frame must hold at most one row per pk. That is free when the group
-    reads at most one side row per pk, and then the frame is a plain
-    projection — no shuffle, and a small side table joins by broadcast:
+    That is free when the group reads at most one side row per pk, and then
+    the frame is a plain projection:
 
     - a coverage group: the store holds one coverage range per
       (pk, seq_name);
@@ -172,9 +173,9 @@ def _batched_seq_flag_frames(ctx: CompileContext):
     Both are store invariants that ingest, append and local-reference
     adaptation keep (pinned by ``tests/test_seq_flag_frames.py``). A group
     over several positions (``nOf``, mutation profiles, a multi-position
-    ``at()``) aggregates its rows per pk with conditional MAX (map-side
-    combinable) — the batching that stops one join per position, SURVEY
-    §7.3."""
+    ``at()``) is aggregated per pk with conditional MAX by
+    :func:`apply_flag_joins` — the batching that stops one join per
+    position, SURVEY §7.3."""
     from pyspark.sql import functions as F
 
     store = ctx.database.sequence_store(ctx.table_name)
@@ -220,34 +221,64 @@ def _batched_seq_flag_frames(ctx: CompileContext):
                         list(req.exclude_symbols)
                     )
             values[flag] = F.when(cond, F.lit(True))
-        pk = F.col("pk").alias(ctx.pk)
-        if table == "coverage" or len(positions) == 1:
-            frames.append(
-                side.select(pk, *[v.alias(f) for f, v in values.items()])
-            )
-        else:
-            frames.append(side.groupBy(pk).agg(
-                *[F.max(v).alias(f) for f, v in values.items()]
-            ))
+        rows = side.select(
+            F.col("pk").alias(ctx.pk),
+            *[v.alias(f) for f, v in values.items()],
+        )
+        frames.append((rows, table == "coverage" or len(positions) == 1))
     return frames
 
 
 def apply_flag_joins(df: DataFrame, ctx: CompileContext) -> tuple[DataFrame, list[str]]:
-    """Left-join every pending flag onto ``df``; return (df, flag_cols)."""
+    """Left-join every pending flag onto ``df``; return (df, flag_cols).
+
+    On a database of multi-partition datasets every flag frame joins on its
+    own, and the planner broadcasts a small one. On a single-partition
+    database (:attr:`Database.single_partition`) every pk-keyed frame folds
+    into one, and that one joins by a shuffled hash join: both inputs are
+    one partition, so the join needs no Exchange and no BroadcastExchange
+    and the query stays one Spark job. Only one such join per query keeps
+    that shape, because the planner keeps a one-partition join input
+    unshuffled only while its estimated size stays within
+    ``spark.sql.maxSinglePartitionBytes``, and it estimates a join's output
+    as the product of its inputs' sizes: a second flag join would shuffle
+    both of its sides."""
     from pyspark.sql import functions as F
 
-    flags: list[str] = []
+    single = ctx.database is not None and ctx.database.single_partition
+    by_pk: list[tuple[DataFrame, bool]] = []
     if ctx.seq_flags:
-        for frame in _batched_seq_flag_frames(ctx):
-            flag_cols = [c for c in frame.columns if c != ctx.pk]
-            df = df.join(frame, on=ctx.pk, how="left")
-            flags.extend(flag_cols)
+        by_pk.extend(_batched_seq_flag_frames(ctx))
         ctx.seq_flags = {}
+    other: list[FlagJoin] = []
     for fj in ctx.flag_joins:
+        if fj.key_cols == [ctx.pk]:
+            by_pk.append((fj.keys.select(
+                ctx.pk, F.lit(True).alias(fj.flag_name)
+            ), False))
+        else:
+            other.append(fj)
+    ctx.flag_joins = []
+
+    if single and by_pk:
+        rows = by_pk[0][0]
+        for more, _ in by_pk[1:]:
+            rows = rows.unionByName(more, allowMissingColumns=True)
+        by_pk = [(rows.coalesce(1), len(by_pk) == 1 and by_pk[0][1])]
+
+    flags: list[str] = []
+    for rows, one_per_pk in by_pk:
+        flag_cols = [c for c in rows.columns if c != ctx.pk]
+        frame = rows if one_per_pk else rows.groupBy(ctx.pk).agg(
+            *[F.max(c).alias(c) for c in flag_cols]
+        )
+        df = df.join(frame.hint("shuffle_hash") if single else frame,
+                     on=ctx.pk, how="left")
+        flags.extend(flag_cols)
+    for fj in other:
         keyed = fj.keys.dropDuplicates(fj.key_cols).withColumn(
             fj.flag_name, F.lit(True)
         )
         df = df.join(keyed, on=fj.key_cols, how="left")
         flags.append(fj.flag_name)
-    ctx.flag_joins = []
     return df, flags

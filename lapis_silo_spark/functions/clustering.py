@@ -163,26 +163,24 @@ def _fit_centroids(
     # the centroid rounding grid absorbs by design (the DuckDB oracle
     # already sums in a third order — oracle-gated + sf1 replay stable).
     # The distributed loop below remains the unbounded-scale path.
-    # ONE bounded probe job returns both the capped row count and the
-    # vector width (round 12 — the former shape was a count-only probe,
-    # blind to dim): the admit decision is min(row limit, byte limit /
-    # row bytes), so a wide-embedding table falls through to the
-    # distributed loop instead of collecting multi-GB of driver numpy.
+    # The admit decision is min(row limit, byte limit / row bytes), so a
+    # wide-embedding table falls through to the distributed loop instead
+    # of collecting multi-GB of driver numpy. The capped row count reads
+    # only ids; the width comes from one non-null vector, and only when
+    # the count is within the row limit.
     limit = KMEANS_DRIVER_ROW_LIMIT
-    probe = None
+    admit = False
     if limit:
-        probe = (
-            base.limit(limit + 1)
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.max(F.size("vec")).alias("dim"),
+        n = base.select("id").limit(limit + 1).count()
+        if n <= limit:
+            first = (
+                base.filter(F.col("vec").isNotNull())
+                .select(F.size("vec").alias("dim"))
+                .first()
             )
-            .first()
-        )
-    if probe is not None and probe["n"] <= min(
-        limit,
-        KMEANS_DRIVER_BYTE_LIMIT // (8 * max(1, probe["dim"] or 1)),
-    ):
+            dim = first["dim"] if first is not None else 1
+            admit = n <= KMEANS_DRIVER_BYTE_LIMIT // (8 * max(1, dim))
+    if admit:
         import numpy as np
 
         pdf = base.toPandas()

@@ -24,35 +24,10 @@ from lapis_silo_spark.functions.dedup import (
 from lapis_silo_spark.session import local_relation
 
 
-def _hyperplane_component(plane: int, dim: int) -> Column:
-    """Deterministic pseudo-random component in [-1, 1): md5(plane:dim)."""
-    h = F.conv(
-        F.substring(F.md5(F.concat_ws(":", F.lit(plane), F.lit(dim))), 1, 8), 16, 10
-    ).cast("long")
-    return (h % 2001 - 1000).cast("double") / 1000.0
-
-
-def lsh_signature(vec_col: Column, n_planes: int, dim: int) -> Column:
-    """Random-hyperplane (sign) signature as a bit-string, e.g. '1011…'.
-
-    Expression form — fine for a handful of planes. For full plane banks use
-    ``lsh_table_buckets`` (vectorized): a planes×dims expression tree blows
-    past the JVM's 64 KB method limit, and Spark's interpreted fallback
-    tree-walks every multiply-add per row.
-    """
-    bits = []
-    for p in range(n_planes):
-        dot = F.lit(0.0)
-        for d in range(dim):
-            dot = dot + vec_col.getItem(d) * _hyperplane_component(p, d)
-        bits.append(F.when(dot >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*bits)
-
-
 def _plane_matrix(total_planes: int, dim: int) -> "object":
     """The md5-derived hyperplane bank as a numpy (total_planes × dim)
-    matrix — bit-identical coefficients to ``_hyperplane_component``
-    (first 8 hex chars of md5("p:d") → ((h % 2001) - 1000)/1000)."""
+    matrix: coefficient (p, d) is ((h % 2001) - 1000) / 1000 with h the
+    first 8 hex chars of md5("p:d")."""
     import hashlib
 
     import numpy as np
@@ -539,7 +514,7 @@ def lsh_candidate_pairs(
 
     Candidates must share a full sign-signature in at least one of
     ``n_tables`` plane sets; survivors are verified with the exact cosine.
-    Plane coefficients are md5-derived (``_hyperplane_component``) so an
+    Plane coefficients are md5-derived (``_plane_matrix``) so an
     external SQL engine can reproduce the candidate set exactly.
 
     Candidates are verified INSIDE per-bucket blocked matmuls — the

@@ -28,13 +28,17 @@ these sockets over a Unix-domain socket (:mod:`lapis_silo_spark.session`;
 50 ms and 102 ms), which keeps the one-partition memory bound of the
 stream.
 
-A light query's result arrives as one partition after AQE coalescing, so
-the stream runs one result job. Counted with
-``statusTracker().getJobIdsForGroup`` on warmed queries of each light
-``lapis_serve`` class (2,500 genomes, one client, 4 cores), iteration ran
-exactly as many jobs as ``collect()`` — ``aggregated`` 2, ``lineage`` 2,
-``details`` 1, ``sequence_filter`` 4 at the median — and the walls were
-within noise of each other (73 / 81, 59 / 60, 36 / 39 and 144 / 148 ms).
+A light query's result arrives as one partition, so the stream runs one
+result job. On a store that ``storage.load_version`` loads
+single-partition (every dataset one small file), that is the query's only
+job: counted with ``statusTracker().getJobIdsForGroup`` on warmed queries
+of each light ``lapis_serve`` class (2,500 genomes, one client, 4 cores),
+``aggregated``, ``lineage``, ``details`` and all five ``sequence_filter``
+kinds ran one job each, with no Exchange and no BroadcastExchange
+(pinned by ``tests/test_single_split_plans.py``). On a store with
+multi-file datasets an aggregate adds a shuffle-map job and each broadcast
+flag side one more (``aggregated`` 2, ``sequence_filter`` 3-5 on the same
+data loaded as written).
 """
 
 from __future__ import annotations

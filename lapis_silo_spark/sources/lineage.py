@@ -89,25 +89,6 @@ def build_lineage_closure(
     )
 
 
-def build_lineage_relation(
-    spark: SparkSession, parents: dict[str, list[str]]
-) -> DataFrame:
-    """Relation table per ``documentation/lineage_definitions.md:96-140``:
-    one row per (lineage, direct parent) with recombinant markers."""
-    rows = []
-    for lineage, ps in sorted(parents.items()):
-        if not ps:
-            rows.append((lineage, lineage, None, False))
-        else:
-            is_rec = len(ps) > 1
-            for p in ps:
-                rows.append((lineage, lineage, p, is_rec))
-    return local_relation(
-        spark, rows,
-        "id string, lineage string, parent string, is_recombinant_edge boolean",
-    )
-
-
 def parse_lineage_definition_yaml(
     text: str,
 ) -> tuple[dict[str, list[str]], dict[str, str]]:

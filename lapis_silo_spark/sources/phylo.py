@@ -187,7 +187,3 @@ def build_phylo_nodes(
         "euler_out long, branch_length double",
     )
 
-
-def load_newick_file(spark: SparkSession, path: str) -> DataFrame:
-    with open(path) as fh:
-        return build_phylo_nodes(spark, parse_newick(fh.read()))

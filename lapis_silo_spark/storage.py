@@ -40,6 +40,14 @@ partitions, so a sorted dataset never gets more files than
 ``spark.sql.shuffle.partitions`` (the session default is one per core),
 however large its files grow; a rebalance is also split where a file would
 pass the advisory partition size.
+
+Single-partition serving relies on these byte-sized files. When every
+dataset of a version is one file that fits one scan split,
+:func:`load_version` loads each as one partition, and a light query plans
+without exchanges and runs as one Spark job (``expressions/base.py``,
+``catalog.py``). A writer that split a small dataset into several files
+would silently bring back the shuffles and broadcasts of a multi-file
+store.
 """
 
 from __future__ import annotations
@@ -252,37 +260,75 @@ def read_manifest(root: str, version: str | None = None) -> dict:
         return json.load(fh)
 
 
+def _fits_one_split(spark: SparkSession, vdir: str) -> bool:
+    """True when every dataset under ``vdir`` is at most one Parquet file
+    that Spark scans as one split: no partition directories (``col=value``),
+    and each file no larger than the split size Spark would compute for it
+    (``FilePartition.maxSplitBytes``: ``spark.sql.files.maxPartitionBytes``
+    capped, ``openCostInBytes`` floored) nor than
+    ``spark.sql.maxSinglePartitionBytes``, the size up to which the planner
+    keeps a one-partition join input unshuffled. Decided from the file
+    listing alone: planning each dataset to ask its partition count cost
+    0.15-0.2 s of api start-up."""
+    conf = spark._jsparkSession.sessionState().conf()
+    to_bytes = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes
+    max_split = conf.filesMaxPartitionBytes()
+    open_cost = conf.filesOpenCostInBytes()
+    single_max = to_bytes(spark.conf.get("spark.sql.maxSinglePartitionBytes"))
+    parallelism = spark.sparkContext.defaultParallelism
+    for dirpath, _, files in os.walk(vdir):
+        data = [f for f in files if f.endswith(".parquet")]
+        if not data:
+            continue
+        if len(data) > 1 or "=" in os.path.relpath(dirpath, vdir):
+            return False
+        size = os.path.getsize(os.path.join(dirpath, data[0]))
+        split = min(max_split, max(open_cost, (size + open_cost) // parallelism))
+        if size > min(split, single_max):
+            return False
+    return True
+
+
 def load_version(
     spark: SparkSession, root: str, version: str | None = None
 ) -> Database:
-    """Load a version directory into a registered :class:`Database`."""
+    """Load a version directory into a registered :class:`Database`.
+
+    A version whose datasets each fit one scan split (:func:`_fits_one_split`)
+    loads every dataset as ``coalesce(1)`` and sets
+    :attr:`Database.single_partition`: the planner then knows each scan is
+    one partition, so aggregates and flag joins over it need no exchange
+    and a light query runs as one Spark job. Any other version loads as
+    written."""
     version = version or latest_version(root)
     vdir = _version_dir(root, version)
     with open(os.path.join(vdir, "manifest.json")) as fh:
         manifest = json.load(fh)
+    single = _fits_one_split(spark, vdir)
+
+    def read(path: str) -> DataFrame:
+        df = spark.read.parquet(path)
+        return df.coalesce(1) if single else df
 
     db = Database(spark)
     db.data_version = manifest["version"]
     for name, meta in manifest["tables"].items():
-        df = spark.read.parquet(os.path.join(vdir, "tables", name))
+        df = read(os.path.join(vdir, "tables", name))
         db.register_table(name, df, primary_key=meta["primary_key"])
     for table, entry in manifest["sequence_stores"].items():
         base = os.path.join(vdir, "seq", table)
-        sides = {
-            side: spark.read.parquet(os.path.join(base, side))
-            for side in _SIDES
-        }
+        sides = {side: read(os.path.join(base, side)) for side in _SIDES}
         # entry is True in pre-adaptation manifests, a dict afterwards
         if isinstance(entry, dict):
             for opt in ("local_reference", "insertion_trigrams"):
                 if entry.get(opt):
-                    sides[opt] = spark.read.parquet(os.path.join(base, opt))
+                    sides[opt] = read(os.path.join(base, opt))
         db.register_sequence_store(table, SequenceStore(**sides))
     for col, entry in manifest["lineages"].items():
         base = os.path.join(vdir, "lineage", col)
-        closure = spark.read.parquet(os.path.join(base, "closure"))
+        closure = read(os.path.join(base, "closure"))
         relation = (
-            spark.read.parquet(os.path.join(base, "relation"))
+            read(os.path.join(base, "relation"))
             if entry.get("relation") else None
         )
         text = None
@@ -291,16 +337,15 @@ def load_version(
                 text = fh.read()
         db.register_lineage(col, closure, relation, definition_text=text)
     for col in manifest["phylo"]:
-        db.register_phylo_tree(
-            col, spark.read.parquet(os.path.join(vdir, "phylo", col))
-        )
+        db.register_phylo_tree(col, read(os.path.join(vdir, "phylo", col)))
     # "models" is absent from pre-round-8 manifests
     for name, meta in manifest.get("models", {}).items():
         db.register_model(
             name,
-            spark.read.parquet(os.path.join(vdir, "models", name)),
+            read(os.path.join(vdir, "models", name)),
             meta=meta,
         )
+    db.single_partition = single
     return db
 
 

@@ -21,6 +21,7 @@ from lapis_silo_spark.operators import Pipeline
 from lapis_silo_spark.sources.adapt import adapt_local_reference
 from lapis_silo_spark.sources.ndjson import TableConfig, ingest_records
 from lapis_silo_spark.storage import append_rows, load_version, save_version
+from store_layouts import multi_file_copy
 
 REF = "ACGTACGTAC"  # pos 2 'C', pos 4 'T', pos 7 'G'
 REF_S = "TTTTGGGG"
@@ -95,9 +96,28 @@ def appended_db(spark):
 
 
 @pytest.fixture(scope="module")
-def saved_db(spark, appended_db, tmp_path_factory):
+def saved_root(appended_db, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("flag_frames") / "store")
-    return load_version(spark, root, save_version(appended_db, root))
+    save_version(appended_db, root)
+    return root
+
+
+@pytest.fixture(scope="module")
+def saved_db(spark, saved_root):
+    """The saved store: each dataset is one small file, so it loads
+    single-partition."""
+    db = load_version(spark, saved_root)
+    assert db.single_partition
+    return db
+
+
+@pytest.fixture(scope="module")
+def multi_file_db(spark, saved_root, tmp_path_factory):
+    """The same data with multi-file datasets, which loads as written."""
+    root = str(tmp_path_factory.mktemp("flag_frames_multi") / "store")
+    db = load_version(spark, multi_file_copy(spark, saved_root, root))
+    assert not db.single_partition
+    return db
 
 
 def _max_rows_per_key(frame, keys) -> int:
@@ -186,14 +206,30 @@ def test_single_position_flag_is_a_projection(saved_db):
     assert not [n for n in physical[0] if "Aggregate" in n or n == "Exchange"]
 
 
-def test_multi_position_flags_keep_one_aggregate(saved_db):
-    df = _count(saved_db, NOf(2, [
+def _multi_position_count(db):
+    return _count(db, NOf(2, [
         SymbolEquals("main", 2, "C"),
         SymbolEquals("main", 4, "A"),
         SymbolEquals("main", 7, "T"),
     ]))
+
+
+def test_multi_position_flags_keep_one_aggregate(multi_file_db):
+    df = _multi_position_count(multi_file_db)
     assert df.first()["count"] == 1  # r13
     logical, physical = _plans(df)
     assert len(logical) == len(physical) == 1
     assert logical[0].count("Aggregate") == 1
     assert physical[0].count("Exchange") == 1
+
+
+def test_multi_position_flags_on_single_split_store_need_no_exchange(
+    saved_db,
+):
+    df = _multi_position_count(saved_db)
+    assert df.first()["count"] == 1  # r13
+    logical, physical = _plans(df)
+    assert len(logical) == len(physical) == 1
+    assert logical[0].count("Aggregate") == 1
+    assert physical[0].count("Exchange") == 0
+    assert "BroadcastExchange" not in physical[0]

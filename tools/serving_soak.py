@@ -16,7 +16,11 @@ Usage::
 Serves the sf genomic dataset (driver_queries.genomic_db) on
 127.0.0.1:8399 from a daemon thread and drives it over real sockets.
 Prints one JSON line per (concurrency, query-class) plus a summary line
-per level.
+per level. Next to the latencies it prints two counts that do not depend
+on timing noise: the Spark jobs each request ran (its job group,
+``http-query-<X-Request-Id>``), averaged per class, and the Janino
+compiles of each level (Spark's ``CodegenMetrics``), which fall to about
+zero once the generated-code cache holds every query's classes.
 """
 
 from __future__ import annotations
@@ -74,8 +78,18 @@ def main() -> int:
     from lapis_silo_spark.server import create_app
     from lapis_silo_spark.session import get_spark
 
-    extra = {"spark.scheduler.mode": "FAIR"} if fair else None
+    # keep every finished job in the status store for the per-request count
+    extra = {"spark.ui.retainedJobs": "100000"}
+    if fair:
+        extra["spark.scheduler.mode"] = "FAIR"
     spark = get_spark(app_name="serving-soak", extra_conf=extra)
+    tracker = spark.sparkContext.statusTracker()
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiles() -> int:
+        """Janino compiles in this JVM so far."""
+        return codegen.METRIC_COMPILATION_TIME().getCount()
+
     print(json.dumps({
         "scheduler": spark.sparkContext.getConf().get(
             "spark.scheduler.mode", "FIFO"
@@ -92,13 +106,13 @@ def main() -> int:
         daemon=True,
     ).start()
 
-    def post(query: str) -> tuple[int, float, str]:
+    def post(query: str, rid: str | None = None) -> tuple[int, float, str]:
         from urllib.error import HTTPError
 
         t0 = time.monotonic()
         req = urlreq.Request(
             f"http://127.0.0.1:{PORT}/query", data=query.encode(),
-            method="POST",
+            method="POST", headers={"X-Request-Id": rid} if rid else {},
         )
         try:
             with urlreq.urlopen(req, timeout=300) as resp:
@@ -179,22 +193,27 @@ def main() -> int:
 
     names = list(QUERY_MIX)
     for level in levels:
-        jobs = [(names[i % len(names)], QUERY_MIX[names[i % len(names)]])
-                for i in range(n_requests)]
+        jobs = [(names[i % len(names)], QUERY_MIX[names[i % len(names)]],
+                 f"soak-{level}-{i}") for i in range(n_requests)]
         lat: dict[str, list[float]] = {n: [] for n in names}
+        spark_jobs: dict[str, list[int]] = {n: [] for n in names}
         timeouts: dict[str, int] = {n: 0 for n in names}
+        compiles_before = compiles()
         t0 = time.monotonic()
         with ThreadPoolExecutor(max_workers=level) as pool:
-            for name, (status, ms, body) in zip(
-                [j[0] for j in jobs],
-                pool.map(lambda j: post(j[1]), jobs),
+            for (name, _, rid), (status, ms, body) in zip(
+                jobs, pool.map(lambda j: post(j[1], j[2]), jobs),
             ):
                 if timeout_s and status == 500 and "timed out" in body:
                     timeouts[name] += 1
                     continue
                 assert status == 200, (name, status, body[:200])
                 lat[name].append(ms)
+                spark_jobs[name].append(
+                    len(tracker.getJobIdsForGroup(f"http-query-{rid}"))
+                )
         wall = time.monotonic() - t0
+        level_compiles = compiles() - compiles_before
         for name in names:
             xs = lat[name]
             out = {
@@ -203,6 +222,10 @@ def main() -> int:
                 "n": len(xs),
                 "p50_ms": round(percentile(xs, 50), 1) if xs else None,
                 "p95_ms": round(percentile(xs, 95), 1) if xs else None,
+                "jobs_per_request": (
+                    round(statistics.mean(spark_jobs[name]), 2)
+                    if spark_jobs[name] else None
+                ),
             }
             if timeout_s:
                 out["timeouts"] = timeouts[name]
@@ -212,6 +235,7 @@ def main() -> int:
             "total_requests": n_requests,
             "wall_sec": round(wall, 2),
             "throughput_rps": round(n_requests / wall, 2),
+            "janino_compiles": level_compiles,
         }))
     return 0
 
