@@ -167,6 +167,10 @@ class Database:
         # one scan split, and registering a table or sequence store clears
         # it. Flag joins then plan without exchanges (expressions/base.py).
         self.single_partition = False
+        # Bumped by every register_* call: a plan bound against an earlier
+        # generation may read replaced data, so the server's plan cache
+        # keys its entries by it (server.py).
+        self.generation = 0
 
     # -- registration -----------------------------------------------------
     def register_table(
@@ -175,11 +179,13 @@ class Database:
         self.tables[name] = df
         self.primary_keys[name] = primary_key
         self.single_partition = False
+        self.generation += 1
         df.createOrReplaceTempView(name)
 
     def register_sequence_store(self, table: str, store: SequenceStore) -> None:
         self.sequence_stores[table] = store
         self.single_partition = False
+        self.generation += 1
 
     def register_lineage(
         self, column: str, closure: DataFrame,
@@ -188,6 +194,7 @@ class Database:
     ) -> None:
         self.lineage_closures[column] = closure
         self._clades.pop(column, None)
+        self.generation += 1
         if relation is not None:
             self.lineage_relations[column] = relation
         if definition_text is not None:
@@ -195,6 +202,7 @@ class Database:
 
     def register_phylo_tree(self, column: str, nodes: DataFrame) -> None:
         self.phylo_nodes[column] = nodes
+        self.generation += 1
 
     def register_model(
         self, name: str, df: DataFrame, meta: dict | None = None
@@ -205,6 +213,7 @@ class Database:
         ``load_version`` restores it with the data it was trained on."""
         self.models[name] = df
         self.model_meta[name] = dict(meta or {})
+        self.generation += 1
 
     # -- access -----------------------------------------------------------
     def table(self, name: str) -> DataFrame:

@@ -105,6 +105,9 @@ class Pipeline:
         # reference reports the root node's Arrow ordering in the
         # ``result-ordering`` response header (``query_plan.cpp:16-29``).
         self.ordering: list[dict] = ordering or []
+        # False when the plan depends on when it was bound (set by
+        # saneql.bind_query); the server never reuses such a plan
+        self.reproducible = True
 
     @classmethod
     def scan(cls, database: Database, table_name: str = "default") -> "Pipeline":

@@ -209,6 +209,9 @@ class Binder:
 
     def __init__(self, database: Database):
         self.db = database
+        # set when a handler reads the wall clock (unseeded randomize), so
+        # the same text binds to a different plan on every call
+        self.reads_clock = False
 
     # -- top level ---------------------------------------------------------
     def bind(self, node: ast.Node) -> Pipeline:
@@ -564,6 +567,7 @@ def h_randomize(binder: Binder, name: str, bound: dict[str, ast.Node]) -> Pipeli
         seed = _uint(bound["seed"], "seed")
     else:
         seed = time.time_ns() & 0xFFFFFFFF  # reference uses the wall clock too
+        binder.reads_clock = True
     return child.order_by([], randomize_seed=seed)
 
 
@@ -1280,10 +1284,15 @@ SCALAR_FUNCTIONS: dict[str, tuple[list[Param], Callable[..., Any]]] = {
 
 def bind_query(database: Database, query_text: str) -> Pipeline:
     """Parse + bind a SaneQL query against ``database``; returns the bound
-    Pipeline (lazy — nothing executed yet)."""
+    Pipeline (lazy — nothing executed yet). Its ``reproducible`` is False
+    when binding read the wall clock, so binding the same text again would
+    give a different plan."""
     from lapis_silo_spark.saneql.parser import parse
 
-    return Binder(database).bind(parse(query_text))
+    binder = Binder(database)
+    pipeline = binder.bind(parse(query_text))
+    pipeline.reproducible = not binder.reads_clock
+    return pipeline
 
 
 def execute_query(database: Database, query_text: str) -> DataFrame:

@@ -16,15 +16,22 @@ Usage::
 Serves the sf genomic dataset (driver_queries.genomic_db) on
 127.0.0.1:8399 from a daemon thread and drives it over real sockets.
 Prints one JSON line per (concurrency, query-class) plus a summary line
-per level. Next to the latencies it prints two counts that do not depend
-on timing noise: the Spark jobs each request ran (its job group,
-``http-query-<X-Request-Id>``), averaged per class, and the Janino
-compiles of each level (Spark's ``CodegenMetrics``), which fall to about
-zero once the generated-code cache holds every query's classes.
+per level. Next to the latencies it prints counts that do not depend on
+timing noise: the Spark jobs each request ran (its job group,
+``http-query-<X-Request-Id>``), averaged per class, the Janino compiles
+of each level (Spark's ``CodegenMetrics``), which fall to about zero once
+the generated-code cache holds every query's classes, and the server's
+plan-cache hits, misses and evictions of each level.
+
+The ``fresh_lookup`` class sends a text that no earlier request sent, so
+each of its requests is a plan-cache miss: its latency is the cost of a
+first visit (parse, bind, plan and execute), while the fixed texts of the
+other classes are answered from cached plans after the warm-up.
 """
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import statistics
@@ -49,6 +56,18 @@ QUERY_MIX = {
     ),
     "heavy_mutations": "default.mutations(minProportion:=0.01)",
 }
+FRESH = "fresh_lookup"
+
+
+def fresh_lookup(i: int, ref_length: int) -> str:
+    """The ``i``-th text of the fresh class: a point lookup like
+    ``point_lookup`` whose position cycles through the reference and whose
+    excluded key is new on every call, so no two texts are equal."""
+    return (
+        f"default.filter(hasMutation(position:={1 + i % ref_length}, "
+        f"sequenceName:='main') && primary_key != 'fresh-{i}')"
+        ".groupBy({count:=count()})"
+    )
 
 
 def percentile(xs: list[float], p: float) -> float:
@@ -98,7 +117,16 @@ def main() -> int:
     }))
 
     db = genomic_db(spark, sf_dir)
+    ref_length = db.sequence_store("default").ref_length("main")
+    fresh_ids = itertools.count()
     app = create_app(db, query_timeout=timeout_s) if timeout_s else create_app(db)
+    plan_cache = app.extensions.get("plan_cache")
+
+    def cache_counts() -> dict[str, int]:
+        if plan_cache is None:
+            return {}
+        stats = plan_cache.stats()
+        return {k: stats[k] for k in ("hits", "misses", "evictions")}
     threading.Thread(
         target=lambda: app.run(
             host="127.0.0.1", port=PORT, threaded=True, use_reloader=False
@@ -127,6 +155,7 @@ def main() -> int:
         try:
             for q in QUERY_MIX.values():
                 post(q)
+            post(fresh_lookup(next(fresh_ids), ref_length))
             break
         except OSError:
             time.sleep(0.5)
@@ -191,14 +220,19 @@ def main() -> int:
         }))
         return 0
 
-    names = list(QUERY_MIX)
+    names = [*QUERY_MIX, FRESH]
     for level in levels:
-        jobs = [(names[i % len(names)], QUERY_MIX[names[i % len(names)]],
-                 f"soak-{level}-{i}") for i in range(n_requests)]
+        jobs = []
+        for i in range(n_requests):
+            name = names[i % len(names)]
+            text = (fresh_lookup(next(fresh_ids), ref_length)
+                    if name == FRESH else QUERY_MIX[name])
+            jobs.append((name, text, f"soak-{level}-{i}"))
         lat: dict[str, list[float]] = {n: [] for n in names}
         spark_jobs: dict[str, list[int]] = {n: [] for n in names}
         timeouts: dict[str, int] = {n: 0 for n in names}
         compiles_before = compiles()
+        cache_before = cache_counts()
         t0 = time.monotonic()
         with ThreadPoolExecutor(max_workers=level) as pool:
             for (name, _, rid), (status, ms, body) in zip(
@@ -214,6 +248,8 @@ def main() -> int:
                 )
         wall = time.monotonic() - t0
         level_compiles = compiles() - compiles_before
+        level_cache = {k: v - cache_before[k]
+                       for k, v in cache_counts().items()}
         for name in names:
             xs = lat[name]
             out = {
@@ -236,6 +272,7 @@ def main() -> int:
             "wall_sec": round(wall, 2),
             "throughput_rps": round(n_requests / wall, 2),
             "janino_compiles": level_compiles,
+            "plan_cache": level_cache or None,
         }))
     return 0
 
