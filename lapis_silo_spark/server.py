@@ -50,16 +50,27 @@ the same data. Each app keeps a :class:`PlanCache` of
   projection, or the bound frame for Arrow) and its ``result-ordering``
   header;
 - a repeat runs that same DataFrame again. It skips the parse, the bind
-  with its bind-time jobs (such as the ``mutations`` coverage grid
-  collect), Catalyst's planning and a new AQE final plan, but still runs
-  its own Spark job over the store under its own job group, timeout and
-  cancellation: this caches plans, not results;
+  with its bind-time jobs, Catalyst's planning and code generation, but
+  still runs its own Spark job over the store under its own job group,
+  timeout and cancellation: this caches plans, not results;
+- only a plan with no Exchange, BroadcastExchange or subquery is cached.
+  A DataFrame run again reuses the RDD of its first run, so Spark skips
+  the map stages of a shuffle whose output it still holds and reuses a
+  broadcast relation or a subquery's value: such a "hit" would answer
+  from the first run's intermediate results and pin their shuffle files
+  and broadcast blocks for as long as the entry lives (on a multi-file
+  store a hit of ``aggregated`` ran 1 job where its first run took 2, and
+  ``mutations`` 1 where it took 12). On a single-split store
+  (``storage.load_version``) every light query qualifies; the
+  ``mutations`` query, with its broadcast joins, is bound every time;
 - every ``register_*`` call on the :class:`Database` bumps its
   generation, and another version has another ``data_version``, so a
-  store change makes every older entry unreachable;
+  store change makes every older entry unreachable, and the first lookup
+  after it drops them;
 - a plan is added only after its stream ran to its end; a timeout, a
-  client disconnect or an error adds nothing, and any outcome but success
-  evicts a cached plan that was run;
+  client disconnect or an error adds nothing. An error while running a
+  cached plan evicts it; a timeout or a disconnect leaves it, since the
+  plan did nothing wrong;
 - a query whose binding read the wall clock (an unseeded ``randomize()``,
   ``Pipeline.reproducible``) is never added.
 
@@ -67,8 +78,7 @@ What a repeat saves, split by layer (2,500 genomes, 4 cores, warmed, one
 client): an ``aggregated`` query bound in 19.7 ms and planned in 5.5 ms,
 then executed a fresh DataFrame in 43.0 ms against 22.0 ms for the same
 DataFrame run again; ``sequence_filter`` took 49.8 / 12.2 / 71.7 ms
-against 30.7 ms. In one ``lapis_serve`` pair at 4 cores (BENCH_NOTES),
-``op_p50_ms`` fell from 140 to 45 ms with 92% of the texts repeats.
+against 30.7 ms. BENCH_NOTES has the ``lapis_serve`` pairs.
 """
 
 from __future__ import annotations
@@ -76,6 +86,7 @@ from __future__ import annotations
 import io
 import json
 import queue as queue_mod
+import re
 import threading
 import uuid
 from collections import OrderedDict
@@ -104,6 +115,15 @@ ARROW_BATCH_ROWS = 8192
 #: sent as NDJSON. 128 entries hold that whole set, while a stream of
 #: texts that never repeat keeps no more than 128 plans alive.
 PLAN_CACHE_ENTRIES = 128
+#: Physical operators whose output a DataFrame keeps after its first run
+#: and reads again when it runs again: a shuffle's map output (an
+#: Exchange), a broadcast relation (BroadcastExchange), a subquery's
+#: value. Matched on node names of the plan's tree string, which shows
+#: the adaptive plan's query stages with their exchanges.
+_KEPT_OUTPUT = re.compile(
+    r"(?:^|[\s+:-])(?:\w*Exchange|\w*Subquery\w*)(?=[\s(\[]|$)",
+    re.MULTILINE,
+)
 
 
 class QueryTimeoutError(RuntimeError):
@@ -140,7 +160,7 @@ class _CleanupStream:
 
 
 def _stream_with_timeout(spark, chunks_fn, seconds: int, tag: str,
-                         on_end=lambda ok: None):
+                         on_end=lambda outcome: None):
     """Stream ``chunks_fn()`` (a generator of response chunks backed by
     ``toLocalIterator``) through a bounded queue with the reference's
     serving semantics (``query_plan.cpp:109-194``):
@@ -162,9 +182,10 @@ def _stream_with_timeout(spark, chunks_fn, seconds: int, tag: str,
     - closing the response (client disconnect) cancels the job group and
       unblocks the producer.
 
-    ``on_end(ok)`` runs once: ``ok`` is True only when the consumer has
-    read every chunk and the end of the stream, and False after an error,
-    a timeout or a close before the end.
+    ``on_end(outcome)`` runs once, with the first of: ``"done"`` when the
+    consumer has read every chunk and the end of the stream, ``"err"``
+    when the query failed, ``"timeout"`` when a chunk did not arrive in
+    time, ``"closed"`` when the response was closed before the end.
 
     Returns a generator yielding the chunks (possibly none).
     """
@@ -173,10 +194,10 @@ def _stream_with_timeout(spark, chunks_fn, seconds: int, tag: str,
     q: queue_mod.Queue = queue_mod.Queue(maxsize=MAX_BUFFERED_CHUNKS)
     state = {"closed": False, "ended": False}
 
-    def end(ok: bool) -> None:
+    def end(outcome: str) -> None:
         if not state["ended"]:
             state["ended"] = True
-            on_end(ok)
+            on_end(outcome)
 
     def producer():
         sc = spark.sparkContext
@@ -199,7 +220,7 @@ def _stream_with_timeout(spark, chunks_fn, seconds: int, tag: str,
         # jobs and drain the queue so a producer blocked in put() can
         # observe the closed flag and exit.
         state["closed"] = True
-        end(False)  # no-op after the end of the stream
+        end("closed")  # no-op after the end of the stream
         spark.sparkContext.cancelJobGroup(tag)
         try:
             while True:
@@ -216,15 +237,16 @@ def _stream_with_timeout(spark, chunks_fn, seconds: int, tag: str,
             # past cancelJobGroup (prefetched toLocalIterator partitions)
             # would otherwise block in q.put() forever — leaking the thread
             # and MAX_BUFFERED_CHUNKS of body per timed-out request
+            end("timeout")
             cleanup()
             raise QueryTimeoutError(
                 f"Request timed out, no batch within {seconds} seconds."
             ) from None
         if kind == "err":
-            end(False)
+            end("err")
             raise payload
         if kind == "done":
-            end(True)
+            end("done")
             return None
         return payload
 
@@ -245,20 +267,29 @@ def _stream_with_timeout(spark, chunks_fn, seconds: int, tag: str,
 class PlanCache:
     """Bounded LRU map from a query's key to its executed plan.
 
-    A value is ``(df, ordering)``: the DataFrame whose rows the response
-    streams and the ``result-ordering`` header. Running the same DataFrame
-    again reuses Spark's analysed, optimised and AQE-final physical plan;
-    each run is still its own job over the store. ``hits``, ``misses`` and
-    ``evictions`` (capacity and error evictions) count since the start."""
+    A key starts with the store state it was bound against, (database
+    generation, data version); a value is ``(df, ordering)``: the
+    DataFrame whose rows the response streams and the ``result-ordering``
+    header. Running the same DataFrame again reuses Spark's analysed,
+    optimised and physical plan; each run is still its own job over the
+    store. ``hits``, ``misses`` and ``evictions`` (capacity, error and
+    store-change evictions) count since the start."""
 
-    def __init__(self, capacity: int = PLAN_CACHE_ENTRIES):
-        self.capacity = capacity
+    def __init__(self):
         self._entries: OrderedDict = OrderedDict()
+        self._state = None  # the store state of every entry
         self._lock = threading.Lock()
         self.hits = self.misses = self.evictions = 0
 
     def get(self, key):
         with self._lock:
+            if key[0] != self._state:
+                # the store changed: no later request can reach the old
+                # entries, so free their frames now instead of waiting
+                # for LRU to push them out
+                self.evictions += len(self._entries)
+                self._entries.clear()
+                self._state = key[0]
             entry = self._entries.get(key)
             if entry is None:
                 self.misses += 1
@@ -269,9 +300,11 @@ class PlanCache:
 
     def put(self, key, entry) -> None:
         with self._lock:
+            if key[0] != self._state:
+                return  # bound against a store state that has passed
             self._entries[key] = entry
             self._entries.move_to_end(key)
-            while len(self._entries) > self.capacity:
+            while len(self._entries) > PLAN_CACHE_ENTRIES:
                 self._entries.popitem(last=False)
                 self.evictions += 1
 
@@ -287,6 +320,14 @@ class PlanCache:
             return {"hits": self.hits, "misses": self.misses,
                     "evictions": self.evictions,
                     "entries": len(self._entries)}
+
+
+def _reruns_from_store(df) -> bool:
+    """True when running ``df`` again reads every input from the store: its
+    physical plan keeps no shuffle output, broadcast or subquery value
+    (``_KEPT_OUTPUT``) that a second run would reuse."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return _KEPT_OUTPUT.search(plan) is None
 
 
 def database_info(db: Database) -> dict:
@@ -340,7 +381,7 @@ def create_app(db: Database, query_timeout: int = QUERY_TIMEOUT_SECONDS):
         # Generation and version enter the key before binding, so a plan
         # bound while a register_* call lands is stored under the old
         # generation and never found again.
-        key = (db.generation, db.data_version, text, arrow)
+        key = ((db.generation, db.data_version), text, arrow)
         try:
             plan = plans.get(key)
             hit = plan is not None
@@ -355,12 +396,13 @@ def create_app(db: Database, query_timeout: int = QUERY_TIMEOUT_SECONDS):
                 cacheable = pipeline.reproducible
             df, headers["result-ordering"] = plan
 
-            def on_end(ok: bool) -> None:
-                # Only a stream that ran to its end adds an entry, and any
-                # other outcome of a cached plan evicts it.
-                if ok and cacheable:
+            def on_end(outcome: str) -> None:
+                # Only a stream that ran to its end adds an entry, and only
+                # an error evicts one: a timeout or a disconnect says
+                # nothing about the plan.
+                if outcome == "done" and cacheable and _reruns_from_store(df):
                     plans.put(key, plan)
-                elif not ok and hit:
+                elif outcome == "err" and hit:
                     plans.evict(key, plan)
 
             chunks = _arrow_ipc_chunks if arrow else _ndjson_chunks

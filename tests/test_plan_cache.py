@@ -4,10 +4,11 @@
 keyed by the database generation, the data version, the text and the
 response format, and runs that same DataFrame again for a repeat. Every
 request still runs its own Spark job under its own job group. These tests
-pin the rules the cache keeps: a store change makes old entries
-unreachable, only a stream that ran to its end is cached, an error evicts
-a cached entry, a plan bound from the wall clock is never cached, and the
-two response formats are separate entries.
+pin the rules the cache keeps: a store change drops old entries, only a
+stream that ran to its end is cached, only an error evicts a cached entry,
+a plan bound from the wall clock or one that keeps shuffle or broadcast
+output between runs is never cached, the two response formats are
+separate entries, and the least recently used entry leaves first.
 """
 
 from __future__ import annotations
@@ -25,6 +26,7 @@ import lapis_silo_spark.saneql as saneql
 from lapis_silo_spark import server
 from lapis_silo_spark.server import ARROW_MIME, create_app
 from lapis_silo_spark.storage import load_version, save_version
+from store_layouts import multi_file_copy
 
 AGGREGATED = (
     "default.filter(country = 'Switzerland' && date >= '2021-01-15'::date)"
@@ -45,6 +47,13 @@ def root(example_db, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("plan_cache") / "store")
     save_version(example_db, root)
     return root
+
+
+@pytest.fixture(scope="module")
+def multi_root(spark, root, tmp_path_factory):
+    return multi_file_copy(
+        spark, root, str(tmp_path_factory.mktemp("plan_cache") / "multi")
+    )
 
 
 @pytest.fixture
@@ -111,6 +120,9 @@ def test_register_table_makes_next_request_rebind(db, binds):
     assert after.status_code == 200
     assert json.loads(after.get_data()) == {"count": 2}
     assert binds == [text, text]
+    # the first lookup after the change dropped the old generation's entry
+    assert _stats(app) == {"hits": 0, "misses": 2, "evictions": 1,
+                           "entries": 1}
 
 
 def test_timed_out_request_leaves_no_entry(db, binds, monkeypatch):
@@ -135,6 +147,56 @@ def test_timed_out_request_leaves_no_entry(db, binds, monkeypatch):
     assert answered.get_data() == expected.get_data()
     assert binds == [AGGREGATED] * 3
     assert _stats(app)["entries"] == 1
+
+
+def test_timeout_or_disconnect_of_cached_entry_keeps_it(db, binds,
+                                                         monkeypatch):
+    app = create_app(db)
+    client = app.test_client()
+    want = _post(client, AGGREGATED)
+    assert want.status_code == 200
+
+    stream = server._stream_with_timeout
+    timeouts = [0]
+
+    def next_times_out(spark, chunks_fn, seconds, tag, on_end):
+        seconds = timeouts.pop() if timeouts else seconds
+        return stream(spark, chunks_fn, seconds, tag, on_end)
+
+    monkeypatch.setattr(server, "_stream_with_timeout", next_times_out)
+    timed_out = _post(client, AGGREGATED)
+    assert timed_out.status_code == 500
+    assert "timed out" in timed_out.get_json()["message"]
+    # a client that closes the response before reading its end
+    client.post("/query", data=AGGREGATED, buffered=False).close()
+    answered = _post(client, AGGREGATED)
+    assert answered.status_code == 200
+    assert answered.get_data() == want.get_data()
+    assert binds == [AGGREGATED]
+    assert _stats(app) == {"hits": 3, "misses": 1, "evictions": 0,
+                           "entries": 1}
+
+
+def test_disconnect_before_the_end_leaves_no_entry(db, binds):
+    app = create_app(db)
+    client = app.test_client()
+    client.post("/query", data=AGGREGATED, buffered=False).close()
+    assert _stats(app)["entries"] == 0
+    assert _post(client, AGGREGATED).status_code == 200
+    assert binds == [AGGREGATED] * 2
+    assert _stats(app)["entries"] == 1
+
+
+def test_least_recently_used_entry_leaves_first(db, binds, monkeypatch):
+    monkeypatch.setattr(server, "PLAN_CACHE_ENTRIES", 2)
+    app = create_app(db)
+    client = app.test_client()
+    for text in (AGGREGATED, DETAILS, AGGREGATED, FLAG, AGGREGATED, DETAILS):
+        assert _post(client, text).status_code == 200
+    # FLAG pushed out DETAILS, the entry used least recently
+    assert binds == [AGGREGATED, DETAILS, FLAG, DETAILS]
+    assert _stats(app) == {"hits": 2, "misses": 4, "evictions": 2,
+                           "entries": 2}
 
 
 def test_error_while_running_cached_entry_evicts_it(db, binds, tmp_path):
@@ -201,14 +263,23 @@ def test_ndjson_and_arrow_are_separate_entries(db, binds):
                            "entries": 2}
 
 
-def test_concurrent_requests_share_one_cached_plan(spark, db):
+@pytest.mark.parametrize("layout", ["single", "multi"])
+def test_concurrent_requests_share_one_cached_plan(spark, root, multi_root,
+                                                   layout):
+    """On the single-split store the plan of ``FLAG`` has no exchange: 8
+    concurrent hits share it and each runs one job in its own group. On
+    the multi-file store it shuffles and broadcasts, and running it again
+    would skip the map stages and reuse the broadcast of the first run, so
+    it is not cached and each request runs every job of a first run."""
+    db = load_version(spark, root if layout == "single" else multi_root)
     app = create_app(db)
-    warm = _post(app.test_client(), FLAG, rid="cache-warm")
+    warm = _post(app.test_client(), FLAG, rid=f"cache-warm-{layout}")
     assert warm.status_code == 200
     bodies: dict[str, bytes] = {}
 
     def request(i: int) -> None:
-        r = _post(app.test_client(), FLAG, rid=f"cache-concurrent-{i}")
+        r = _post(app.test_client(), FLAG,
+                  rid=f"cache-concurrent-{layout}-{i}")
         assert r.status_code == 200
         bodies[r.headers["X-Request-Id"]] = r.get_data()
 
@@ -219,7 +290,18 @@ def test_concurrent_requests_share_one_cached_plan(spark, db):
         t.join()
     assert len(bodies) == 8
     assert set(bodies.values()) == {warm.get_data()}
-    assert _stats(app)["hits"] == 8
     tracker = spark.sparkContext.statusTracker()
-    for rid in bodies:
-        assert len(tracker.getJobIdsForGroup(f"http-query-{rid}")) == 1
+    warm_jobs = len(
+        tracker.getJobIdsForGroup(f"http-query-cache-warm-{layout}")
+    )
+    jobs = [len(tracker.getJobIdsForGroup(f"http-query-{rid}"))
+            for rid in bodies]
+    if layout == "single":
+        assert _stats(app) == {"hits": 8, "misses": 1, "evictions": 0,
+                               "entries": 1}
+        assert jobs == [1] * 8
+    else:
+        assert _stats(app) == {"hits": 0, "misses": 9, "evictions": 0,
+                               "entries": 0}
+        assert warm_jobs > 1
+        assert jobs == [warm_jobs] * 8

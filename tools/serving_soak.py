@@ -120,11 +120,9 @@ def main() -> int:
     ref_length = db.sequence_store("default").ref_length("main")
     fresh_ids = itertools.count()
     app = create_app(db, query_timeout=timeout_s) if timeout_s else create_app(db)
-    plan_cache = app.extensions.get("plan_cache")
+    plan_cache = app.extensions["plan_cache"]
 
     def cache_counts() -> dict[str, int]:
-        if plan_cache is None:
-            return {}
         stats = plan_cache.stats()
         return {k: stats[k] for k in ("hits", "misses", "evictions")}
     threading.Thread(
@@ -272,7 +270,7 @@ def main() -> int:
             "wall_sec": round(wall, 2),
             "throughput_rps": round(n_requests / wall, 2),
             "janino_compiles": level_compiles,
-            "plan_cache": level_cache or None,
+            "plan_cache": level_cache,
         }))
     return 0
 
