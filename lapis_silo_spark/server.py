@@ -86,7 +86,6 @@ from __future__ import annotations
 import io
 import json
 import queue as queue_mod
-import re
 import threading
 import uuid
 from collections import OrderedDict
@@ -112,18 +111,10 @@ ARROW_BATCH_ROWS = 8192
 #: Plans one server keeps (:class:`PlanCache`). A dashboard's working set
 #: is small: the query pools of silobench's ``lapis_serve`` hold 77 light
 #: texts plus 12 ``mutations`` and 8 ``export`` texts, 97 in all, each
-#: sent as NDJSON. 128 entries hold that whole set, while a stream of
-#: texts that never repeat keeps no more than 128 plans alive.
+#: sent as NDJSON (the ``mutations`` plans broadcast and are not kept).
+#: 128 entries hold that whole set, while a stream of texts that never
+#: repeat keeps no more than 128 plans alive.
 PLAN_CACHE_ENTRIES = 128
-#: Physical operators whose output a DataFrame keeps after its first run
-#: and reads again when it runs again: a shuffle's map output (an
-#: Exchange), a broadcast relation (BroadcastExchange), a subquery's
-#: value. Matched on node names of the plan's tree string, which shows
-#: the adaptive plan's query stages with their exchanges.
-_KEPT_OUTPUT = re.compile(
-    r"(?:^|[\s+:-])(?:\w*Exchange|\w*Subquery\w*)(?=[\s(\[]|$)",
-    re.MULTILINE,
-)
 
 
 class QueryTimeoutError(RuntimeError):
@@ -323,11 +314,31 @@ class PlanCache:
 
 
 def _reruns_from_store(df) -> bool:
-    """True when running ``df`` again reads every input from the store: its
-    physical plan keeps no shuffle output, broadcast or subquery value
-    (``_KEPT_OUTPUT``) that a second run would reuse."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return _KEPT_OUTPUT.search(plan) is None
+    """True when running ``df`` again reads every input from the store:
+    its executed plan has no exchange, no shuffle or broadcast query stage
+    and no subquery, whose output a second run would reuse.
+
+    Walks the final adaptive plan node by node, after the run. Its tree
+    string would say the same, but building it cost 45 ms for a point
+    lookup over a cached table (the soak's store), the walk 1-3 ms."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()  # the final plan
+    if plan.nodeName() == "ResultQueryStage":
+        plan = plan.plan()
+    if not plan.subqueriesAll().isEmpty():
+        return False
+    nodes = [plan]
+    while nodes:
+        node = nodes.pop()
+        name = node.nodeName()
+        if name.endswith("Exchange") or name in (
+            "ShuffleQueryStage", "BroadcastQueryStage"
+        ):
+            return False
+        children = node.children()
+        nodes.extend(children.apply(i) for i in range(children.size()))
+    return True
 
 
 def database_info(db: Database) -> dict:
