@@ -33,9 +33,10 @@ dataset is written through one exchange that has no fixed partition count
 — a range exchange for sorted datasets (the sequence side tables, the
 insertion trigram index and any table with ``table_sorts``), a rebalance
 for the rest — and AQE coalesces it. A rebalance runs only where it
-changes the file count: an unsorted dataset is written as it comes, and
-read back through a rebalance only when its files average below AQE's
-minimum partition size (1 MB). A dataset below about 1 MB of shuffle
+changes the file count: an unsorted dataset that the optimizer estimates
+below AQE's minimum partition size (1 MB) is rebalanced; any other is
+written as it comes, and read back through a rebalance only when its
+files average below that size. A dataset below about 1 MB of shuffle
 bytes becomes one file, so a light query on a small store scans each
 dataset in one task. A larger one gets about one file per MB up to one per
 core. The two exchanges differ above that: AQE only merges range
@@ -172,6 +173,12 @@ def save_version(
             frame = frame.repartitionByRange(*sorts).sortWithinPartitions(
                 *sorts
             )
+        elif _estimated_bytes(frame) < min_partition:
+            # The optimizer puts it below AQE's minimum partition size:
+            # rebalance it into one file now instead of writing it twice
+            # below. Should the estimate be that far too low, the cost is
+            # one shuffle.
+            frame = frame.hint("rebalance")
         else:
             # An unsorted dataset is rebalanced only where that changes its
             # file count. It is first written as it is partitioned, with no
@@ -180,11 +187,11 @@ def save_version(
             # read back and written again through one. A dataset of larger
             # files keeps them and skips the shuffle: genomic F's main
             # table (5M short reads, 4 cores) wrote 4 files either way, in
-            # 0.63-0.75 s plain and 1.48-1.61 s rebalanced. The optimizer's
-            # size estimate cannot decide this before the write: it put
-            # that table at 28.6 MB over 4 input partitions (37 MB of
-            # files) and the 2,500-genome store's main table at 45 MB over
-            # 4 (about 100 KB of files).
+            # 0.63-0.75 s plain and 1.48-1.61 s rebalanced. Above the
+            # minimum the optimizer's estimate cannot decide this before
+            # the write: it put that table at 28.6 MB over 4 input
+            # partitions (37 MB of files) and the 2,500-genome store's
+            # main table at 45 MB over 4 (about 100 KB of files).
             _save(frame, path)
             if _small_files(path, min_partition):
                 staged = path + ".small"
@@ -289,6 +296,11 @@ def read_manifest(root: str, version: str | None = None) -> dict:
     version = version or latest_version(root)
     with open(os.path.join(_version_dir(root, version), "manifest.json")) as fh:
         return json.load(fh)
+
+
+def _estimated_bytes(frame: DataFrame) -> int:
+    """The optimizer's size estimate of ``frame``."""
+    return int(frame._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
 def _small_files(path: str, min_bytes: int) -> bool:
